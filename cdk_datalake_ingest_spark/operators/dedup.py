@@ -400,10 +400,11 @@ def _minhash_banded(
         # planner substitutes the cached relation into any later query
         # whose subtree matches (cross-query contamination). Callers
         # needing deterministic release (the streaming ingest loop, the
-        # query-registry gates via _GATE_PERSISTED) pass ``persisted``,
-        # collect the appended DataFrames, and call ``df.unpersist()``
-        # when their consumers are done — the public API that drops
-        # both the blocks and the CacheManager entry.
+        # query-registry gates via their session's "gate_persisted"
+        # list) pass ``persisted``, collect the appended DataFrames,
+        # and call ``df.unpersist()`` when their consumers are done —
+        # the public API that drops both the blocks and the
+        # CacheManager entry.
         shingled = shingled.persist()
         if persisted is not None:
             persisted.append(shingled)

@@ -19,6 +19,7 @@ Scale notes (100 TB / 1000-executor target):
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -102,33 +103,66 @@ def require_non_null_ids(df, id_col: str, caller: str) -> None:
     their operator's ``check_ids=False`` when the key is already
     guaranteed."""
     if df.where(F.col(id_col).isNull()).take(1):
-        raise ValueError(
-            f"{caller}: found NULL values in id column {id_col!r} — "
-            "name-keyed reassembly/anti-joins never match NULL, so the "
-            "result would be silently wrong for those rows. Provide a "
-            "non-NULL unique key (or pass check_ids=False to skip this "
-            "probe when the key is already guaranteed)"
-        )
+        raise _null_ids_error(caller, id_col)
 
 
-#: verified-keys memo for require_unique_non_null_ids, keyed WEAKLY
-#: per SparkSession (ADVICE r13): semanticHash -> [(DataFrame,
-#: id_col), ...] of plans already probed clean in THAT session.  A
-#: stopped session's entries drop with the session object itself — no
-#: wholesale clear, and the memo never pins a dead session (or its
-#: DataFrames) alive.  Holds analyzed-plan references only (no data);
-#: bounded per session below.
-import weakref as _weakref
+def _null_ids_error(caller: str, id_col: str) -> ValueError:
+    return ValueError(
+        f"{caller}: found NULL values in id column {id_col!r} — "
+        "name-keyed reassembly/anti-joins never match NULL, so the "
+        "result would be silently wrong for those rows. Provide a "
+        "non-NULL unique key (or pass check_ids=False to skip this "
+        "probe when the key is already guaranteed)"
+    )
 
-_VERIFIED_IDS: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+
+_STATE_ATTR = "_cdk_engine_state"
 _VERIFIED_IDS_CAP = 256
 
 
-def verified_ids_cache_clear() -> None:
-    """Drop the verified-keys memo — call after mutating files UNDER a
-    previously-probed relation (same plan, different data: the memo
-    keys on plan semantics, the one thing it cannot see through)."""
-    _VERIFIED_IDS.clear()
+# The one owner of per-session engine state: a plain dict stored as
+# an attribute on the SparkSession object.  It
+# lives and dies with that object.  A ``newSession()`` child or a
+# foreachBatch session is a different object, so it starts empty; a
+# stopped session releases every entry once nothing else references
+# it.  The DataFrames held here point back at their session, a cycle
+# Python's collector frees as a unit, so the store needs no weak
+# keying and no process-wide clear.  Nothing here caches data:
+# entries are plan handles, directory paths, small trained models and
+# counts.  Entries keyed by ``sf_dir`` assume the parquet under it is
+# read-only for the session's life (the fixture dirs are); entries
+# keyed by plan semantics cannot see files mutated in place either —
+# see :func:`verified_ids_cache_clear` and ``register_tables(force=True)``.
+# The entries:
+#
+# - ``gate_persisted``: the last registry query's operator-internal
+#   persists, released before the next one plans;
+# - ``tables``: (sf_dir, name[, derivation]) -> analyzed scan
+#   (``queries._t`` / ``queries._events``);
+# - ``verified_ids``: semanticHash -> [(DataFrame, id_col)] probed clean
+#   by :func:`require_unique_non_null_ids`, at most _VERIFIED_IDS_CAP;
+# - ``views``: temp view -> the sf_dir it points at
+#   (``sql.register_tables`` / ``sql.invalidate_view``);
+# - ``staging``: (gate, sf_dir, ...) -> staged input drop directory —
+#   never a checkpoint or sink dir, since a reused availableNow
+#   checkpoint would mark every input file already processed;
+# - ``kmeans``, ``pq``, ``bpe``: trained k-means centroids, PQ
+#   codebooks and BPE merge tables (train once, reuse everywhere);
+# - ``supp_count``: sf_dir -> supplier row count (``queries._partsupp``).
+def engine_state(spark: SparkSession) -> dict:
+    """``spark``'s engine state, created on first use."""
+    return spark.__dict__.get(_STATE_ATTR) or spark.__dict__.setdefault(
+        _STATE_ATTR,
+        {"gate_persisted": [], "tables": {}, "verified_ids": {}, "views": {},
+         "staging": {}, "kmeans": {}, "pq": {}, "bpe": {}, "supp_count": {}},
+    )
+
+
+def verified_ids_cache_clear(spark: SparkSession) -> None:
+    """Drop ``spark``'s verified-keys memo — call after mutating files
+    UNDER a previously-probed relation (same plan, different data: the
+    memo keys on plan semantics, the one thing it cannot see through)."""
+    engine_state(spark)["verified_ids"].clear()
 
 
 def require_unique_non_null_ids(
@@ -164,19 +198,14 @@ def require_unique_non_null_ids(
     ``memoize=False`` when probing relations over mutable paths (or
     call :func:`verified_ids_cache_clear` after such mutations; the
     engine's own tables are immutable-snapshot ManagedTables, where
-    this cannot happen).  Entries live in a per-SparkSession weak
-    store, so stopping the session drops its verifications with it."""
+    this cannot happen).  Entries live in the session's
+    :func:`engine_state`, so a new session probes afresh."""
+    memo = engine_state(df.sparkSession)["verified_ids"]
     key = None
-    session_memo = None
     try:
         if memoize:
             key = df.semanticHash()
-            # WeakKeyDictionary keyed on the session object: "per
-            # session" is structural — a new session at the same paths
-            # starts with an empty memo, and dead sessions are never
-            # pinned by the cache (review catch + ADVICE r13).
-            session_memo = _VERIFIED_IDS.setdefault(df.sparkSession, {})
-            for cached_df, cached_col in session_memo.get(key, ()):
+            for cached_df, cached_col in memo.get(key, ()):
                 if cached_col == id_col and df.sameSemantics(cached_df):
                     return
     except Exception:  # pragma: no cover - hash unavailable: just probe
@@ -187,20 +216,14 @@ def require_unique_non_null_ids(
         .where(F.col("__id").isNull() | (F.col("__n") > 1))
         .take(1)
     )
-    if not bad and key is not None and session_memo is not None:
-        if len(session_memo) >= _VERIFIED_IDS_CAP:
-            session_memo.clear()
-        session_memo.setdefault(key, []).append((df, id_col))
+    if not bad and key is not None:
+        if len(memo) >= _VERIFIED_IDS_CAP:
+            memo.clear()
+        memo.setdefault(key, []).append((df, id_col))
     if bad:
         row = bad[0]
         if row["__id"] is None:
-            raise ValueError(
-                f"{caller}: found NULL values in id column {id_col!r} — "
-                "name-keyed reassembly/anti-joins never match NULL, so "
-                "the result would be silently wrong for those rows. "
-                "Provide a non-NULL unique key (or pass check_ids=False "
-                "to skip this probe when the key is already guaranteed)"
-            )
+            raise _null_ids_error(caller, id_col)
         raise ValueError(
             f"{caller}: id column {id_col!r} is not unique (e.g. value "
             f"{row['__id']!r} appears {row['__n']} times) — the id-keyed "
@@ -236,8 +259,8 @@ def default_driver_memory() -> str | None:
     when the formula cannot beat it — tiny boxes keep stock behavior).
     ``SPARK_GRAFT_DRIVER_MEM`` overrides outright. Cluster
     deployments are untouched: :func:`get_spark` applies this only to
-    local[*] masters — a real cluster sizes driver/executor memory in
-    spark-submit, where executors do not live in the driver."""
+    plain local masters, never over a heap the user set — a cluster
+    sizes driver/executor memory in spark-submit."""
     env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     if env:
         return env
@@ -248,6 +271,28 @@ def default_driver_memory() -> str | None:
         return None
     target_mb = min(default_parallelism() * 256, mem_mb // 4)
     return f"{target_mb}m" if target_mb > 1024 else None
+
+
+# Whether the user already chose a driver heap that a builder
+# ``spark.driver.memory`` would silently override: Spark's own
+# SPARK_DRIVER_MEMORY variable, or spark.driver.memory in the
+# spark-defaults.conf that spark-submit loads.
+def _driver_memory_preset() -> bool:
+    from pyspark.find_spark_home import _find_spark_home
+
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return True
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(
+        _find_spark_home(), "conf"
+    )
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
+            return any(
+                re.match(r"spark\.driver\.memory[\s=:]", ln.lstrip())
+                for ln in f
+            )
+    except OSError:
+        return False
 
 
 def require_non_ansi(spark: SparkSession, caller: str) -> None:
@@ -365,13 +410,16 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in ENGINE_CONF.items():
         builder = builder.config(k, v)
-    if master.startswith("local") and "spark.driver.memory" not in (
-        extra_conf or {}
+    if (
+        re.fullmatch(r"local(\[[^\]]*\])?", master)
+        and "spark.driver.memory" not in (extra_conf or {})
+        and not _driver_memory_preset()
     ):
-        # local mode: the driver JVM hosts all executor slots — size
-        # its heap to the slot count instead of Spark's 1 GiB default
-        # (see default_driver_memory; no-op if a JVM already exists,
-        # standard getOrCreate semantics)
+        # plain local mode: the driver JVM hosts all executor slots —
+        # size its heap to the slot count instead of Spark's 1 GiB
+        # default (see default_driver_memory; no-op if a JVM already
+        # exists, standard getOrCreate semantics). local-cluster[...]
+        # runs its executors in separate JVMs, so it keeps the default.
         mem = default_driver_memory()
         if mem:
             builder = builder.config("spark.driver.memory", mem)

@@ -14,32 +14,15 @@ the raw parquet zone.
 from __future__ import annotations
 
 import re
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+
+from cdk_datalake_ingest_spark.session import engine_state
 
 TABLES = (
     "region nation customer supplier part orders lineitem "
     "events documents embeddings"
 ).split()
-
-#: per-session {view name -> sf_dir the view currently points at}.
-#: Registration costs a parquet-footer read per table; at a 10-table
-#: catalog that dominated short queries (sql_interface_q13 regressed
-#: 0.79->1.53 s when every call re-registered all 10 views).  Keyed by
-#: the CURRENT sf_dir so switching fixture dirs re-registers and
-#: switching back re-registers again — correctness never depends on
-#: the cache, only cost does.  A WeakKeyDictionary on the live session
-#: object, NOT id(spark): an id can be reused after the old session is
-#: garbage-collected, and an aliased entry would make a fresh session
-#: (which has no temp views) silently skip a registration it needs.
-#: Assumes the parquet under a given sf_dir is immutable for the
-#: session (same contract as the k-means centroid cache); pass
-#: ``force=True`` after mutating fixtures.
-_REGISTERED: "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
-    weakref.WeakKeyDictionary()
-)
-
 
 def referenced_tables(query: str) -> list[str]:
     """Catalog tables mentioned (word-boundary) in the query text.
@@ -63,7 +46,13 @@ def register_tables(
     ``sf_dir``. Returns the requested names."""
     names = list(tables) if tables is not None else TABLES
     sf = str(sf_dir)
-    views = _REGISTERED.setdefault(spark, {})
+    # Registration costs a parquet-footer read per table; at a 10-table
+    # catalog that dominated short queries (sql_interface_q13 regressed
+    # 0.79->1.53 s when every call re-registered all 10 views).  The
+    # session's view map records where each view CURRENTLY points, so
+    # switching dirs and back re-registers — correctness never depends
+    # on the cache, only cost does.
+    views = engine_state(spark)["views"]
     for t in names:
         if (
             not force
@@ -91,9 +80,7 @@ def invalidate_view(spark: SparkSession, name: str) -> None:
     ``register_tables`` (today: ``ManagedTable.register``), so a view
     name colliding with a catalog table never leaves the cache
     claiming the view still points at an sf_dir it no longer does."""
-    views = _REGISTERED.get(spark)
-    if views is not None:
-        views.pop(name, None)
+    engine_state(spark)["views"].pop(name, None)
 
 
 def run_sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:

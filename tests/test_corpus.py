@@ -483,14 +483,16 @@ def test_partsupp_requires_four_suppliers(spark):
     import pytest
 
     from cdk_datalake_ingest_spark import queries as q
+    from cdk_datalake_ingest_spark.session import engine_state
 
     fake = "/nonexistent/sub4supplier"
-    q._SUPP_COUNT[fake] = 3
+    counts = engine_state(spark)["supp_count"]
+    counts[fake] = 3
     try:
         with pytest.raises(ValueError, match="needs >= 4"):
             q._partsupp(spark, fake)
     finally:
-        del q._SUPP_COUNT[fake]
+        del counts[fake]
 
 
 def test_register_tables_memoizes_per_session_and_sf_dir(spark, monkeypatch):
@@ -500,6 +502,7 @@ def test_register_tables_memoizes_per_session_and_sf_dir(spark, monkeypatch):
     again (the cache tracks where each view currently points — never
     what was once registered), and force=True busts the cache."""
     from cdk_datalake_ingest_spark import sql as sql_mod
+    from cdk_datalake_ingest_spark.session import engine_state
 
     reads = []
     real_reader = spark.read
@@ -512,7 +515,7 @@ def test_register_tables_memoizes_per_session_and_sf_dir(spark, monkeypatch):
     monkeypatch.setattr(
         type(spark), "read", property(lambda self: CountingReader())
     )
-    sql_mod._REGISTERED.pop(spark, None)
+    engine_state(spark)["views"].clear()
     a, b = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
 
     sql_mod.register_tables(spark, a, ["orders", "customer"])
@@ -525,7 +528,7 @@ def test_register_tables_memoizes_per_session_and_sf_dir(spark, monkeypatch):
     assert len(reads) == 4  # back to the old dir -> re-register again
     sql_mod.register_tables(spark, a, ["orders"], force=True)
     assert len(reads) == 5  # force busts the cache
-    sql_mod._REGISTERED.pop(spark, None)
+    engine_state(spark)["views"].clear()
 
 
 def test_referenced_tables_word_boundary():
@@ -624,12 +627,13 @@ def test_unique_id_probe_memoizes_clean_plans_per_session(spark):
     the probe."""
     from cdk_datalake_ingest_spark import session as S
 
-    S.verified_ids_cache_clear()
+    S.verified_ids_cache_clear(spark)
+    memo = S.engine_state(spark)["verified_ids"]
     clean = spark.createDataFrame(
         [(1, "a"), (2, "b")], "doc_id long, text string"
     )
     S.require_unique_non_null_ids(clean, "doc_id", "t")
-    assert len(S._VERIFIED_IDS) == 1
+    assert len(memo) == 1
     # second call must return from the memo WITHOUT running the probe:
     # poison groupBy so an actual probe would blow up
     import pytest
@@ -661,45 +665,88 @@ def test_unique_id_probe_memoizes_clean_plans_per_session(spark):
     with pytest.raises(ValueError, match="not unique"):
         S.require_unique_non_null_ids(dup, "doc_id", "t")
     # cache_clear restores the probe for the clean plan
-    S.verified_ids_cache_clear()
-    assert len(S._VERIFIED_IDS) == 0
+    S.verified_ids_cache_clear(spark)
+    assert len(memo) == 0
     S.require_unique_non_null_ids(clean, "doc_id", "t")
-    assert len(S._VERIFIED_IDS) == 1
-    S.verified_ids_cache_clear()
+    assert len(memo) == 1
+    S.verified_ids_cache_clear(spark)
 
 
-def test_unique_id_probe_memo_is_session_scoped(spark):
-    """Review catch (restructured for the r14 weak per-session store):
-    a verification must not outlive its SparkSession. The memo is now
-    a WeakKeyDictionary keyed on the session object, so the property
-    is structural — a different session has its own (initially empty)
-    namespace, and a dead session's entries drop with the object."""
-    import gc
-
+def test_unique_id_probe_memo_is_per_session(spark):
+    """A verification lives in its own session's engine state: a
+    ``newSession()`` child starts with an empty memo and probes
+    afresh, and its entries never land in the parent's memo."""
     from cdk_datalake_ingest_spark import session as S
 
-    S.verified_ids_cache_clear()
+    S.verified_ids_cache_clear(spark)
     clean = spark.createDataFrame([(1, "a")], "doc_id long, text string")
     S.require_unique_non_null_ids(clean, "doc_id", "t")
-    # the entry lives under THIS session's namespace
-    assert spark in S._VERIFIED_IDS and len(S._VERIFIED_IDS[spark]) == 1
+    assert len(S.engine_state(spark)["verified_ids"]) == 1
+    child = spark.newSession()
+    assert S.engine_state(child)["verified_ids"] == {}
+    try:
+        S.require_unique_non_null_ids(
+            child.createDataFrame([(2, "b")], "doc_id long, text string"),
+            "doc_id",
+            "t",
+        )
+        assert len(S.engine_state(child)["verified_ids"]) == 1
+        assert len(S.engine_state(spark)["verified_ids"]) == 1
+    finally:
+        S.verified_ids_cache_clear(spark)
+        _restore_active(spark)
 
-    class _ForeignSession:  # stands in for a stopped/other session
-        pass
 
-    foreign = _ForeignSession()
-    S._VERIFIED_IDS[foreign] = {123: [("frame", "doc_id")]}
-    # foreign namespaces never leak into this session's lookups
-    S.require_unique_non_null_ids(clean, "doc_id", "t")
-    assert len(S._VERIFIED_IDS[spark]) == 1
-    # and a dropped session object takes its verifications with it —
-    # no wholesale clear needed (ADVICE r13)
-    del foreign
-    gc.collect()
-    assert all(
-        not isinstance(k, _ForeignSession) for k in S._VERIFIED_IDS.keys()
+def _restore_active(spark):
+    """Make ``spark`` the active session again: createDataFrame on a
+    child session makes that child active, and later tests expect the
+    shared fixture to be."""
+    from pyspark.sql import SparkSession
+
+    SparkSession._activeSession = spark
+    SparkSession._get_j_spark_session_class(spark._jvm).setActiveSession(
+        spark._jsparkSession
     )
-    S.verified_ids_cache_clear()
+
+
+def test_dropped_sessions_release_engine_state(spark, sf_dir):
+    """A session's engine state must not outlive the session: every
+    memo (table handles, verified ids, registered views, gate persists)
+    holds DataFrames that point back at their session, so a store that
+    outlives the session object keeps it — and its plans — alive for
+    the life of the process.  Five ``newSession()`` children run
+    through the memoizing entry points and are dropped; after a
+    collection at most one may remain (pyspark keeps a reference to
+    the last session made active by createDataFrame)."""
+    import gc
+    import weakref
+
+    from cdk_datalake_ingest_spark import queries as q
+    from cdk_datalake_ingest_spark import session as S
+    from cdk_datalake_ingest_spark.sql import run_sql
+
+    sf = sf_dir
+    refs = []
+    try:
+        for _ in range(5):
+            child = spark.newSession()
+            q._t(child, sf, "orders")
+            q._events(child, sf)
+            S.require_unique_non_null_ids(
+                q._t(child, sf, "customer"), "c_custkey", "t"
+            )
+            run_sql(child, sf, "SELECT count(*) FROM region").collect()
+            # a gate that hands its persists to the registry wrapper;
+            # the next registry call on the child releases them
+            q.QUERIES["substring_dedup_docs"](child, sf).count()
+            q.QUERIES["q06_forecast_revenue"](child, sf)
+            refs.append(weakref.ref(child))
+            del child
+        gc.collect()
+        alive = sum(r() is not None for r in refs)
+        assert alive <= 1, f"{alive} of 5 dropped sessions still reachable"
+    finally:
+        _restore_active(spark)
 
 
 def test_unique_id_probe_memoize_opt_out(spark):
@@ -709,11 +756,11 @@ def test_unique_id_probe_memoize_opt_out(spark):
     change)."""
     from cdk_datalake_ingest_spark import session as S
 
-    S.verified_ids_cache_clear()
+    S.verified_ids_cache_clear(spark)
     clean = spark.createDataFrame([(1, "a")], "doc_id long, text string")
     S.require_unique_non_null_ids(clean, "doc_id", "t", memoize=False)
-    assert len(S._VERIFIED_IDS.get(spark, {})) == 0
-    S.verified_ids_cache_clear()
+    assert len(S.engine_state(spark)["verified_ids"]) == 0
+    S.verified_ids_cache_clear(spark)
 
 
 def test_token_projection_operators_track_persisted_frames(spark):

@@ -630,11 +630,12 @@ def test_text_gates_evaluate_normalize_once(spark):
 def test_registry_queries_are_cache_isolated(spark):
     """Operator-internal persists must not leak across registry
     invocations (r14): dedup_substrings persists a shared (id, tokens)
-    projection, and before the _GATE_PERSISTED drain the CacheManager
-    entry outlived the query — the planner then substituted the cached
-    relation into ANY later query whose subtree matched (observed:
-    gopher_rules served substring_dedup's tokens from cache), i.e. one
-    timed bench query silently read another's intermediate. Pin both
+    projection, and before the registry wrapper drained the session's
+    gate persists the CacheManager entry outlived the query — the
+    planner then substituted the cached relation into ANY later query
+    whose subtree matched (observed: gopher_rules served
+    substring_dedup's tokens from cache), i.e. one timed bench query
+    silently read another's intermediate. Pin both
     halves: the plan stays cache-free across a persisting predecessor,
     and the predecessor's cache entries are gone once the next registry
     entry runs."""

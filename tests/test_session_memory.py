@@ -1,6 +1,11 @@
 """default_driver_memory: the local-mode driver-heap sizing rule
 (r15 optimization — guide §5 applied to the local-mode driver that
-hosts every executor slot). Pure-function tests; no Spark session."""
+hosts every executor slot), and when get_spark applies it. No Spark
+session: get_spark's builder options are captured instead of
+launching a JVM."""
+
+import pytest
+from pyspark.sql import SparkSession
 
 import cdk_datalake_ingest_spark.session as S
 
@@ -27,3 +32,49 @@ def test_tiny_slot_count_keeps_stock_default(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
     assert S.default_driver_memory() is None
+
+
+@pytest.fixture
+def builder_options(monkeypatch, tmp_path):
+    """get_spark with getOrCreate replaced by "return the options", a
+    formula heap of 3g, and no user heap preset (an empty conf dir)."""
+    monkeypatch.setattr(
+        SparkSession.Builder, "getOrCreate", lambda self: dict(self._options)
+    )
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
+    return lambda master: S.get_spark(master=master)
+
+
+@pytest.mark.parametrize("master", ["local", "local[4]", "local[*]"])
+def test_plain_local_masters_get_the_heap(builder_options, master):
+    assert builder_options(master)["spark.driver.memory"] == "3g"
+
+
+@pytest.mark.parametrize(
+    "master", ["local-cluster[2,1,1024]", "spark://host:7077", "yarn"]
+)
+def test_other_masters_keep_spark_default(builder_options, master):
+    # local-cluster executors are separate JVMs, like a real cluster's
+    assert "spark.driver.memory" not in builder_options(master)
+
+
+def test_spark_driver_memory_env_wins(builder_options, monkeypatch):
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "2g")
+    assert "spark.driver.memory" not in builder_options("local[4]")
+
+
+@pytest.mark.parametrize(
+    "line", ["spark.driver.memory 2g", "spark.driver.memory=2g"]
+)
+def test_spark_defaults_conf_wins(builder_options, tmp_path, line):
+    (tmp_path / "spark-defaults.conf").write_text(
+        f"# user heap\nspark.executor.memory 4g\n{line}\n"
+    )
+    assert "spark.driver.memory" not in builder_options("local[4]")
+
+
+def test_commented_spark_defaults_entry_is_ignored(builder_options, tmp_path):
+    (tmp_path / "spark-defaults.conf").write_text("# spark.driver.memory 2g\n")
+    assert builder_options("local[4]")["spark.driver.memory"] == "3g"

@@ -4,8 +4,8 @@ breakdown (r9 verdict task #3).
 
 Decomposes the gate's wall time at sf0.1 into:
   A. staging     — write_jsonl of the documents fixture into 6 gzip
-                   shards (memoized across bench repeats via
-                   _memo_staging; shows up only in first_run)
+                   shards (memoized per session in the "staging"
+                   memo; shows up only in first_run)
   B. drain(2)    — the gated topology: availableNow file-stream drain,
                    maxFilesPerTrigger=2 -> 3 micro-batches, complete
                    mode, foreachBatch parquet overwrite per batch
