@@ -1,3 +1,7 @@
-from cdk_datalake_ingest_spark.functions import similarity, text
+"""Column-expression builders (``text``, ``similarity``, ``pq``, ...).
 
-__all__ = ["text", "similarity"]
+Import the submodules directly. The package imports none of them
+eagerly: ``operators.dedup`` imports ``functions.sqltext`` while
+``functions.text`` imports ``operators.dedup``, so an eager import
+here would close that cycle on a half-initialized module.
+"""

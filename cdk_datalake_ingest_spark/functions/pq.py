@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from cdk_datalake_ingest_spark.functions.similarity import _as_double
-from cdk_datalake_ingest_spark.operators.dedup import _attr_sql
+from cdk_datalake_ingest_spark.functions.sqltext import _attr_sql, _vec_sql
 from cdk_datalake_ingest_spark.operators.semantic import (
     _centroid_dim,
     _guarded_vec,
@@ -49,34 +49,17 @@ from cdk_datalake_ingest_spark.operators.semantic import (
 from cdk_datalake_ingest_spark.session import ensure_parallelism
 
 
-def _dlit(x: float) -> str:
-    """A Python float as a Spark SQL double literal: ``repr`` is the
-    shortest round-tripping decimal form, so the parsed double is
-    bit-identical to the ``F.lit(float)`` literal; the ``D`` suffix
-    pins the literal type to DOUBLE (a bare ``1.5`` parses DECIMAL)."""
-    return repr(float(x)) + "D"
-
-
 def _book_sql(book) -> str:
     """One codebook as a nested SQL array literal —
-    ``array(array(...), ...)`` of double literals, replacing the
-    ``F.lit(list-of-lists)`` construction (k x dsub py4j literal calls
-    per book; the ADC-table builder pays it m times per query plan)."""
-    return (
-        "array("
-        + ", ".join(
-            "array(" + ", ".join(_dlit(x) for x in c) + ")" for c in book
-        )
-        + ")"
-    )
+    ``array(array(...), ...)`` of double literals."""
+    return "array(" + ", ".join(_vec_sql(c) for c in book) + ")"
 
 
 def _pq_codes_sql(dists_attr: str, m: int, k: int) -> str:
     """SQL text of the per-subspace round-6 + smaller-cid tie-break
     over a PROJECTED raw-distance column (``_pq_dists_udf`` output):
-    entry j is ``array_sort`` over slice j's (dist, cid) structs, the
-    exact ``_pq_codes_col`` tree parsed in one round trip instead of
-    m transform/slice/struct Python-API chains."""
+    entry j is the cid of the first element of ``array_sort`` over
+    slice j's (dist, cid) structs."""
     parts = [
         f"(array_sort(transform(slice({dists_attr}, {j * k + 1}, {k}), "
         "(d, i) -> named_struct('dist', round(d, 6), "
@@ -121,7 +104,7 @@ def _pq_dists_udf(books_key: tuple):
     element (x-y)*(x-y) in IEEE float64 summed SEQUENTIALLY via
     cumsum — identical to the ``aggregate`` fold and the oracle's
     list_sum. The round-6 + smaller-cid comparison stays JVM-side in
-    ``_pq_codes_col``; this kernel never rounds."""
+    ``_pq_codes_over``; this kernel never rounds."""
     if books_key not in _PQ_DIST_UDFS:
         if len(_PQ_DIST_UDFS) >= _PQ_DIST_UDFS_CAP:
             _PQ_DIST_UDFS.pop(next(iter(_PQ_DIST_UDFS)))
@@ -156,39 +139,18 @@ def _books_key(codebooks) -> tuple:
     )
 
 
-def _pq_codes_col(vec: Column, codebooks) -> Column:
-    """array<int> of the m 1-based nearest-sub-centroid codes: one
-    Arrow kernel pass for all raw distances, then a per-subspace
-    round-6 + smaller-cid tie-break as a JVM expression (k-element
-    sort per subspace) — the exact lloyd_kmeans assignment contract,
-    computed for all M subspaces in one projection with no shuffle."""
-    m, k, _ = _check_codebooks(codebooks, "pq_encode")
-    dists = _pq_dists_udf(_books_key(codebooks))(vec)
-    codes = []
-    for j in range(m):
-        scored = F.transform(
-            F.slice(dists, j * k + 1, k),
-            lambda d, i: F.struct(
-                F.round(d, 6).alias("dist"),
-                (i + 1).cast("integer").alias("cid"),
-            ),
-        )
-        codes.append(F.array_sort(scored)[0]["cid"])
-    return F.array(*codes)
-
-
 def _pq_codes_over(
     df: DataFrame, vec_attr: str, codebooks
 ) -> tuple[DataFrame, Column]:
-    """Construction fast path for :func:`_pq_codes_col` (guide §4):
-    project the raw-distance kernel output as a NAMED column, then
-    build the m-subspace tie-break as one parsed SQL string
-    (``_pq_codes_sql``) over it — the Column form costs m
-    transform/slice/sort Python-API chains (~0.65 s per call at m=16)
-    where the text parses in ~2 ms.  Returns ``(projected_df, codes)``;
-    the internal ``__pqd`` column disappears in the caller's select,
-    and the projection collapse leaves the physical plan identical
-    (one ArrowEvalPython, same tie-break tree)."""
+    """array<int> of the m 1-based nearest-sub-centroid codes of
+    ``df[vec_attr]``: one Arrow kernel pass for all raw distances,
+    projected as the NAMED column ``__pqd`` so the per-subspace
+    round-6 + smaller-cid tie-break (k-element sort per subspace) can
+    be rendered as SQL text over it (``_pq_codes_sql``) — the exact
+    lloyd_kmeans assignment contract, computed for all M subspaces in
+    one projection with no shuffle. Returns ``(projected_df, codes)``;
+    ``__pqd`` disappears in the caller's select, and the projection
+    collapse leaves one ArrowEvalPython under the tie-break tree."""
     m, k, _ = _check_codebooks(codebooks, "pq_encode")
     dists = _pq_dists_udf(_books_key(codebooks))(F.col(vec_attr))
     return df.withColumn("__pqd", dists), F.expr(
@@ -308,36 +270,14 @@ def _adc_tables(vec: Column, codebooks) -> Column:
     per QUERY row (queries are the broadcast-small side), then every
     candidate costs M lookups."""
     dsub = len(codebooks[0][0])
-    attr = _attr_sql(vec)
-    if attr is not None:
-        # construction fast path (guide §4, the dedup._attr_sql
-        # pattern): the Column form below builds m x (nested-literal +
-        # 3 lambdas) through py4j — measured ~1.7 s of pure driver
-        # time per call at m=16, k=16.  The identical tree as ONE
-        # parsed SQL string costs ~2 ms; double literals round-trip
-        # bit-exactly via repr (_dlit).
-        tabs_sql = [
-            f"transform({_book_sql(book)}, cv -> round("
-            + _sq_dist_sql(f"slice({attr}, {j * dsub + 1}, {dsub})", "cv")
-            + ", 6))"
-            for j, book in enumerate(codebooks)
-        ]
-        return F.expr("array(" + ", ".join(tabs_sql) + ")")
-    tabs = []
-    for j, book in enumerate(codebooks):
-        sub = F.slice(vec, j * dsub + 1, dsub)
-        # one-parameter closure, NOT `lambda cv, _s=sub:` — pyspark
-        # counts parameters to pick the unary vs (element, index) HOF
-        # form, and a defaulted second arg binds the captured
-        # expression to the element INDEX. F.transform invokes the
-        # lambda eagerly, so closing over the loop variable is safe.
-        tabs.append(
-            F.transform(
-                F.lit([list(c) for c in book]),
-                lambda cv: F.round(_sq_dist(sub, cv), 6),  # noqa: B023
-            )
-        )
-    return F.array(*tabs)
+    attr = _attr_sql(vec, "_adc_tables")
+    tabs_sql = [
+        f"transform({_book_sql(book)}, cv -> round("
+        + _sq_dist_sql(f"slice({attr}, {j * dsub + 1}, {dsub})", "cv")
+        + ", 6))"
+        for j, book in enumerate(codebooks)
+    ]
+    return F.expr("array(" + ", ".join(tabs_sql) + ")")
 
 
 def _coarse_probe_structs(vec: Column, centroids) -> Column:

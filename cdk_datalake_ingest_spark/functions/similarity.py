@@ -36,17 +36,25 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from cdk_datalake_ingest_spark.functions.sqltext import _attr_sql, _vec_sql
 from cdk_datalake_ingest_spark.session import ensure_parallelism
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Sequential left-to-right fold — deterministic, and reproducible
-    in DuckDB (list_sum over list_transform) for oracle parity."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _dot_sql(a: str, b: str) -> str:
+    """SQL text of the dot-product fold over rendered operands (column
+    references or array literals): a sequential left-to-right
+    zip_with/aggregate fold — deterministic, and reproducible in
+    DuckDB (list_sum over list_transform) for oracle parity."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
+        "0.0D, (acc, x) -> acc + x)"
     )
+
+
+def dot(a: Column | str, b: Column | str) -> Column:
+    """Dot product of two array columns (column names or plain column
+    references — see ``functions.sqltext._attr_sql``)."""
+    return F.expr(_dot_sql(_attr_sql(a, "dot"), _attr_sql(b, "dot")))
 
 
 _DOT_ARROW: list = []
@@ -127,37 +135,9 @@ def dot_arrow(a: Column, b: Column) -> Column:
     return _DOT_ARROW[0](a, b)
 
 
-def _dlit(x: float) -> str:
-    """A Python float as a Spark SQL double literal (repr round-trips
-    bit-exactly; the D suffix pins DOUBLE — a bare 1.5 parses
-    DECIMAL)."""
-    return repr(float(x)) + "D"
-
-
-def _vec_sql(values) -> str:
-    """A flat float vector as a SQL array literal of double literals."""
-    return "array(" + ", ".join(_dlit(x) for x in values) + ")"
-
-
-def _dot_sql(a: str, b: str) -> str:
-    """SQL text of :func:`dot` over rendered operands — the identical
-    zip_with/aggregate fold parsed JVM-side in one round trip (the
-    dedup._attr_sql construction fast path, guide §4: each Python-API
-    lambda costs ~10-40 py4j round trips; the LSH bucket builder
-    constructs n_planes of these per call)."""
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-        "0.0D, (acc, x) -> acc + x)"
-    )
-
-
-def norm(a: Column) -> Column:
-    from cdk_datalake_ingest_spark.operators.dedup import _attr_sql
-
-    attr = _attr_sql(a)
-    if attr is not None:
-        return F.expr(f"sqrt({_dot_sql(attr, attr)})")
-    return F.sqrt(dot(a, a))
+def norm(a: Column | str) -> Column:
+    attr = _attr_sql(a, "norm")
+    return F.expr(f"sqrt({_dot_sql(attr, attr)})")
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -173,13 +153,8 @@ def scored_cosine(qv: Column, cv: Column, qn: Column, cn: Column) -> Column:
     thresholds and ranked last, but still emitted as a candidate row
     with a NULL score that can occupy top-k slots. The upstream
     exclusion keeps every emitted cosine well-defined."""
-    from cdk_datalake_ingest_spark.operators.dedup import _attr_sql
-
-    parts = [_attr_sql(c) for c in (qv, cv, qn, cn)]
-    if all(p is not None for p in parts):
-        aq, ac, nq, nc = parts
-        return F.expr(f"{_dot_sql(aq, ac)} / ({nq} * {nc})")
-    return dot(qv, cv) / (qn * cn)
+    aq, ac, nq, nc = (_attr_sql(c, "scored_cosine") for c in (qv, cv, qn, cn))
+    return F.expr(f"{_dot_sql(aq, ac)} / ({nq} * {nc})")
 
 
 def _nonzero(df: DataFrame, norm_col: str) -> DataFrame:
@@ -211,36 +186,21 @@ def _as_double(col: Column) -> Column:
     return col.cast("array<double>")
 
 
-def _dim_checked(vec: Column, dim: int, fn_name: str) -> Column:
-    """``vec`` with an action-time width guard (the semantic.py
-    _guarded_vec pattern): a vector whose length disagrees with the
-    hyperplane/centroid width would zip_with-pad to NULL, giving every
-    row a NULL bucket/list — an equi-join that matches nothing and a
-    silently EMPTY result instead of an error.
+def _dim_checked_sql(v: str, dim: int, fn_name: str) -> str:
+    """SQL text of the rendered vector operand ``v`` with an
+    action-time width guard (the semantic.py _guarded_vec pattern): a
+    vector whose length disagrees with the hyperplane/centroid width
+    would zip_with-pad to NULL, giving every row a NULL bucket/list —
+    an equi-join that matches nothing and a silently EMPTY result
+    instead of an error.
 
-    NULL vectors pass THROUGH (first when-branch): every search path
+    NULL vectors pass THROUGH (first CASE branch): every search path
     silently drops them downstream — the norm filter/_nonzero excludes
     them, and a NULL bucket/list never equi-joins — and the guard must
     not turn that shared drop contract into a hard failure (size(NULL)
     is -1 under the non-ANSI session and would hit raise_error with a
     misleading 'length -1' message). The raise stays reserved for
     genuine width mismatches."""
-    return F.when(vec.isNull(), vec).when(F.size(vec) == dim, vec).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    f"{fn_name}: embedding length "
-                ),
-                F.size(vec).cast("string"),
-                F.lit(f" != expected dim {dim}"),
-            )
-        )
-    )
-
-
-def _dim_checked_sql(v: str, dim: int, fn_name: str) -> str:
-    """SQL text of :func:`_dim_checked` over a rendered vector operand
-    — identical CASE/raise_error tree, parsed JVM-side."""
     return (
         f"CASE WHEN ({v}) IS NULL THEN {v} "
         f"WHEN size({v}) = {dim} THEN {v} "
@@ -296,10 +256,11 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
 
 
 def rp_lsh_bucket(
-    vec: Column, planes: list[list[float]]
+    vec: Column | str, planes: list[list[float]]
 ) -> Column:
     """Random-projection LSH bucket id: sign-bit signature of the
-    vector against each hyperplane, packed into a long."""
+    vector (a column name or plain column reference, cast to
+    array<double>) against each hyperplane, packed into a long."""
     # 62 sign bits is the packing capacity of a signed long (bit 63 is
     # the sign; 1 << 62 is the last positive power). More planes would
     # silently wrap the bucket id and alias unrelated buckets.
@@ -308,34 +269,17 @@ def rp_lsh_bucket(
             f"rp_lsh_bucket packs one sign bit per plane into a long: "
             f"max 62 planes, got {len(planes)}"
         )
-    from cdk_datalake_ingest_spark.operators.dedup import _attr_sql
-
-    attr = _attr_sql(vec)
-    if attr is not None:
-        # construction fast path (guide §4, the dedup._attr_sql
-        # pattern): the Column form below costs n_planes x (dim
-        # literal calls + 2 lambdas) through py4j per call — the
-        # ann_lsh_suite gate constructs FOUR of these.  The identical
-        # tree as one parsed SQL string costs ~2 ms; double literals
-        # round-trip via repr (_dlit).
-        v = _dim_checked_sql(
-            f"CAST({attr} AS ARRAY<DOUBLE>)",
-            len(planes[0]),
-            "rp_lsh_bucket",
-        )
-        terms = "".join(
-            f" + (CAST(({_dot_sql(v, _vec_sql(p))}) > 0 AS BIGINT)"
-            f" * {1 << i})"
-            for i, p in enumerate(planes)
-        )
-        return F.expr(f"CAST(0 AS BIGINT){terms}")
-    v = _dim_checked(_as_double(vec), len(planes[0]), "rp_lsh_bucket")
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        bit = (dot(v, plane) > 0).cast("long")
-        bucket = bucket + bit * F.lit(1 << i)
-    return bucket
+    v = _dim_checked_sql(
+        f"CAST({_attr_sql(vec, 'rp_lsh_bucket')} AS ARRAY<DOUBLE>)",
+        len(planes[0]),
+        "rp_lsh_bucket",
+    )
+    terms = "".join(
+        f" + (CAST(({_dot_sql(v, _vec_sql(p))}) > 0 AS BIGINT)"
+        f" * {1 << i})"
+        for i, p in enumerate(planes)
+    )
+    return F.expr(f"CAST(0 AS BIGINT){terms}")
 
 
 def embedding_near_dup_pairs(
@@ -452,8 +396,12 @@ def _lsh_topk_impl(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         _as_double(F.col(vec_col)).alias("__qv"),
-        rp_lsh_bucket(F.col(vec_col), planes).alias("__bucket"),
-    ).withColumn("__qn", norm(F.col("__qv")))
+    ).withColumns(
+        {
+            "__bucket": rp_lsh_bucket(F.col("__qv"), planes),
+            "__qn": norm(F.col("__qv")),
+        }
+    )
     q = _nonzero(q, "__qn")
     if probe_hamming >= 1:
         probe_set = F.array(
@@ -471,8 +419,12 @@ def _lsh_topk_impl(
     c = ensure_parallelism(corpus).select(
         F.col(id_col).alias("neighbor_id"),
         _as_double(F.col(vec_col)).alias("__cv"),
-        rp_lsh_bucket(F.col(vec_col), planes).alias("__bucket"),
-    ).withColumn("__cn", norm(F.col("__cv")))
+    ).withColumns(
+        {
+            "__bucket": rp_lsh_bucket(F.col("__cv"), planes),
+            "__cn": norm(F.col("__cv")),
+        }
+    )
     c = _nonzero(c, "__cn")
     pairs = c.join(F.broadcast(q), on="__bucket")
     if exclude_self:
@@ -550,8 +502,7 @@ def ivf_topk(
     # ONE nested-array literal — compact codegen; the per-row centroid
     # ranking is a narrow expression, so corpus→list assignment needs
     # no shuffle (the property that matters at 100 TB).
-    cents = None  # built lazily by the Column fallback below
-
+    cents_sql = "array(" + ", ".join(_vec_sql(c) for c in centroids) + ")"
     dim = len(centroids[0])
 
     def _nearest_lists(vec: Column, n: int) -> Column:
@@ -563,43 +514,16 @@ def ivf_topk(
         re-run an O(dim) interpreted fold PER CENTROID per row — the
         repo's documented HOF-capture pitfall. The oracle (_IVF_COS /
         _IVF_KM_COS) drops the same factor."""
-        from cdk_datalake_ingest_spark.operators.dedup import _attr_sql
-
-        attr = _attr_sql(vec)
-        if attr is not None:
-            # construction fast path (guide §4): the Column form costs
-            # a nested n_centroids x dim literal (one py4j call per
-            # component) plus 4 lambdas per call, and ivf_topk builds
-            # it for both sides — render the identical tree as one
-            # parsed SQL string instead.
-            v = _dim_checked_sql(attr, dim, "ivf_topk")
-            cents_sql = (
-                "array("
-                + ", ".join(_vec_sql(c) for c in centroids)
-                + ")"
-            )
-            scored_sql = (
-                f"transform({cents_sql}, (cv, i) -> named_struct("
-                f"'cos', {_dot_sql(v, 'cv')} / sqrt({_dot_sql('cv', 'cv')}), "
-                "'list_id', CAST(i + 1 AS INT)))"
-            )
-            return F.expr(
-                f"transform(slice(reverse(array_sort({scored_sql})), "
-                f"1, {n}), s -> s.list_id)"
-            )
-        nonlocal cents
-        if cents is None:
-            cents = F.lit([list(c) for c in centroids])
-        v = _dim_checked(vec, dim, "ivf_topk")
-        scored = F.transform(
-            cents,
-            lambda cv, i: F.struct(
-                (dot(v, cv) / F.sqrt(dot(cv, cv))).alias("cos"),
-                (i + 1).cast("integer").alias("list_id"),
-            ),
+        v = _dim_checked_sql(_attr_sql(vec, "ivf_topk"), dim, "ivf_topk")
+        scored_sql = (
+            f"transform({cents_sql}, (cv, i) -> named_struct("
+            f"'cos', {_dot_sql(v, 'cv')} / sqrt({_dot_sql('cv', 'cv')}), "
+            "'list_id', CAST(i + 1 AS INT)))"
         )
-        ordered = F.reverse(F.array_sort(scored))
-        return F.transform(F.slice(ordered, 1, n), lambda s: s["list_id"])
+        return F.expr(
+            f"transform(slice(reverse(array_sort({scored_sql})), "
+            f"1, {n}), s -> s.list_id)"
+        )
 
     # zero-norm/NULL vectors excluded BEFORE list assignment (the
     # module's shared input contract — brute/lsh do the same): a

@@ -396,9 +396,8 @@ def boilerplate_ngrams(
 
     docs = ensure_parallelism(docs)
     sh = docs.select(
-        F.col(id_col).alias("_id"),
-        F.explode(word_shingles(F.col(text_col), n)).alias("ngram"),
-    )
+        F.col(id_col).alias("_id"), F.col(text_col).alias("__t")
+    ).select("_id", F.explode(word_shingles("__t", n)).alias("ngram"))
     return (
         sh.groupBy("ngram")
         .agg(

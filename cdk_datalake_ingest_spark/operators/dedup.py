@@ -16,12 +16,11 @@ pandas_udf is SimHash's 64-bit popcount math (Arrow-vectorized).
 
 from __future__ import annotations
 
-import re as _re
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cdk_datalake_ingest_spark.functions.sqltext import _attr_sql
 from cdk_datalake_ingest_spark.session import ensure_parallelism
 from pyspark.sql.functions import pandas_udf
 
@@ -129,49 +128,15 @@ def exact_dedup(
 #: ASCII_WS re-spelled for embedding in a SQL string literal: every
 #: backslash doubled, so after the SQL parser's one unescaping pass
 #: (``\\`` -> ``\``) the pattern string the regex engine receives is
-#: BYTE-IDENTICAL to what the Column-API path passes directly.  Do NOT
+#: BYTE-IDENTICAL to the one normalize_text passes directly.  Do NOT
 #: embed ASCII_WS raw in SQL: the SQL layer unescapes ``\t``/``\n``
 #: itself but has no ``\f``/``\x`` escapes -- those silently drop the
 #: backslash, turning the class into one that strips literal 'f'/'x'
-#: characters from documents (caught by the fast-vs-fallback
-#: equivalence test).  Assumes spark.sql.parser.escapedStringLiterals
-#: stays at its default (false), which session.py never touches.
+#: characters from documents (pinned by
+#: tests/test_dedup.py::test_sql_builders_pin_whitespace_and_reject_computed_columns).
+#: Assumes spark.sql.parser.escapedStringLiterals stays at its default
+#: (false), which session.py never touches.
 _SQL_WS = ASCII_WS.replace("\\", "\\\\")
-
-
-_IDENT_RE = _re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
-
-
-def _attr_sql(col: Column | str) -> str | None:
-    """Backtick-quoted SQL for a plain attribute reference — None when
-    the column is a computed expression (those keep the Column-API
-    construction path).
-
-    The expr-assembled builders below exist because constructing a
-    higher-order-function expression through the Python API costs
-    ~10-40 py4j round trips PER LAMBDA (`_create_lambda` + per-arg
-    `lit`/`getattr` chatter): the 32-permutation MinHash signature
-    alone measured ~0.5 s of pure driver time per construction, paid
-    per query (and per micro-batch in the streaming ingest loop).
-    Rendering the same tree as ONE SQL string parsed JVM-side costs
-    ~2 ms and yields an equivalent expression (guide §4: shrink the
-    Python boundary — here the boundary is the driver's expression
-    construction, not row data). Every hot call site passes a plain
-    column reference, so the fast path covers them; arbitrary Column
-    inputs still work through the original construction.
-
-    Only bare unqualified identifiers qualify (no dots: ``a.b`` means
-    field/alias access in the Column API but would be quoted here as
-    one literal name — those fall back rather than change meaning)."""
-    if isinstance(col, str):
-        name = col
-        if "`" in name or not _IDENT_RE.fullmatch(name):
-            return None
-    else:
-        name = col._jc.toString()
-        if "`" in name or not _IDENT_RE.fullmatch(name):
-            return None
-    return "`" + name + "`"
 
 
 def _normalize_sql(x: str) -> str:
@@ -191,8 +156,7 @@ def _tokens_sql(x: str) -> str:
 
 def _shingles_sql(t: str, n: int) -> str:
     """SQL text of :func:`word_shingles_of_tokens` over token SQL
-    ``t`` — the zip_with chain plus the branch-free empty guard,
-    exactly the Column-API tree."""
+    ``t`` — the zip_with chain plus the branch-free empty guard."""
     c = f"greatest((size({t}) - {n - 1}), 0)"
     shingle = f"slice({t}, {n}, {c})"
     for k in reversed(range(n - 1)):
@@ -206,7 +170,7 @@ def _shingles_sql(t: str, n: int) -> str:
     )
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
+def word_shingles(col: Column | str, n: int = 3) -> Column:
     """Word n-gram shingles as an array<string> (empty array if the
     document has fewer than n tokens — including the n=1 edge on an
     empty/NULL document, where split('') would otherwise yield ['']
@@ -232,16 +196,15 @@ def word_shingles(col: Column, n: int = 3) -> Column:
       (tools/fingerprint_probe.py, fingerprint_docs gate, median of
       5): CaseWhen guard 2.37-2.39 s vs 1.79-2.09 s unguarded vs
       2.04 s this form — the r10 1.29x driver regression, recovered
-      with the guard semantics kept."""
-    attr = _attr_sql(col)
-    if attr is not None:
-        return F.expr(_shingles_sql(_tokens_sql(attr), n))
-    norm = normalize_text(col)
-    tokens = F.array_remove(F.split(norm, " "), "")
-    return word_shingles_of_tokens(tokens, n)
+      with the guard semantics kept.
+
+    ``col`` is a column name or plain column reference (see
+    ``functions.sqltext._attr_sql``)."""
+    attr = _attr_sql(col, "word_shingles")
+    return F.expr(_shingles_sql(_tokens_sql(attr), n))
 
 
-def word_shingles_of_tokens(tokens: Column, n: int = 3) -> Column:
+def word_shingles_of_tokens(tokens: Column | str, n: int = 3) -> Column:
     """The shingling tail of :func:`word_shingles` over an ALREADY
     tokenized array (r13): an operator that needs tokens in several
     expression positions — scrub_boilerplate derives its census, its
@@ -252,15 +215,8 @@ def word_shingles_of_tokens(tokens: Column, n: int = 3) -> Column:
     to shingles). Semantics are exactly word_shingles' given
     ``tokens(text)`` / ``array_remove(split(normalize_text(text)))``
     input: empty array below n tokens and for empty/NULL documents."""
-    attr = _attr_sql(tokens)
-    if attr is not None:
-        return F.expr(_shingles_sql(attr, n))
-    count = F.greatest(F.size(tokens) - F.lit(n - 1), F.lit(0))
-    shingle = F.slice(tokens, n, count)
-    for k in reversed(range(n - 1)):
-        shifted = F.slice(tokens, k + 1, count)
-        shingle = F.zip_with(shifted, shingle, lambda x, y: F.concat_ws(" ", x, y))
-    return F.when(count > 0, shingle).otherwise(F.array().cast("array<string>"))
+    attr = _attr_sql(tokens, "word_shingles_of_tokens")
+    return F.expr(_shingles_sql(attr, n))
 
 
 def exact_jaccard(set_a: Column, set_b: Column) -> Column:
@@ -275,14 +231,12 @@ def exact_jaccard(set_a: Column, set_b: Column) -> Column:
     ) / F.size(F.array_union(set_a, set_b))
 
 
-def shingle_hashes(shingles: Column, seed: int) -> Column:
+def shingle_hashes(shingles: Column | str, seed: int) -> Column:
     """64-bit hash per shingle (xxhash64). Materialize this ONCE before
     building the signature: hashing the strings is the expensive part,
     the per-permutation work is then pure integer arithmetic."""
-    attr = _attr_sql(shingles)
-    if attr is not None:
-        return F.expr(f"transform({attr}, s -> xxhash64(s, {int(seed)}))")
-    return F.transform(shingles, lambda s: F.xxhash64(s, F.lit(seed)))
+    attr = _attr_sql(shingles, "shingle_hashes")
+    return F.expr(f"transform({attr}, s -> xxhash64(s, {int(seed)}))")
 
 
 #: Largest modulus whose affine step stays inside int64:
@@ -299,7 +253,9 @@ MINHASH_MAX_PRIME = 3_037_000_499
 MINHASH_PRIME = (1 << 31) - 1
 
 
-def _minhash_signature(hashes: Column, num_hashes: int, prime: int, seed: int) -> Column:
+def _minhash_signature(
+    hashes: Column | str, num_hashes: int, prime: int, seed: int
+) -> Column:
     """MinHash signature as array<bigint>: for each of ``num_hashes``
     affine permutations h_i(x) = (a_i * x + b_i) mod p over the 64-bit
     shingle hash, take the min across the document's shingles.
@@ -319,7 +275,6 @@ def _minhash_signature(hashes: Column, num_hashes: int, prime: int, seed: int) -
             "overflow — wrapping silently with ANSI off, raising "
             "ArithmeticException with ANSI on"
         )
-    sig = []
     # Deterministic (a_i, b_i) derived from a splitmix-style recurrence;
     # no RNG state so the plan is reproducible.
     a_seed, b_seed = seed * 2654435761 + 1, seed * 40503 + 7
@@ -330,22 +285,13 @@ def _minhash_signature(hashes: Column, num_hashes: int, prime: int, seed: int) -
         )
         for i in range(num_hashes)
     ]
-    h = _attr_sql(hashes)
-    if h is not None:
-        sig = [
-            f"array_min(transform({h}, "
-            f"h -> ((pmod(h, {prime}) * {a}) + {b}) % {prime}))"
-            for a, b in ab
-        ]
-        return F.expr("array(" + ", ".join(sig) + ")")
-    def _perm(a: int, b: int):
-        return lambda hh: (
-            (F.pmod(hh, F.lit(prime)) * F.lit(a) + F.lit(b)) % F.lit(prime)
-        )
-
-    for a, b in ab:
-        sig.append(F.array_min(F.transform(hashes, _perm(a, b))))
-    return F.array(*sig)
+    h = _attr_sql(hashes, "_minhash_signature")
+    sig = [
+        f"array_min(transform({h}, "
+        f"h -> ((pmod(h, {prime}) * {a}) + {b}) % {prime}))"
+        for a, b in ab
+    ]
+    return F.expr("array(" + ", ".join(sig) + ")")
 
 
 def _minhash_banded(
@@ -381,8 +327,10 @@ def _minhash_banded(
         )
     rows_per_band = num_hashes // bands
     df = ensure_parallelism(df)
-    shingled = df.select(
-        F.col(id_col), word_shingles(F.col(text_col), shingle_size).alias("__sh")
+    # the user's text column reaches the builder under an internal
+    # alias, so any column name works (builders take plain names only)
+    shingled = df.select(F.col(id_col), F.col(text_col).alias("__t")).select(
+        F.col(id_col), word_shingles("__t", shingle_size).alias("__sh")
     )
     # Pre-hash every shingle once inside the cached projection: the
     # signature's 32 permutations then cost integer arithmetic only.
@@ -846,8 +794,10 @@ def ngram_jaccard_pairs(
                 f"pass max_rows=None to override."
             )
     sets = ensure_parallelism(df).select(
+        F.col(id_col), F.col(text_col).alias("__t")
+    ).select(
         F.col(id_col),
-        F.array_distinct(word_shingles(F.col(text_col), n)).alias("__set"),
+        F.array_distinct(word_shingles("__t", n)).alias("__set"),
     ).filter(F.size("__set") > 0)
     sizes = sets.select(F.col(id_col), F.size("__set").alias("__n"))
     exploded = sets.select(F.col(id_col), F.explode("__set").alias("sh"))

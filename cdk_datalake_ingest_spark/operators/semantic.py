@@ -38,36 +38,29 @@ from pyspark.sql.functions import pandas_udf
 
 from cdk_datalake_ingest_spark.functions.similarity import (
     _as_double,
-    cosine,
     dot,
     dot_arrow,
 )
+from cdk_datalake_ingest_spark.functions.sqltext import _attr_sql
 from cdk_datalake_ingest_spark.session import ensure_parallelism
 
 
-def _sq_dist(a: Column, b: Column) -> Column:
-    """Squared euclidean distance as a sequential left-to-right fold
-    (same fold shape as similarity.dot, reproducible in DuckDB)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _sq_dist_sql(a: str, b: str) -> str:
-    """SQL text of :func:`_sq_dist` over rendered operands — the same
-    zip_with/aggregate tree, parsed JVM-side in one round trip.  The
-    dedup._attr_sql construction fast path (guide §4 applied to plan
-    construction): each lambda built through the Python API costs
-    ~10-40 py4j round trips, and the PQ ADC-table builder constructs
-    m x 3 of them per call — rendering the identical expression as
-    text is ~300x cheaper with a bit-identical result (``0.0D`` is the
-    double literal ``F.lit(0.0)`` builds)."""
+    """SQL text of the squared euclidean distance over rendered
+    operands (column references, slices or array literals): a
+    sequential left-to-right zip_with/aggregate fold (same fold shape
+    as similarity.dot, reproducible in DuckDB)."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
         "0.0D, (acc, x) -> acc + x)"
     )
+
+
+def _sq_dist(a: Column | str, b: Column | str) -> Column:
+    """Squared euclidean distance of two array columns (column names or
+    plain column references — see ``functions.sqltext._attr_sql``)."""
+    a, b = _attr_sql(a, "_sq_dist"), _attr_sql(b, "_sq_dist")
+    return F.expr(_sq_dist_sql(a, b))
 
 
 def _guarded_vec(

@@ -7291,7 +7291,7 @@ WHERE r_name = 'AMERICA'
 # reassembly guard routed into bpe_tokenize/dedup_substrings/
 # scrub_boilerplate/semantic_dedup (the r10 verdict's "What's wrong
 # #2"), the similarity sweep (ivf_topk now applies the shared
-# _nonzero exclusion; _dim_checked passes NULL vectors through to
+# _nonzero exclusion; _dim_checked_sql passes NULL vectors through to
 # the silent-drop contract — both ADVICE fixes, latent on the clean
 # fixtures but plan-touching), and the five remaining gates over the
 # word_shingles branch-free-guard rewrite (the fingerprint_docs

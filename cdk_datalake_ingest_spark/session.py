@@ -56,7 +56,7 @@ ENGINE_CONF: dict[str, str] = {
     # Spark-vs-oracle divergence (token_count(NULL text) read -1 while
     # TEXT_METRICS_SQL read NULL — the r11 NULL-text parity sweep).
     # The two operators that tolerate EITHER semantics (word_shingles'
-    # greatest clamp, _dim_checked's NULL passthrough) document both.
+    # greatest clamp, _dim_checked_sql's NULL passthrough) document both.
     "spark.sql.legacy.sizeOfNull": "false",
     # Driver fixtures carry TIMESTAMP(NANOS) parquet columns which Spark
     # otherwise refuses to read; they surface as bigint nanoseconds.

@@ -266,9 +266,12 @@ def test_minhash_permutation_stays_in_int64(spark):
         [(1, "the quick brown fox jumps over the lazy dog")],
         "doc_id long, text string",
     )
-    sig = df.select(
+    hashes = df.select(word_shingles(F.col("text"), 3).alias("sh")).select(
+        shingle_hashes(F.col("sh"), 42).alias("h")
+    )
+    sig = hashes.select(
         _minhash_signature(
-            shingle_hashes(word_shingles(F.col("text"), 3), 42),
+            F.col("h"),
             num_hashes=32,
             prime=MINHASH_PRIME,
             seed=42,
@@ -278,9 +281,9 @@ def test_minhash_permutation_stays_in_int64(spark):
     assert all(0 <= v < MINHASH_PRIME for v in sig), sig
 
     with pytest.raises(ValueError, match="int64"):
-        df.select(
+        hashes.select(
             _minhash_signature(
-                shingle_hashes(word_shingles(F.col("text"), 3), 42),
+                F.col("h"),
                 num_hashes=2,
                 prime=(1 << 61) - 1,
                 seed=42,
@@ -352,22 +355,24 @@ def test_dedup_parameter_guards(spark):
         )
 
 
-def test_sql_fast_path_matches_column_api_fallback(spark):
-    """The SQL-assembled fast path (attribute-reference inputs) and the
-    Column-API fallback (computed inputs) must be result-identical —
-    including on form-feed/vertical-tab whitespace: Spark's SQL string
-    parser has no \\f or \\x escapes, so an un-doubled backslash in the
-    embedded char class silently strips literal 'f'/'x' characters
-    (the bug this test was written against).  The fallback is forced
-    with a semantically-identity computed expression."""
+def test_sql_builders_pin_whitespace_and_reject_computed_columns(spark):
+    """The shingle and MinHash builders are SQL text parsed JVM-side,
+    with the whitespace class embedded in a SQL string literal.  Spark's
+    SQL string parser has no \\f or \\x escapes, so an un-doubled
+    backslash in that class silently strips literal 'f'/'x' characters
+    from documents (the bug this test was first written against).  Every
+    row's shingles are pinned: rows 2 and 7 show that tab, vertical tab,
+    form feed and CRLF collapse while every literal f/x survives, row 3
+    the pinned simple-lowercase map, rows 4-6 the empty guard.  One
+    signature over row 7 is pinned through shingle_hashes ->
+    _minhash_signature.  Computed Column operands are refused rather
+    than quoted."""
+    import pytest
+
     from cdk_datalake_ingest_spark.operators.dedup import (
         MINHASH_PRIME,
-        _attr_sql,
         _minhash_signature,
         shingle_hashes,
-        word_shingles,
-        word_shingles_of_tokens,
-        normalize_text,
     )
 
     rows = [
@@ -380,44 +385,80 @@ def test_sql_fast_path_matches_column_api_fallback(spark):
         (7, "f x \f \x0b fox xylophone"),
     ]
     df = spark.createDataFrame(rows, "id long, text string")
-
-    # dispatch sanity: plain refs take the fast path, computed don't
-    assert _attr_sql(F.col("text")) == "`text`"
-    assert _attr_sql(F.concat(F.col("text"), F.lit(""))) is None
-    assert _attr_sql(F.col("a.b")) is None  # field access must NOT be quoted
-
-    ident = F.concat(F.col("text"), F.lit(""))  # identity, but computed
-    fast = df.select("id", word_shingles(F.col("text"), 3).alias("s"))
-    slow = df.select("id", word_shingles(ident, 3).alias("s"))
-    assert sorted(fast.collect()) == sorted(slow.collect())
-
-    toks = df.select(
-        "id",
-        F.array_remove(F.split(normalize_text(F.col("text")), " "), "").alias("t"),
-    )
-    tok_ident = F.slice(F.col("t"), 1, 1 << 20)
-    assert sorted(
-        toks.select("id", word_shingles_of_tokens(F.col("t"), 2).alias("s")).collect()
-    ) == sorted(
-        toks.select("id", word_shingles_of_tokens(tok_ident, 2).alias("s")).collect()
-    )
-
     sh = df.select("id", word_shingles(F.col("text"), 3).alias("sh"))
-    sh_ident = F.slice(F.col("sh"), 1, 1 << 20)
-    assert sorted(
-        sh.select("id", shingle_hashes(F.col("sh"), 42).alias("h")).collect()
-    ) == sorted(
-        sh.select("id", shingle_hashes(sh_ident, 42).alias("h")).collect()
-    )
+    fox = [
+        "the quick brown",
+        "quick brown fox",
+        "brown fox jumps",
+        "fox jumps over",
+        "jumps over the",
+        "over the lazy",
+        "the lazy dog",
+    ]
+    assert {r["id"]: r["sh"] for r in sh.collect()} == {
+        1: fox,
+        2: fox,
+        3: ["istanbul σιγμα σ", "σιγμα σ eσ"],
+        4: [],
+        5: [],
+        6: [],
+        7: ["f x fox", "x fox xylophone"],
+    }
 
-    hs = sh.select("id", shingle_hashes(F.col("sh"), 42).alias("h"))
-    h_ident = F.slice(F.col("h"), 1, 1 << 20)
-    assert sorted(
-        hs.select(
-            "id", _minhash_signature(F.col("h"), 16, MINHASH_PRIME, 42).alias("g")
-        ).collect()
-    ) == sorted(
-        hs.select(
-            "id", _minhash_signature(h_ident, 16, MINHASH_PRIME, 42).alias("g")
-        ).collect()
+    sig = (
+        sh.filter("id = 7")
+        .select(shingle_hashes(F.col("sh"), 42).alias("h"))
+        .select(_minhash_signature("h", 4, MINHASH_PRIME, 42).alias("g"))
+        .first()["g"]
+    )
+    assert sig == [1692321985, 73789066, 332830490, 682070492]
+
+    for computed in (F.col("a.b"), F.concat(F.col("text"), F.lit(""))):
+        with pytest.raises(ValueError, match="word_shingles: .*project"):
+            word_shingles(computed, 3)
+
+
+def test_operators_accept_non_identifier_column_names(spark):
+    """The builders take plain column names only, so every operator
+    that feeds a user-chosen text/vector column into one selects it
+    under an internal alias first: a column name with a space must give
+    the same pairs and neighbours as the same data under a plain
+    name."""
+    from cdk_datalake_ingest_spark.functions.similarity import lsh_topk
+    from cdk_datalake_ingest_spark.operators.corpus import boilerplate_ngrams
+
+    texts = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "the quick brown fox jumps over the lazy cat"),
+        (3, "completely different words appear in this one"),
+        (4, "the quick brown fox jumps over the lazy dog again"),
+    ]
+    plain = spark.createDataFrame(texts, "doc_id long, text string")
+    spaced = plain.withColumnRenamed("text", "body text")
+
+    def pairs(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    got_plain = pairs(minhash_near_dup_pairs(plain, "doc_id", "text"))
+    assert got_plain
+    assert got_plain == pairs(
+        minhash_near_dup_pairs(spaced, "doc_id", "body text")
+    )
+    assert pairs(ngram_jaccard_pairs(plain, "doc_id", "text")) == pairs(
+        ngram_jaccard_pairs(spaced, "doc_id", "body text")
+    )
+    assert pairs(
+        boilerplate_ngrams(plain, min_doc_freq=2, text_col="text")
+    ) == pairs(boilerplate_ngrams(spaced, min_doc_freq=2, text_col="body text"))
+
+    vecs = [
+        (i, [float((i * 7 + j * 3) % 5 - 2) for j in range(8)])
+        for i in range(12)
+    ]
+    vplain = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
+    vspaced = vplain.withColumnRenamed("embedding", "emb vec")
+    got_plain = pairs(lsh_topk(vplain, vplain, 3, n_planes=2, dim=8))
+    assert got_plain
+    assert got_plain == pairs(
+        lsh_topk(vspaced, vspaced, 3, vec_col="emb vec", n_planes=2, dim=8)
     )

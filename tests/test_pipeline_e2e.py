@@ -117,7 +117,19 @@ def test_csv_roundtrip_and_stage_pipeline(spark, tmp_path):
     assert rows2[1].amount == 1234.50  # untouched
 
 
-def test_transactional_delete_window(spark, tmp_path):
+def test_transactional_delete_window(spark, tmp_path, monkeypatch):
+    # the fixture periods are 2026xx: pin the clock the 2-month lookback
+    # is measured from, so the window does not age out of real time
+    from cdk_datalake_ingest_spark.operators import incremental
+    from cdk_datalake_ingest_spark.plans import pipeline
+
+    monkeypatch.setattr(
+        pipeline,
+        "lookback_period_cutoff",
+        lambda m: incremental.lookback_period_cutoff(
+            m, now=dt.datetime(2026, 8, 1)
+        ),
+    )
     table_t = TableSpec(
         target_table_name="PE_TXN",
         id_column="id",

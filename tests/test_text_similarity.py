@@ -85,10 +85,10 @@ def test_cosine_matches_numpy(spark):
     got = (
         a.crossJoin(b)
         .select(
-            cosine(
-                F.col("ea").cast("array<double>"), F.col("eb").cast("array<double>")
-            ).alias("c")
+            F.col("ea").cast("array<double>").alias("ea"),
+            F.col("eb").cast("array<double>").alias("eb"),
         )
+        .select(cosine(F.col("ea"), F.col("eb")).alias("c"))
         .first()
         .c
     )
