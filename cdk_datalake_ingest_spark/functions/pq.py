@@ -20,53 +20,41 @@ oracle-checkable.
 
 Determinism contract (same as operators/semantic.lloyd_kmeans, so the
 DuckDB oracle reproduces everything bit-exactly): codebooks train with
-the deterministic Lloyd loop per subspace (init = slices of the k
-smallest ids' vectors, round-6 centroid means, round-6 + smaller-cid
-assignment tie-break, an emptied cluster keeps its previous centroid);
-ADC tables hold round-6 squared distances and the candidate sum folds
-them in subspace order. Training all M subspaces rides ONE combined
-dataflow (a single Arrow distance kernel + one groupBy per Lloyd
-iteration), not M separate jobs — per-subspace results are identical
-to running lloyd_kmeans on each slice, just batched.
+semantic's one Lloyd loop (``_lloyd``: init = slices of the k smallest
+ids' vectors, round-6 centroid means, round-6 + smaller-cid assignment
+tie-break, an emptied cluster keeps its previous centroid) — k-means
+is that loop at M=1, over the same Arrow distance kernel; ADC tables
+hold round-6 squared distances and the candidate sum folds them in
+subspace order. Training all M subspaces rides ONE combined dataflow
+(one kernel pass + one groupBy per Lloyd iteration), not M separate
+jobs — per-subspace results are identical to running lloyd_kmeans on
+each slice, just batched.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
-from cdk_datalake_ingest_spark.functions.similarity import _as_double
+from cdk_datalake_ingest_spark.functions.similarity import _as_double, _ranked
 from cdk_datalake_ingest_spark.functions.sqltext import _attr_sql, _vec_sql
 from cdk_datalake_ingest_spark.operators.semantic import (
     _centroid_dim,
+    _dist_structs,
+    _guarded_base,
     _guarded_vec,
+    _lloyd,
+    _nearest_struct,
+    _pq_codes_over,
     _sq_dist,
     _sq_dist_sql,
 )
-from cdk_datalake_ingest_spark.session import ensure_parallelism
 
 
 def _book_sql(book) -> str:
     """One codebook as a nested SQL array literal —
     ``array(array(...), ...)`` of double literals."""
     return "array(" + ", ".join(_vec_sql(c) for c in book) + ")"
-
-
-def _pq_codes_sql(dists_attr: str, m: int, k: int) -> str:
-    """SQL text of the per-subspace round-6 + smaller-cid tie-break
-    over a PROJECTED raw-distance column (``_pq_dists_udf`` output):
-    entry j is the cid of the first element of ``array_sort`` over
-    slice j's (dist, cid) structs."""
-    parts = [
-        f"(array_sort(transform(slice({dists_attr}, {j * k + 1}, {k}), "
-        "(d, i) -> named_struct('dist', round(d, 6), "
-        "'cid', cast(i + 1 AS int)))))[0].cid"
-        for j in range(m)
-    ]
-    return "array(" + ", ".join(parts) + ")"
 
 
 def _check_codebooks(codebooks, fn: str) -> tuple[int, int, int]:
@@ -86,78 +74,6 @@ def _check_codebooks(codebooks, fn: str) -> tuple[int, int, int]:
     return len(codebooks), k, dsub
 
 
-#: Arrow PQ-distance kernels keyed by the flattened codebook tuple,
-#: FIFO-capped like semantic._DIST_UDFS (Lloyd iterations mint a fresh
-#: intermediate codebook per pass that is never looked up again).
-_PQ_DIST_UDFS: dict[tuple, object] = {}
-_PQ_DIST_UDFS_CAP = 64
-
-
-def _pq_dists_udf(books_key: tuple):
-    """Arrow kernel: full vector -> array<double> of the m*k RAW
-    squared distances (subspace-major: entries [j*k, (j+1)*k) are
-    slice j against codebook j's k centroids).
-
-    Documented exception to the no-Python-hot-path rule (same family
-    as semantic._sq_dists_udf): the folded expression form costs
-    m*k*dsub interpreted closure evals per row. Bit-exactness: per
-    element (x-y)*(x-y) in IEEE float64 summed SEQUENTIALLY via
-    cumsum — identical to the ``aggregate`` fold and the oracle's
-    list_sum. The round-6 + smaller-cid comparison stays JVM-side in
-    ``_pq_codes_over``; this kernel never rounds."""
-    if books_key not in _PQ_DIST_UDFS:
-        if len(_PQ_DIST_UDFS) >= _PQ_DIST_UDFS_CAP:
-            _PQ_DIST_UDFS.pop(next(iter(_PQ_DIST_UDFS)))
-        books = [np.asarray(b, dtype=np.float64) for b in books_key]
-        m = len(books)
-        k, dsub = books[0].shape
-
-        @pandas_udf("array<double>")
-        def _dists(vecs: pd.Series) -> pd.Series:
-            rows = vecs.tolist()
-            n = len(rows)
-            if n == 0:
-                return pd.Series([], dtype=object)
-            V = np.stack([np.asarray(r, dtype=np.float64) for r in rows])
-            out = np.empty((n, m * k), dtype=np.float64)
-            for j in range(m):
-                S = V[:, j * dsub : (j + 1) * dsub]
-                C = books[j]
-                for c in range(k):
-                    d = S - C[c]
-                    np.square(d, out=d)
-                    out[:, j * k + c] = d.cumsum(axis=1)[:, -1]
-            return pd.Series(list(out))
-
-        _PQ_DIST_UDFS[books_key] = _dists
-    return _PQ_DIST_UDFS[books_key]
-
-
-def _books_key(codebooks) -> tuple:
-    return tuple(
-        tuple(tuple(float(x) for x in c) for c in book) for book in codebooks
-    )
-
-
-def _pq_codes_over(
-    df: DataFrame, vec_attr: str, codebooks
-) -> tuple[DataFrame, Column]:
-    """array<int> of the m 1-based nearest-sub-centroid codes of
-    ``df[vec_attr]``: one Arrow kernel pass for all raw distances,
-    projected as the NAMED column ``__pqd`` so the per-subspace
-    round-6 + smaller-cid tie-break (k-element sort per subspace) can
-    be rendered as SQL text over it (``_pq_codes_sql``) — the exact
-    lloyd_kmeans assignment contract, computed for all M subspaces in
-    one projection with no shuffle. Returns ``(projected_df, codes)``;
-    ``__pqd`` disappears in the caller's select, and the projection
-    collapse leaves one ArrowEvalPython under the tie-break tree."""
-    m, k, _ = _check_codebooks(codebooks, "pq_encode")
-    dists = _pq_dists_udf(_books_key(codebooks))(F.col(vec_attr))
-    return df.withColumn("__pqd", dists), F.expr(
-        _pq_codes_sql("`__pqd`", m, k)
-    )
-
-
 def pq_train(
     corpus: DataFrame,
     m: int = 16,
@@ -169,11 +85,12 @@ def pq_train(
 ) -> list[list[list[float]]]:
     """Train the M per-subspace codebooks: ``codebooks[j]`` is the
     k x (dim/m) centroid matrix of deterministic Lloyd k-means over
-    the j-th vector slice — per-subspace results identical to running
-    ``lloyd_kmeans`` on each slice, but all M trainings share one
-    dataflow: a single kernel assignment pass and ONE partially
-    aggregated groupBy per iteration, collecting m*k centroid rows
-    (model-sized) to the driver.
+    the j-th vector slice — semantic's ``_lloyd`` with m codebooks, so
+    per-subspace results are identical to running ``lloyd_kmeans`` on
+    each slice, but all M trainings share one dataflow: a single
+    kernel assignment pass and ONE partially aggregated groupBy per
+    iteration, collecting m*k centroid rows (model-sized) to the
+    driver.
 
     Boundary contract: init takes the ``k`` smallest ids' vector
     slices.  A corpus with ``n < k`` rows trains n-centroid codebooks
@@ -183,66 +100,9 @@ def pq_train(
     handing ``pq_encode`` an unusable empty codebook."""
     if dim % m != 0:
         raise ValueError(f"pq_train: dim={dim} not divisible by m={m}")
-    if iters < 0:
-        raise ValueError("pq_train: iters must be >= 0")
-    dsub = dim // m
-    init_rows = (
-        corpus.select(
-            F.col(id_col).alias("cid"), _as_double(F.col(vec_col)).alias("cv")
-        )
-        .orderBy("cid")
-        .limit(k)
-        .collect()
-    )
-    if not init_rows:
+    _, books = _lloyd(corpus, m, k, iters, id_col, vec_col, dim, "pq_train")
+    if not books[0]:
         raise ValueError("pq_train: corpus is empty — nothing to train on")
-    for r in init_rows:
-        if r["cv"] is None or len(r["cv"]) != dim:
-            raise ValueError(
-                f"vector length {0 if r['cv'] is None else len(r['cv'])} "
-                f"for id {r['cid']} does not match dim={dim}"
-            )
-    books = [
-        [list(r["cv"][j * dsub : (j + 1) * dsub]) for r in init_rows]
-        for j in range(m)
-    ]
-    base = ensure_parallelism(corpus).select(
-        F.col(id_col), _guarded_vec(id_col, vec_col, dim, "pq_train")
-    )
-    for _ in range(iters):
-        withd, codes = _pq_codes_over(base, "__v", books)
-        assigned = withd.select(
-            F.col("__v"),
-            F.posexplode(codes).alias("__subi", "__cid"),
-        )
-        # per-(subspace, cluster) means over that subspace's dsub dims
-        # (element_at is 1-based and __subi 0-based), rendered as
-        # parsed SQL text — one round trip per dim instead of the
-        # 6-call round/avg/element_at/arith chain
-        mean_rows = (
-            assigned.groupBy("__subi", "__cid")
-            .agg(
-                *[
-                    F.expr(
-                        f"round(avg(element_at(`__v`, "
-                        f"`__subi` * {dsub} + {i + 1})), 6) AS d{i}"
-                    )
-                    for i in range(dsub)
-                ]
-            )
-            .collect()
-        )
-        by_key = {
-            (r["__subi"], r["__cid"]): [r[f"d{i}"] for i in range(dsub)]
-            for r in mean_rows
-        }
-        books = [
-            [
-                by_key.get((j, c + 1), books[j][c])
-                for c in range(len(books[j]))
-            ]
-            for j in range(m)
-        ]
     return books
 
 
@@ -255,13 +115,20 @@ def pq_encode(
     """(id, codes) — ``codes[j]`` is the 1-based nearest sub-centroid
     of slice j. A narrow, shuffle-free projection: this is the
     operator that turns the 512-byte vector into M small ints."""
-    m, k, dsub = _check_codebooks(codebooks, "pq_encode")
-    dim = dsub * m
-    base = ensure_parallelism(corpus).select(
-        F.col(id_col), _guarded_vec(id_col, vec_col, dim, "pq_encode")
-    )
+    return _encoded(corpus, codebooks, id_col, vec_col, "pq_encode")
+
+
+def _encoded(corpus, codebooks, id_col, vec_col, fn, coarse=None):
+    """``(id_col, codes)`` of the guarded corpus, plus ``__list`` (the
+    nearest coarse centroid) when ``coarse`` is given — the one encode
+    projection behind ``pq_encode`` and both ``pq_adc_topk`` scans."""
+    m, _, dsub = _check_codebooks(codebooks, fn)
+    base = _guarded_base(corpus, id_col, vec_col, dsub * m, fn)
     withd, codes = _pq_codes_over(base, "__v", codebooks)
-    return withd.select(F.col(id_col), codes.alias("codes"))
+    lists = [] if coarse is None else [
+        _nearest_struct(F.col("__v"), coarse)["cid"].alias("__list")
+    ]
+    return withd.select(F.col(id_col), codes.alias("codes"), *lists)
 
 
 def _adc_tables(vec: Column, codebooks) -> Column:
@@ -278,24 +145,6 @@ def _adc_tables(vec: Column, codebooks) -> Column:
         for j, book in enumerate(codebooks)
     ]
     return F.expr("array(" + ", ".join(tabs_sql) + ")")
-
-
-def _coarse_probe_structs(vec: Column, centroids) -> Column:
-    """array<struct(dist, cid)> of round-6 squared distances to the
-    coarse centroids — sort ascending for the probe order (same
-    round-6 + smaller-cid contract as semantic._nearest_struct, which
-    reuses the same Arrow distance kernel)."""
-    from cdk_datalake_ingest_spark.operators.semantic import _sq_dists_udf
-
-    key = tuple(tuple(float(x) for x in c) for c in centroids)
-    dists = _sq_dists_udf(key)(vec)
-    return F.transform(
-        dists,
-        lambda d, i: F.struct(
-            F.round(d, 6).alias("dist"),
-            (i + 1).cast("integer").alias("cid"),
-        ),
-    )
 
 
 def pq_adc_topk(
@@ -340,7 +189,7 @@ def pq_adc_topk(
     state read is the M-int code column — at 100 TB the encoded corpus
     is the single big operand and it is ~30x smaller than the raw
     vectors."""
-    m, kk, dsub = _check_codebooks(codebooks, "pq_adc_topk")
+    m, _, dsub = _check_codebooks(codebooks, "pq_adc_topk")
     dim = dsub * m
     q = queries.select(
         F.col(id_col).alias("query_id"),
@@ -351,10 +200,6 @@ def pq_adc_topk(
         _adc_tables(F.col("__v"), codebooks).alias("__tabs"),
     )
     if coarse_centroids is not None:
-        from cdk_datalake_ingest_spark.operators.semantic import (
-            _nearest_struct,
-        )
-
         cdim = _centroid_dim(coarse_centroids, "pq_adc_topk")
         if cdim != dim:
             raise ValueError(
@@ -365,33 +210,23 @@ def pq_adc_topk(
                 f"pq_adc_topk: n_probe={n_probe} outside "
                 f"[1, {len(coarse_centroids)}]"
             )
-        # corpus -> one list id (ride the encode projection: the vec
-        # is still in scope there, so re-derive enc WITH the list)
-        base = ensure_parallelism(corpus).select(
-            F.col(id_col), _guarded_vec(id_col, vec_col, dim, "pq_adc_topk")
+        # query -> its n_probe nearest list ids, exploded for the
+        # equi-join against each corpus row's one list
+        probe = F.slice(
+            F.array_sort(_dist_structs(F.col("__v"), coarse_centroids)),
+            1,
+            n_probe,
         )
-        withd, codes = _pq_codes_over(base, "__v", codebooks)
-        enc = withd.select(
-            F.col(id_col),
-            codes.alias("codes"),
-            _nearest_struct(F.col("__v"), coarse_centroids)["cid"].alias(
-                "__list"
-            ),
-        )
-        # query -> n_probe list ids, exploded for the equi-join
-        scored = _coarse_probe_structs(F.col("__v"), coarse_centroids)
-        probe = F.transform(
-            F.slice(F.array_sort(scored), 1, n_probe), lambda s: s["cid"]
-        )
-        q = q.withColumn("__list", F.explode(probe))
-        pairs = enc.withColumnRenamed(id_col, "neighbor_id").join(
-            F.broadcast(q.drop("__v")), on="__list"
-        )
-    else:
-        enc = pq_encode(corpus, codebooks, id_col=id_col, vec_col=vec_col)
-        pairs = enc.withColumnRenamed(id_col, "neighbor_id").join(
-            F.broadcast(q.drop("__v")), how="cross"
-        )
+        q = q.withColumn("__list", F.explode(probe["cid"]))
+    enc = _encoded(
+        corpus, codebooks, id_col, vec_col, "pq_adc_topk", coarse_centroids
+    ).withColumnRenamed(id_col, "neighbor_id")
+    q = F.broadcast(q.drop("__v"))
+    pairs = (
+        enc.join(q, how="cross")
+        if coarse_centroids is None
+        else enc.join(q, on="__list")
+    )
     if exclude_self:
         pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
     # fold in subspace order (left-to-right over zip_with output) so
@@ -405,15 +240,12 @@ def pq_adc_topk(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    scored = pairs.withColumn("adc_dist", adc)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    ranked = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= (k if refine is None else k * refine))
-        .select("query_id", "neighbor_id", "adc_dist", "rank")
-    )
+    ranked = _ranked(
+        pairs.withColumn("adc_dist", adc),
+        k if refine is None else k * refine,
+        "adc_dist",
+        ascending=True,
+    ).select("query_id", "neighbor_id", "adc_dist", "rank")
     if refine is None:
         return ranked
     # exact rerank of the bounded candidate set
@@ -432,11 +264,6 @@ def pq_adc_topk(
             "exact_dist", F.round(_sq_dist(F.col("__qv"), F.col("__cv")), 6)
         )
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("exact_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_dist", "exact_dist", "rank")
+    return _ranked(exact, k, "exact_dist", ascending=True).select(
+        "query_id", "neighbor_id", "adc_dist", "exact_dist", "rank"
     )

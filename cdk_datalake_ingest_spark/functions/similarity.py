@@ -186,6 +186,99 @@ def _as_double(col: Column) -> Column:
     return col.cast("array<double>")
 
 
+def _seed_rows(df: DataFrame, id_col: str, vec_col: str, n: int) -> list:
+    """The ``n`` smallest ids' ``(cid, cv)`` rows, vectors as
+    array<double> — a TakeOrdered (no global shuffle): the
+    deterministic centroid sample behind IVF's default quantizer and
+    every Lloyd seed (operators/semantic.py)."""
+    return (
+        df.select(
+            F.col(id_col).alias("cid"), _as_double(F.col(vec_col)).alias("cv")
+        )
+        .orderBy("cid")
+        .limit(n)
+        .collect()
+    )
+
+
+def _side(
+    df: DataFrame, id_col: str, vec_col: str, id_name: str, tag: str
+) -> DataFrame:
+    """One side of a candidate join: ``(id_name, __<tag>v, __<tag>n)``
+    = the row id, its vector as array<double> and its norm, with the
+    zero/NULL/non-finite-norm rows already dropped (``_nonzero``).
+    Norms are computed per ROW here, not per pair inside the join —
+    scoring a candidate pair is then one dot product, not three
+    O(dim) folds."""
+    v, n = f"__{tag}v", f"__{tag}n"
+    return _nonzero(
+        df.select(
+            F.col(id_col).alias(id_name), _as_double(F.col(vec_col)).alias(v)
+        ).withColumn(n, norm(v)),
+        n,
+    )
+
+
+def _ranked(
+    scored: DataFrame, k: int, score: str, ascending: bool
+) -> DataFrame:
+    """Per-query top k of scored candidate pairs, as ``rank`` 1..k:
+    the one rank window every top-k variant (cosine and PQ) shares,
+    deterministic tie-break on neighbor id. Fix ordering/tie-break
+    semantics HERE, once."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy("query_id").orderBy(
+        order, F.col("neighbor_id").asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _cosine_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    exclude_self: bool,
+    ckey: Column | None = None,
+    qkey: Column | None = None,
+    probes: Column | None = None,
+) -> DataFrame:
+    """The candidate-then-rank skeleton of every cosine top-k variant:
+    candidate generation, then exact rerank (the split of the
+    incremental top-k frameworks in PAPERS.md).
+
+    Both sides go through ``_side`` (corpus rows as ``neighbor_id`` /
+    ``__cv`` / ``__cn``, queries as ``query_id`` / ``__qv`` /
+    ``__qn``). Without a key every corpus row is a candidate of every
+    query (cross join — brute force). Otherwise corpus rows carry
+    ``ckey`` (over ``__cv``) and queries ``qkey`` (over ``__qv``) as
+    ``__key``; ``probes`` (over the query's ``__key``) turns it into a
+    probe set, exploded to one row per key. The query side is the
+    broadcast-small operand either way, so the corpus is scanned once
+    and never shuffled on the key. Every candidate is then scored with
+    the exact ``scored_cosine`` and ranked per query."""
+    c = _side(ensure_parallelism(corpus), id_col, vec_col, "neighbor_id", "c")
+    q = _side(queries, id_col, vec_col, "query_id", "q")
+    if ckey is None:
+        pairs = c.join(F.broadcast(q), how="cross")
+    else:
+        q = q.withColumn("__key", qkey)
+        if probes is not None:
+            q = q.withColumn("__key", F.explode(probes))
+        pairs = c.withColumn("__key", ckey).join(F.broadcast(q), on="__key")
+    if exclude_self:
+        pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
+    scored = pairs.withColumn(
+        "cosine", scored_cosine("__qv", "__cv", "__qn", "__cn")
+    )
+    return _ranked(scored, k, "cosine", ascending=False).select(
+        "query_id", "neighbor_id", "cosine", "rank"
+    )
+
+
 def _dim_checked_sql(v: str, dim: int, fn_name: str) -> str:
     """SQL text of the rendered vector operand ``v`` with an
     action-time width guard (the semantic.py _guarded_vec pattern): a
@@ -224,29 +317,7 @@ def brute_force_topk(
     query id for the per-query top-k window. Deterministic tie-break on
     neighbor id.
     """
-    q = _nonzero(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            _as_double(F.col(vec_col)).alias("__qv"),
-        ).withColumn("__qn", norm(F.col("__qv"))),
-        "__qn",
-    )
-    c = _nonzero(
-        ensure_parallelism(corpus).select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double(F.col(vec_col)).alias("__cv"),
-        ).withColumn("__cn", norm(F.col("__cv"))),
-        "__cn",
-    )
-    pairs = c.join(F.broadcast(q), how="cross")
-    if exclude_self:
-        pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
-    # per-row norms precomputed before the join (see embedding_near_dup_pairs)
-    scored = pairs.withColumn(
-        "cosine",
-        scored_cosine(F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")),
-    )
-    return _topk_over_pairs(scored, k)
+    return _cosine_topk(corpus, queries, k, id_col, vec_col, exclude_self)
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -333,108 +404,21 @@ def embedding_near_dup_pairs(
                 f"bucketing), or pass max_rows=None to override."
             )
     corpus = ensure_parallelism(corpus)
-    # norms precomputed per ROW, not per pair: inside the join each
-    # candidate pair would otherwise re-run two 64-element folds —
-    # O(n) fold work instead of O(candidate-pairs).
-    a = _nonzero(
-        corpus.select(
-            F.col(id_col).alias("id_a"), _as_double(F.col(vec_col)).alias("__va")
-        ).withColumn("__na", norm(F.col("__va"))),
-        "__na",
-    )
-    b = _nonzero(
-        corpus.select(
-            F.col(id_col).alias("id_b"), _as_double(F.col(vec_col)).alias("__vb")
-        ).withColumn("__nb", norm(F.col("__vb"))),
-        "__nb",
-    )
+    a = _side(corpus, id_col, vec_col, "id_a", "a")
+    b = _side(corpus, id_col, vec_col, "id_b", "b")
     if n_planes > 0:
         planes = hyperplanes(dim, n_planes, seed)
-        a = a.withColumn("__bucket", rp_lsh_bucket(F.col("__va"), planes))
-        b = b.withColumn("__bucket", rp_lsh_bucket(F.col("__vb"), planes))
+        a = a.withColumn("__bucket", rp_lsh_bucket("__av", planes))
+        b = b.withColumn("__bucket", rp_lsh_bucket("__bv", planes))
         pairs = a.join(b, on="__bucket")
     else:
         pairs = a.join(b, how="cross")
-    score = scored_cosine(F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb"))
     return (
         pairs.filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", score)
+        .withColumn("cosine", scored_cosine("__av", "__bv", "__an", "__bn"))
         .filter(F.col("cosine") >= F.lit(threshold))
         .select("id_a", "id_b", "cosine")
     )
-
-
-def _topk_over_pairs(scored: DataFrame, k: int) -> DataFrame:
-    """Shared tail of every top-k variant: per-query rank window over
-    the scored candidate pairs, deterministic tie-break on neighbor
-    id. Fix ordering/tie-break semantics HERE, once."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def _lsh_topk_impl(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    n_planes: int,
-    dim: int,
-    seed: int,
-    exclude_self: bool,
-    probe_hamming: int,
-) -> DataFrame:
-    """Shared LSH top-k pipeline; single-probe and Hamming-1
-    multi-probe differ ONLY in the query-side probe set."""
-    planes = hyperplanes(dim, n_planes, seed)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("__qv"),
-    ).withColumns(
-        {
-            "__bucket": rp_lsh_bucket(F.col("__qv"), planes),
-            "__qn": norm(F.col("__qv")),
-        }
-    )
-    q = _nonzero(q, "__qn")
-    if probe_hamming >= 1:
-        probe_set = F.array(
-            F.col("__bucket"),
-            *[
-                F.col("__bucket").bitwiseXOR(F.lit(1 << i))
-                for i in range(n_planes)
-            ],
-        )
-        q = (
-            q.withColumn("__probe", F.explode(probe_set))
-            .drop("__bucket")
-            .withColumnRenamed("__probe", "__bucket")
-        )
-    c = ensure_parallelism(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(F.col(vec_col)).alias("__cv"),
-    ).withColumns(
-        {
-            "__bucket": rp_lsh_bucket(F.col("__cv"), planes),
-            "__cn": norm(F.col("__cv")),
-        }
-    )
-    c = _nonzero(c, "__cn")
-    pairs = c.join(F.broadcast(q), on="__bucket")
-    if exclude_self:
-        pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
-    # per-row norms precomputed before the join (same as brute_force_topk)
-    scored = pairs.withColumn(
-        "cosine",
-        scored_cosine(F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")),
-    )
-    return _topk_over_pairs(scored, k)
 
 
 def lsh_multiprobe_topk(
@@ -458,9 +442,16 @@ def lsh_multiprobe_topk(
     exploded to its probe set, corpus side untouched and never
     shuffled wide), so the 100 TB shape is identical to single-probe
     ``lsh_topk``."""
-    return _lsh_topk_impl(
-        corpus, queries, k, id_col, vec_col, n_planes, dim, seed,
-        exclude_self, probe_hamming=1,
+    planes = hyperplanes(dim, n_planes, seed)
+    # the probe set is built from the query's projected bucket COLUMN:
+    # an array over the bucket EXPRESSION would repeat its n_planes
+    # folds once per probe
+    b = F.col("__key")
+    return _cosine_topk(
+        corpus, queries, k, id_col, vec_col, exclude_self,
+        ckey=rp_lsh_bucket("__cv", planes),
+        qkey=rp_lsh_bucket("__qv", planes),
+        probes=F.array(b, *[b.bitwiseXOR(1 << i) for i in range(n_planes)]),
     )
 
 
@@ -489,16 +480,8 @@ def ivf_topk(
     of query count.
     """
     if centroids is None:
-        cent_rows = (  # TakeOrdered (no global shuffle), n_centroids rows
-            corpus.select(
-                F.col(id_col).alias("cid"),
-                _as_double(F.col(vec_col)).alias("cv"),
-            )
-            .orderBy("cid")
-            .limit(n_centroids)
-            .collect()
-        )
-        centroids = [list(r["cv"]) for r in cent_rows]
+        seeds = _seed_rows(corpus, id_col, vec_col, n_centroids)
+        centroids = [list(r["cv"]) for r in seeds]
     # ONE nested-array literal — compact codegen; the per-row centroid
     # ranking is a narrow expression, so corpus→list assignment needs
     # no shuffle (the property that matters at 100 TB).
@@ -525,42 +508,15 @@ def ivf_topk(
             f"1, {n}), s -> s.list_id)"
         )
 
-    # zero-norm/NULL vectors excluded BEFORE list assignment (the
-    # module's shared input contract — brute/lsh do the same): a
-    # surviving zero-norm row would emit NULL-cosine candidate rows
-    # into the top-k window
-    c = _nonzero(
-        ensure_parallelism(corpus)
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double(F.col(vec_col)).alias("__cv"),
-        )
-        .withColumn("__cn", norm(F.col("__cv"))),
-        "__cn",
-    ).withColumn("__list", _nearest_lists(F.col("__cv"), 1)[0])
-    q = (
-        _nonzero(
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                _as_double(F.col(vec_col)).alias("__qv"),
-            ).withColumn("__qn", norm(F.col("__qv"))),
-            "__qn",
-        )
-        .withColumn("__probe", _nearest_lists(F.col("__qv"), n_probe))
-        .withColumn("__list", F.explode("__probe"))
+    # zero-norm/NULL vectors are excluded (``_side``) BEFORE list
+    # assignment, like every search path: a surviving zero-norm row
+    # would emit NULL-cosine candidate rows into the top-k window
+    return _cosine_topk(
+        corpus, queries, k, id_col, vec_col, exclude_self,
+        ckey=_nearest_lists("__cv", 1)[0],
+        qkey=_nearest_lists("__qv", n_probe),
+        probes=F.col("__key"),
     )
-    pairs = c.join(
-        F.broadcast(q.select("query_id", "__qv", "__qn", "__list")), on="__list"
-    )
-    if exclude_self:
-        pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
-    # per-row norms precomputed before the join: scoring a candidate
-    # pair is one dot product, not three O(dim) folds
-    scored = pairs.withColumn(
-        "cosine",
-        scored_cosine(F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")),
-    )
-    return _topk_over_pairs(scored, k)
 
 
 def lsh_topk(
@@ -579,7 +535,9 @@ def lsh_topk(
     join; ~|corpus|/2^n_planes candidates per query). Recall < 1 by
     construction; use ``lsh_multiprobe_topk`` (or more bands) for
     higher recall."""
-    return _lsh_topk_impl(
-        corpus, queries, k, id_col, vec_col, n_planes, dim, seed,
-        exclude_self, probe_hamming=0,
+    planes = hyperplanes(dim, n_planes, seed)
+    return _cosine_topk(
+        corpus, queries, k, id_col, vec_col, exclude_self,
+        ckey=rp_lsh_bucket("__cv", planes),
+        qkey=rp_lsh_bucket("__qv", planes),
     )

@@ -1,12 +1,14 @@
 """Semantic clustering and dedup over embedding columns.
 
 ``lloyd_kmeans`` is a deterministic Lloyd's k-means over an
-``array<float>`` column; ``semantic_dedup`` composes it into the
-SemDeDup curation operator (Abbas et al. 2023, arXiv:2303.09540):
-cluster the corpus with coarse k-means, then drop every vector that
-has a more-senior (smaller-id) near-duplicate *within its cluster* —
-the cluster acts as a blocking key so the pairwise cosine check is
-|cluster|-local, never corpus-global.
+``array<float>`` column: the one Lloyd loop (``_lloyd``) and Arrow
+distance kernel (``_sq_dists_udf``) that ``functions.pq`` trains its
+codebooks with, run with a single codebook. ``semantic_dedup``
+composes it into the SemDeDup curation operator (Abbas et al. 2023,
+arXiv:2303.09540): cluster the corpus with coarse k-means, then drop
+every vector that has a more-senior (smaller-id) near-duplicate
+*within its cluster* — the cluster acts as a blocking key so the
+pairwise cosine check is |cluster|-local, never corpus-global.
 
 Determinism contract (what makes the DuckDB oracle able to recompute
 the full algorithm): init centroids are the k smallest ids; every
@@ -18,11 +20,12 @@ assignments — and therefore every downstream row — hash-match.
 
 Scale notes (100 TB):
 - The per-iteration dataflow is: one narrow map over the corpus
-  (nearest-centroid via a broadcast nested-array literal — no
-  shuffle), one partial-aggregated groupBy(cluster) for the new
-  centroids (k×dim doubles cross the wire), one tiny driver collect
-  (k rows — the same driver-side centroid update MLlib's k-means
-  does). The corpus is scanned once per iteration and never shuffled.
+  (nearest centroid from the Arrow distance kernel against the
+  constant centroids — no shuffle), one partial-aggregated
+  groupBy(cluster) for the new centroids (k×dim doubles cross the
+  wire), one tiny driver collect (k rows — the same driver-side
+  centroid update MLlib's k-means does). The corpus is scanned once
+  per iteration and never shuffled.
 - ``semantic_dedup``'s pair stage is an equi-join on cluster id, so
   candidate volume is sum(|cluster|²) not |corpus|²; k is the knob
   that bounds cluster size (k ~ N/target_cluster_size).
@@ -38,6 +41,7 @@ from pyspark.sql.functions import pandas_udf
 
 from cdk_datalake_ingest_spark.functions.similarity import (
     _as_double,
+    _seed_rows,
     dot,
     dot_arrow,
 )
@@ -123,17 +127,38 @@ def _guarded_vec(
     )
 
 
-#: Arrow distance kernels, one per centroid matrix (tuple-of-tuples
-#: key), bounded: Lloyd iterations create a fresh intermediate matrix
-#: per pass that is never looked up again, so evict FIFO past a small
-#: cap instead of leaking a closure per trained quantizer forever.
+def _guarded_base(
+    corpus: DataFrame, id_col: str, vec_col: str, dim: int, fn_name: str
+) -> DataFrame:
+    """``(id_col, __v)``: the corpus fanned out (``ensure_parallelism``)
+    with its ``_guarded_vec`` — the input of every training and
+    assignment pass."""
+    return ensure_parallelism(corpus).select(
+        F.col(id_col), _guarded_vec(id_col, vec_col, dim, fn_name)
+    )
+
+
+#: Arrow distance kernels keyed by the codebook tuple (``_books_key``),
+#: bounded: Lloyd iterations mint a fresh intermediate codebook per
+#: pass that is never looked up again, so evict FIFO past a small cap
+#: instead of leaking a closure per trained quantizer forever.
 _DIST_UDFS: dict[tuple, Column] = {}
 _DIST_UDFS_CAP = 64
 
 
-def _sq_dists_udf(cents_key: tuple):
-    """Arrow kernel: vector column -> array<double> of RAW squared
-    distances to each of the k constant centroids.
+def _books_key(books) -> tuple:
+    return tuple(
+        tuple(tuple(float(x) for x in c) for c in book) for book in books
+    )
+
+
+def _sq_dists_udf(books_key: tuple):
+    """The one Arrow squared-distance kernel: vector column ->
+    array<double> of the m*k RAW squared distances, subspace-major
+    (entries [j*k, (j+1)*k) are the vector's j-th dim/m slice against
+    codebook j's k centroids). k-means is the m=1 case: one codebook
+    over the whole vector; PQ (functions/pq.py) passes its m
+    per-subspace codebooks.
 
     This is a documented exception to the no-Python-hot-path rule
     (same contract as SimHash's popcount and embed.py's bincount):
@@ -147,14 +172,15 @@ def _sq_dists_udf(cents_key: tuple):
     float64, summed SEQUENTIALLY via ``cumsum`` — the same
     left-to-right order as the ``aggregate`` fold and the DuckDB
     oracle's ``list_sum(list_transform(...))``, so raw distances are
-    bit-identical to the expression form. The round-6/tie-break
-    comparison stays JVM-side in ``_nearest_struct`` — this kernel
-    never rounds (numpy's round is not Spark's HALF_UP)."""
-    if cents_key not in _DIST_UDFS:
+    bit-identical to ``_sq_dist`` (pinned by tests/test_semantic.py).
+    The round-6/tie-break comparison stays JVM-side (``_dist_structs``,
+    ``_pq_codes_sql``) — this kernel never rounds (numpy's round is
+    not Spark's HALF_UP)."""
+    if books_key not in _DIST_UDFS:
         if len(_DIST_UDFS) >= _DIST_UDFS_CAP:
             _DIST_UDFS.pop(next(iter(_DIST_UDFS)))
-        C = np.asarray(cents_key, dtype=np.float64)
-        k = C.shape[0]
+        books = [np.asarray(b, dtype=np.float64) for b in books_key]
+        m, k = len(books), len(books_key[0])
 
         @pandas_udf("array<double>")
         def _dists(vecs: pd.Series) -> pd.Series:
@@ -162,74 +188,114 @@ def _sq_dists_udf(cents_key: tuple):
             n = len(rows)
             if n == 0:
                 return pd.Series([], dtype=object)
-            V = np.stack([np.asarray(r, dtype=np.float64) for r in rows])
-            out = np.empty((n, k), dtype=np.float64)
-            for j in range(k):
-                d = V - C[j]
-                np.square(d, out=d)
-                out[:, j] = d.cumsum(axis=1)[:, -1]
+            # (n, m, dim/m): V[:, j] is every row's j-th slice; a vector
+            # whose width does not match the codebooks fails the
+            # reshape or the subtraction below instead of truncating
+            V = np.stack(
+                [np.asarray(r, dtype=np.float64) for r in rows]
+            ).reshape(n, m, -1)
+            out = np.empty((n, m * k), dtype=np.float64)
+            for j, C in enumerate(books):
+                for c in range(k):
+                    d = V[:, j] - C[c]
+                    np.square(d, out=d)
+                    out[:, j * k + c] = d.cumsum(axis=1)[:, -1]
             return pd.Series(list(out))
 
-        _DIST_UDFS[cents_key] = _dists
-    return _DIST_UDFS[cents_key]
+        _DIST_UDFS[books_key] = _dists
+    return _DIST_UDFS[books_key]
 
 
-def _nearest_struct(vec: Column, centroids: list[list[float]]) -> Column:
-    """(dist, cid) struct of the nearest centroid: smallest
-    round(sq_dist, 6), ties toward the smaller 1-based centroid id
-    (array_sort on (dist, cid) structs — both ascending). Distances
-    come from the Arrow kernel; the round-6 + tie-break comparison is
-    a k-element JVM expression over the precomputed array."""
-    cents_key = tuple(tuple(float(x) for x in c) for c in centroids)
-    dists = _sq_dists_udf(cents_key)(vec)
-    scored = F.transform(
-        dists,
+def _dist_structs(vec: Column, centroids) -> Column:
+    """array<struct(dist, cid)>: round-6 squared distance from ``vec``
+    to each centroid with its 1-based id. ``array_sort`` orders it
+    nearest-first — smaller round-6 distance, ties toward the smaller
+    cid (both struct fields ascending) — so its first element is the
+    assignment and its first n the IVF probe lists."""
+    return F.transform(
+        _sq_dists_udf(_books_key([centroids]))(vec),
         lambda d, i: F.struct(
             F.round(d, 6).alias("dist"),
             (i + 1).cast("integer").alias("cid"),
         ),
     )
-    return F.array_sort(scored)[0]
+
+
+def _nearest_struct(vec: Column, centroids: list[list[float]]) -> Column:
+    """(dist, cid) struct of the nearest centroid (``_dist_structs``)."""
+    return F.array_sort(_dist_structs(vec, centroids))[0]
 
 
 def nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
     """1-based id of the centroid nearest to ``vec`` (see
-    ``_nearest_struct`` for the rounding/tie contract)."""
+    ``_dist_structs`` for the rounding/tie contract)."""
     return _nearest_struct(vec, centroids)["cid"]
 
 
-def lloyd_kmeans(
-    corpus: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> tuple[DataFrame, list[list[float]]]:
-    """Deterministic Lloyd's k-means. Returns ``(assignments,
-    centroids)`` where assignments has ``(id_col, cluster_id, dist)``
-    (dist = round(sq_dist to own centroid, 6)) under the FINAL
-    centroids, and centroids is the final k×dim (rounded) list.
+def _pq_codes_sql(dists_attr: str, m: int, k: int) -> str:
+    """SQL text of the per-subspace round-6 + smaller-cid tie-break
+    over a PROJECTED raw-distance column (``_sq_dists_udf`` output):
+    entry j is the cid of the first element of ``array_sort`` over
+    slice j's (dist, cid) structs."""
+    parts = [
+        f"(array_sort(transform(slice({dists_attr}, {j * k + 1}, {k}), "
+        "(d, i) -> named_struct('dist', round(d, 6), "
+        "'cid', cast(i + 1 AS int)))))[0].cid"
+        for j in range(m)
+    ]
+    return "array(" + ", ".join(parts) + ")"
 
-    Init = the k smallest ids' vectors (a deterministic sample — the
-    k-means++ refinement would slot in here without changing the
-    dataflow). Each refinement computes per-dimension means with one
-    partially-aggregated groupBy and collects only k rows to the
-    driver. A cluster that loses all members keeps its previous
-    centroid (mirrored by the oracle's coalesce).
-    """
-    if iters < 0:
-        raise ValueError("iters must be >= 0")
-    init_rows = (
-        corpus.select(
-            F.col(id_col).alias("cid"), _as_double(F.col(vec_col)).alias("cv")
-        )
-        .orderBy("cid")
-        .limit(k)
-        .collect()
+
+def _pq_codes_over(
+    df: DataFrame, vec_attr: str, codebooks
+) -> tuple[DataFrame, Column]:
+    """array<int> of the m 1-based nearest-sub-centroid codes of
+    ``df[vec_attr]``: one kernel pass for all raw distances, projected
+    as the NAMED column ``__pqd`` so the per-subspace round-6 +
+    smaller-cid tie-break can be rendered as SQL text over it
+    (``_pq_codes_sql``) — the ``_dist_structs`` assignment contract
+    for all m subspaces in one projection with no shuffle. Returns
+    ``(projected_df, codes)``; ``__pqd`` disappears in the caller's
+    select, and the projection collapse leaves one ArrowEvalPython
+    under the tie-break tree."""
+    dists = _sq_dists_udf(_books_key(codebooks))(F.col(vec_attr))
+    return df.withColumn("__pqd", dists), F.expr(
+        _pq_codes_sql("`__pqd`", len(codebooks), len(codebooks[0]))
     )
-    cents = [list(r["cv"]) for r in init_rows]
-    for r, c in zip(init_rows, cents):
+
+
+def _lloyd(
+    corpus: DataFrame,
+    m: int,
+    k: int,
+    iters: int,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    fn_name: str,
+) -> tuple[DataFrame, list[list[list[float]]]]:
+    """The one deterministic Lloyd loop: ``m`` codebooks of ``k``
+    centroids, codebook j over the j-th dim/m slice of every vector —
+    ``lloyd_kmeans`` is m=1, ``functions.pq.pq_train`` trains all m
+    subspaces in this same dataflow. Returns ``(base, books)``: the
+    guarded ``(id_col, __v)`` projection and the final codebooks.
+
+    Init = slices of the k smallest ids' vectors (a deterministic
+    sample — the k-means++ refinement would slot in here without
+    changing the dataflow); fewer than k rows give fewer centroids,
+    an empty corpus empty codebooks (no iteration runs). Each
+    iteration is one kernel assignment pass for all m codebooks, ONE
+    partially aggregated groupBy over (slice, cid) of round-6
+    per-dimension means, and one collect of at most m*k rows
+    (model-sized — the driver-side centroid update MLlib's k-means
+    does). A cluster that loses all members keeps its previous
+    centroid (mirrored by the oracle's coalesce)."""
+    if iters < 0:
+        raise ValueError(f"{fn_name}: iters must be >= 0")
+    dsub = dim // m
+    init_rows = _seed_rows(corpus, id_col, vec_col, k)
+    for r in init_rows:
+        c = r["cv"]
         if c is None or len(c) != dim:
             # a dim mismatch otherwise surfaces much later as NULL
             # per-dimension means leaking into the next centroid
@@ -248,42 +314,77 @@ def lloyd_kmeans(
             for x in c
         ):
             raise ValueError(
-                "lloyd_kmeans: non-finite vector component for id "
+                f"{fn_name}: non-finite vector component for id "
                 f"{r['cid']} (seed row)"
             )
-    base = ensure_parallelism(corpus).select(
-        F.col(id_col), _guarded_vec(id_col, vec_col, dim, "lloyd_kmeans")
-    )
-    for _ in range(iters):
-        assigned = base.withColumn(
-            "cluster_id", nearest_centroid(F.col("__v"), cents)
-        )
-        # per-dimension means rendered as parsed SQL text (one py4j
-        # round trip each instead of the 5-call round/avg/getitem
-        # chain — ~dim x 4 fewer calls per iteration; `__v`[i] is the
-        # same 0-based GetArrayItem the Column form builds)
+    books = [
+        [list(r["cv"][j * dsub : (j + 1) * dsub]) for r in init_rows]
+        for j in range(m)
+    ]
+    base = _guarded_base(corpus, id_col, vec_col, dim, fn_name)
+    for _ in range(iters if init_rows else 0):
+        withd, codes = _pq_codes_over(base, "__v", books)
+        # per-(slice, cluster) means over that slice's dsub dims
+        # (element_at is 1-based and __subi 0-based), rendered as
+        # parsed SQL text — one round trip per dim instead of the
+        # 6-call round/avg/element_at/arith chain
         mean_rows = (
-            assigned.groupBy("cluster_id")
+            withd.select(
+                F.col("__v"), F.posexplode(codes).alias("__subi", "__cid")
+            )
+            .groupBy("__subi", "__cid")
             .agg(
                 *[
-                    F.expr(f"round(avg(`__v`[{i}]), 6) AS d{i}")
-                    for i in range(dim)
+                    F.expr(
+                        f"round(avg(element_at(`__v`, "
+                        f"`__subi` * {dsub} + {i + 1})), 6) AS d{i}"
+                    )
+                    for i in range(dsub)
                 ]
             )
             .collect()
         )
-        by_cid = {
-            r["cluster_id"]: [r[f"d{i}"] for i in range(dim)]
+        by_key = {
+            (r["__subi"], r["__cid"]): [r[f"d{i}"] for i in range(dsub)]
             for r in mean_rows
         }
-        cents = [by_cid.get(cid + 1, cents[cid]) for cid in range(len(cents))]
-    nearest = _nearest_struct(F.col("__v"), cents)
-    out = base.select(
+        books = [
+            [by_key.get((j, c + 1), cent) for c, cent in enumerate(book)]
+            for j, book in enumerate(books)
+        ]
+    return base, books
+
+
+def _assigned(base: DataFrame, id_col: str, centroids) -> DataFrame:
+    """(id, cluster_id, dist) of a ``_guarded_vec`` projection: the
+    nearest centroid and its round-6 squared distance."""
+    nearest = _nearest_struct(F.col("__v"), centroids)
+    return base.select(
         F.col(id_col),
         nearest["cid"].alias("cluster_id"),
         nearest["dist"].alias("dist"),
     )
-    return out, cents
+
+
+def lloyd_kmeans(
+    corpus: DataFrame,
+    k: int = 8,
+    iters: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    dim: int = 64,
+) -> tuple[DataFrame, list[list[float]]]:
+    """Deterministic Lloyd's k-means — ``_lloyd`` with one codebook
+    over the whole vector. Returns ``(assignments, centroids)`` where
+    assignments has ``(id_col, cluster_id, dist)`` (dist = round(sq_dist
+    to own centroid, 6)) under the FINAL centroids, and centroids is
+    the final k×dim (rounded) list; an empty corpus gives no
+    centroids and an empty assignment.
+    """
+    base, (cents,) = _lloyd(
+        corpus, 1, k, iters, id_col, vec_col, dim, "lloyd_kmeans"
+    )
+    return _assigned(base, id_col, cents), cents
 
 
 def _centroid_dim(centroids, fn_name: str) -> int:
@@ -312,15 +413,8 @@ def assign_clusters(
     assignment-only narrow map (reuse a trained quantizer without
     re-running Lloyd)."""
     dim = _centroid_dim(centroids, "assign_clusters")
-    base = ensure_parallelism(corpus).select(
-        F.col(id_col), _guarded_vec(id_col, vec_col, dim, "assign_clusters")
-    )
-    nearest = _nearest_struct(F.col("__v"), centroids)
-    return base.select(
-        F.col(id_col),
-        nearest["cid"].alias("cluster_id"),
-        nearest["dist"].alias("dist"),
-    )
+    base = _guarded_base(corpus, id_col, vec_col, dim, "assign_clusters")
+    return _assigned(base, id_col, centroids)
 
 
 def semantic_dedup(
@@ -404,11 +498,7 @@ def semantic_dedup(
         # assignment kernel + checkpoint otherwise materialize on the
         # input's single fixture partition, and both pair-join
         # branches then read a one-partition relation
-        ensure_parallelism(corpus)
-        .select(
-            F.col(id_col),
-            _guarded_vec(id_col, vec_col, dim, "semantic_dedup"),
-        )
+        _guarded_base(corpus, id_col, vec_col, dim, "semantic_dedup")
         .withColumn(
             "cluster_id", _nearest_struct(F.col("__v"), cents)["cid"]
         )
@@ -438,17 +528,14 @@ def semantic_dedup(
                 f"max_cluster_rows=None to override."
             )
     assigned = rel.select(id_col, "cluster_id")
-    a = rel.select(
-        F.col(id_col).alias("id_a"),
-        F.col("cluster_id"),
-        F.col("__v").alias("va"),
-        F.col("__n").alias("na"),
-    )
-    b = rel.select(
-        F.col(id_col).alias("id_b"),
-        F.col("cluster_id"),
-        F.col("__v").alias("vb"),
-        F.col("__n").alias("nb"),
+    a, b = (
+        rel.select(
+            F.col(id_col).alias(f"id_{s}"),
+            F.col("cluster_id"),
+            F.col("__v").alias(f"v{s}"),
+            F.col("__n").alias(f"n{s}"),
+        )
+        for s in "ab"
     )
     dropped = (
         a.join(b, "cluster_id")

@@ -1898,24 +1898,14 @@ def near_dup_edge_pairs(docs: DataFrame) -> DataFrame:
     """Near-dup pair source shared by the minhash/clustering/curation
     gates: (id_a, id_b, jaccard) with jaccard rounded to 6 dp.
 
-    Default: banded MinHash+LSH, the 100 TB scale path — gated equal to
-    the exact pair set by the recall-1 tripwire (see
-    `minhash_near_dup_docs`). Contingency, behind
-    ``SPARK_GRAFT_ROBUST_NEAR_DUP_EDGES=1``: the exact inverted-index
-    n-gram Jaccard operator. If a `documents` fixture regeneration ever
-    trips the recall-1 gates, setting the flag flips all three
-    dependent gates to the robust edge source — their oracles recompute
-    exact-Jaccard closures and stay valid regardless of LSH recall — so
-    the rest of the pipeline keeps being verified while the banding
-    recall is re-validated for the new corpus.
+    Banded MinHash+LSH, the 100 TB scale path — gated equal to the
+    exact pair set by the recall-1 tripwire (see
+    `minhash_near_dup_docs`).
     tests/test_dedup.py::test_robust_edge_source_agrees_with_default
-    proves both sources produce identical pairs AND jaccard values on
+    proves it produces the same pairs AND jaccard values as the exact
+    inverted-index n-gram Jaccard operator (``ngram_jaccard_pairs``) on
     the current corpus (which is precision 1 + recall 1 in one check).
     """
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_ROBUST_NEAR_DUP_EDGES"):
-        return ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
     return minhash_near_dup_pairs(
         docs, "doc_id", "text", num_hashes=32, bands=8,
         jaccard_threshold=0.5, persisted=_persisted(docs.sparkSession),
@@ -1930,11 +1920,9 @@ def minhash_near_dup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows at threshold 0.5 gives recall 1 ON THIS CORPUS AND SEED — an
     empirical property of the fixture, NOT of the algorithm. This gate
     is a deliberate tripwire: change the fixture, seed, band count, or
-    threshold and a recall miss fails the hash loudly. The pre-armed
-    fallback is ``SPARK_GRAFT_ROBUST_NEAR_DUP_EDGES=1`` (see
-    `near_dup_edge_pairs`): it swaps this and the two downstream gates
-    to the exact edge source so the oracles keep verifying the pipeline
-    while banding recall is re-validated. Checked at sf0.001/sf0.01,
+    threshold and a recall miss fails the hash loudly; re-validate the
+    banding recall against ``ngram_jaccard_pairs`` (the exact edge
+    source) before changing any of them. Checked at sf0.001/sf0.01,
     pinned by tests/test_dedup.py."""
     docs = _t(spark, sf_dir, "documents")
     return near_dup_edge_pairs(docs)
@@ -3410,11 +3398,11 @@ WHERE bit_count(xor(a.sig, b.sig)) <= 3
 def ann_lsh_suite_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed top-k at BOTH probe radii in one parameterized
     entry (round-9 registry fold: single-probe ``lsh_topk`` is
-    ``lsh_multiprobe_topk`` at Hamming radius 0 — one shared
-    ``_lsh_topk_impl`` in similarity.py — so the former separate
-    ``ann_lsh_topk`` / ``ann_lsh_multiprobe_topk`` entries collapse
-    into one driver row with a ``variant`` tag; full machinery
-    coverage, one window slot).
+    ``lsh_multiprobe_topk`` at Hamming radius 0 — both are the shared
+    ``_cosine_topk`` skeleton in similarity.py keyed on bucket id — so
+    the former separate ``ann_lsh_topk`` / ``ann_lsh_multiprobe_topk``
+    entries collapse into one driver row with a ``variant`` tag; full
+    machinery coverage, one window slot).
 
     probe0: candidates restricted to the query's own bucket (equi-join
     on bucket id, ~|corpus|/2^n_planes candidates per query).

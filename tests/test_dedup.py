@@ -106,23 +106,19 @@ def test_simhash_near_dups(spark):
     assert all(3 not in k for k in pairs)
 
 
-def test_robust_edge_source_agrees_with_default(spark, monkeypatch):
-    """Pre-armed tripwire fallback (queries.near_dup_edge_pairs): on the
-    current corpus the default MinHash+LSH edge source and the robust
-    exact n-gram Jaccard source must produce IDENTICAL pairs and
-    jaccard values — one check covering precision 1 (every verified
-    candidate is an exact pair with the same jaccard) and recall 1
-    (every exact pair is found by the banding). Also proves the env
-    flag actually switches the source (exact path has no banding
-    stages)."""
+def test_robust_edge_source_agrees_with_default(spark):
+    """Recall-1 tripwire of the near-dup edge source
+    (queries.near_dup_edge_pairs): on the current corpus the banded
+    MinHash+LSH edge source and the exact n-gram Jaccard operator must
+    produce IDENTICAL pairs and jaccard values — one check covering
+    precision 1 (every verified candidate is an exact pair with the
+    same jaccard) and recall 1 (every exact pair is found by the
+    banding)."""
     from cdk_datalake_ingest_spark.queries import near_dup_edge_pairs
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-
-    monkeypatch.delenv("SPARK_GRAFT_ROBUST_NEAR_DUP_EDGES", raising=False)
     default = near_dup_edge_pairs(docs)
-    monkeypatch.setenv("SPARK_GRAFT_ROBUST_NEAR_DUP_EDGES", "1")
-    robust = near_dup_edge_pairs(docs)
+    robust = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
 
     d = {(r.id_a, r.id_b): r.jaccard for r in default.collect()}
     e = {(r.id_a, r.id_b): r.jaccard for r in robust.collect()}
@@ -131,11 +127,6 @@ def test_robust_edge_source_agrees_with_default(spark, monkeypatch):
     assert not missing, f"LSH recall miss on current corpus: {missing}"
     assert not extra, f"verified candidates not in exact set: {extra}"
     assert d == e, "jaccard values differ between the two edge sources"
-
-    # the flag really switches implementations: the exact source plans
-    # an explode/generate of shingles, the LSH source a band hash join
-    assert "xxhash64" in default._jdf.queryExecution().optimizedPlan().toString()
-    assert "xxhash64" not in robust._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_incremental_near_dup_index_roundtrips_storage(spark, tmp_path):

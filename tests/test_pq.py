@@ -115,6 +115,13 @@ def test_boundary_raises(spark, emb):
         pq_train(emb, m=7, dim=64)
     with pytest.raises(ValueError, match="iters"):
         pq_train(emb, iters=-1)
+    # a NaN in a seed row is refused even when no iteration runs
+    nan_seed = spark.createDataFrame(
+        [(1, [float("nan")] + [1.0] * 63), (2, [1.0] * 64)],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="non-finite vector component"):
+        pq_train(nan_seed, m=16, k=2, iters=0)
     with pytest.raises(ValueError, match="non-empty"):
         pq_encode(emb, [])
     ragged = [[[0.0, 1.0]], [[0.0]]]
@@ -215,6 +222,12 @@ def test_train_with_fewer_rows_than_k(spark):
     empty = few.filter("vec_id < 0")
     with pytest.raises(ValueError, match="empty"):
         pq_train(empty, m=16, k=16)
+    # the shared Lloyd loop leaves the raise to pq_train: k-means on
+    # the empty corpus trains no centroids and assigns nothing
+    from cdk_datalake_ingest_spark.operators.semantic import lloyd_kmeans
+
+    assigned, cents = lloyd_kmeans(empty, k=16, iters=2)
+    assert cents == [] and assigned.collect() == []
 
 
 def test_ivfadc_candidates_come_only_from_probed_lists(spark, emb, books, coarse):
@@ -231,16 +244,14 @@ def test_ivfadc_candidates_come_only_from_probed_lists(spark, emb, books, coarse
         for r in assign_clusters(emb, coarse).collect()
     }
     # recompute the 2-probe set per query via the operator's own order
-    from cdk_datalake_ingest_spark.functions.pq import _coarse_probe_structs
     from cdk_datalake_ingest_spark.functions.similarity import _as_double
+    from cdk_datalake_ingest_spark.operators.semantic import _dist_structs
 
     pr = q.select(
         F.col("vec_id"),
         F.slice(
             F.array_sort(
-                _coarse_probe_structs(
-                    _as_double(F.col("embedding")), coarse
-                )
+                _dist_structs(_as_double(F.col("embedding")), coarse)
             ),
             1,
             2,

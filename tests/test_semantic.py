@@ -226,3 +226,57 @@ def test_guarded_training_raises_on_null_component(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     with pytest.raises(Exception, match="non-finite vector component"):
         lloyd_kmeans(df, k=2, iters=1, dim=2)
+
+
+def test_distance_kernel_matches_sq_dist_fold_bit_for_bit(spark, sf_dir):
+    """The one Arrow squared-distance kernel returns the RAW distances
+    of the ``_sq_dist`` fold bit for bit, at M=1 (k-means) and M=4
+    (PQ subspaces): per-element square, sequential left-to-right sum.
+    The hand-built row makes the summation order observable — one
+    large term then many small ones, which a pairwise (np.sum) or
+    dot-product reduction rounds differently."""
+    import numpy as np
+
+    from cdk_datalake_ingest_spark.functions.similarity import _as_double
+    from cdk_datalake_ingest_spark.operators.semantic import (
+        _books_key,
+        _sq_dist,
+        _sq_dists_udf,
+    )
+
+    fixture = (
+        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        .orderBy("vec_id")
+        .limit(12)
+        .select(_as_double(F.col("embedding")).alias("v"))
+    )
+    cents = [r["v"] for r in fixture.limit(3).collect()]
+    hand = [cents[0][0] + 1e8] + [x + 1.0 for x in cents[0][1:]]
+    d0 = np.asarray(hand) - np.asarray(cents[0])
+    assert float(np.sum(d0 * d0)) != float(np.cumsum(d0 * d0)[-1])
+    vecs = fixture.unionByName(
+        spark.createDataFrame([(hand,)], "v array<double>")
+    )
+    for m in (1, 4):
+        dsub = 64 // m
+        books = [[c[j * dsub : (j + 1) * dsub] for c in cents] for j in range(m)]
+        refs = [(j, c) for j in range(m) for c in range(len(cents))]
+        sides = vecs.select(
+            _sq_dists_udf(_books_key(books))(F.col("v")).alias("kernel"),
+            *[
+                F.slice("v", j * dsub + 1, dsub).alias(f"s{j}")
+                for j in range(m)
+            ],
+            *[
+                F.array(*[F.lit(x) for x in books[j][c]]).alias(f"c{j}_{c}")
+                for j, c in refs
+            ],
+        )
+        got = sides.select(
+            "kernel",
+            *[_sq_dist(f"s{j}", f"c{j}_{c}").alias(f"r{j}_{c}") for j, c in refs],
+        ).collect()
+        assert len(got) == 13
+        for r in got:
+            want = [r[f"r{j}_{c}"].hex() for j, c in refs]
+            assert [x.hex() for x in r["kernel"]] == want, m

@@ -240,7 +240,7 @@ NOTES = {
     ),
     "ann_lsh_suite_topk": (
         "LSH top-k at both probe radii (round-9 fold; the union's two "
-        "branches share one _lsh_topk_impl). probe0 is the plain "
+        "branches share the _cosine_topk skeleton). probe0 is the plain "
         "bucket equi-join; for probe1 each query explodes to its own bucket "
         "plus the n_planes Hamming-1 neighbor buckets (9 probe keys "
         "at n_planes=8), and the query side — still tiny — broadcasts "

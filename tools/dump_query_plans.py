@@ -1,8 +1,10 @@
-"""Dump .explain('formatted') for bench queries into plans/r14/.
+"""Dump .explain('formatted') for bench queries into a plan round
+directory (e.g. ``plans/r16``), one ``<query>_<tag>.txt`` per query.
 
-Usage: python tools/dump_r14_plans.py before|after [query ...]
-Defaults to every bench query when none are named. Eager/side-effecting
-queries still return a DataFrame — we explain that returned plan.
+Usage: python tools/dump_query_plans.py OUT_DIR before|after [query ...]
+OUT_DIR is relative to the repo root unless absolute. Defaults to every
+bench query when none are named. Eager/side-effecting queries still
+return a DataFrame — we explain that returned plan.
 """
 
 from __future__ import annotations
@@ -16,14 +18,14 @@ SF = "/root/testdata/sf0.001"
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    out_dir = Path(__file__).resolve().parents[1] / sys.argv[1]
+    tag = sys.argv[2]
+    names = sys.argv[3:]
     from cdk_datalake_ingest_spark.queries import QUERIES
     from cdk_datalake_ingest_spark.session import get_spark
 
     from bench import bench_queries
 
-    out_dir = Path(__file__).resolve().parents[1] / "plans" / "r14"
     out_dir.mkdir(parents=True, exist_ok=True)
     spark = get_spark("plans")
     spark.sparkContext.setLogLevel("ERROR")
