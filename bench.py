@@ -28,6 +28,11 @@ comparison. Sweep 0's cold time stays in first_run, every raw sample in
 boundary so a contaminated run is self-evident from the committed
 artifact. Set SPARK_GRAFT_BENCH_REPEATS=1 for single-shot.
 
+The detail file also carries each run's Janino compile count and
+compile milliseconds (`codegen_compiles` / `codegen_compile_ms`, laid
+out like `runs`): a warm sweep that still compiles is recompiling code
+the session has already built.
+
 SELF-HEALING (r13): a warm sweep whose total exceeds the fastest warm
 sweep by >15% is flagged as contaminated (`flag_contaminated`); the
 harness then runs up to 2 replacement sweeps and computes every
@@ -94,6 +99,8 @@ def main() -> None:
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
     order = bench_queries()
     all_runs: dict[str, list[float]] = {name: [] for name in order}
+    compiles: dict[str, list[int]] = {name: [] for name in order}
+    compile_ms: dict[str, list[float]] = {name: [] for name in order}
     load_avgs: list[float] = []
     sweep_totals: list[float] = []
 
@@ -101,11 +108,15 @@ def main() -> None:
         load_avgs.append(round(os.getloadavg()[0], 2))
         t_sweep = time.perf_counter()
         for name in order:
+            n0, ms0 = codegen_counters(spark)
             t0 = time.perf_counter()
             QUERIES[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
             all_runs[name].append(round(time.perf_counter() - t0, 3))
+            n1, ms1 = codegen_counters(spark)
+            compiles[name].append(n1 - n0)
+            compile_ms[name].append(round(ms1 - ms0, 1))
         sweep_totals.append(round(time.perf_counter() - t_sweep, 3))
 
     def contaminated() -> list[int]:
@@ -231,6 +242,12 @@ def main() -> None:
                 "runs": all_runs,
                 "trimmed_min": trimmed_min,
                 "sweep_totals": sweep_totals,
+                "codegen_compiles": compiles,
+                "codegen_compile_ms": compile_ms,
+                "sweep_compiles": [
+                    sum(c[i] for c in compiles.values())
+                    for i in range(len(sweep_totals))
+                ],
             },
             indent=2,
         )
@@ -242,6 +259,17 @@ def main() -> None:
     # \r-frames to stdout and must not land after the summary line.
     spark.stop()
     print(line, flush=True)
+
+
+def codegen_counters(spark) -> tuple[int, float]:
+    """(classes compiled, compile ms) by Janino in this JVM so far."""
+    jvm = spark._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    generator = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return (
+        metrics.METRIC_COMPILATION_TIME().getCount(),
+        generator.compileTime() / 1e6,  # a nanosecond sum
+    )
 
 
 def flag_contaminated(sweep_totals: list[float]) -> list[int]:

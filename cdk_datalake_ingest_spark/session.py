@@ -18,6 +18,7 @@ Scale notes (100 TB / 1000-executor target):
 
 from __future__ import annotations
 
+import logging
 import os
 import re
 
@@ -31,6 +32,8 @@ try:  # delta-spark is optional; the engine falls back to ManagedTable.
 except Exception:  # pragma: no cover - environment-dependent
     configure_spark_with_delta_pip = None
     HAS_DELTA = False
+
+logger = logging.getLogger(__name__)
 
 #: Conf applied to every session the engine creates. Entries that are
 #: runtime-settable are also applied by :func:`apply_runtime_conf` so the
@@ -63,10 +66,21 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Arrow for the (rare) pandas-interop paths (SimHash, multimodal).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Compiled-class cache (static: fixed when the SparkContext starts).
+    # Spark keeps 100 classes; the 113 bench gates generate 1607 distinct
+    # ones, so at 100 a warm sweep recompiled 2139 classes with Janino
+    # (lake_query: 12.7 compiles, ~0.1 s of a 0.44 s query). 4096 is
+    # ~2.5x the working set: the LRU evicts per segment, which fills
+    # unevenly. Cost: driver VmHWM 2.09 -> 2.16 GB over the full
+    # registry with an unbounded cache (4 cores; bench.py at sf0.01 with
+    # 4096: 2.10-2.15 -> 2.15-2.24 GB).
+    "spark.sql.codegen.cache.maxEntries": "4096",
 }
 
+#: Keys in ENGINE_CONF that only a session builder can set.
+_STATIC_KEYS = ("spark.sql.codegen.cache.maxEntries",)
 #: Keys in ENGINE_CONF that can be set on a live session.
-_RUNTIME_KEYS = tuple(ENGINE_CONF)
+_RUNTIME_KEYS = tuple(k for k in ENGINE_CONF if k not in _STATIC_KEYS)
 
 
 def ensure_parallelism(df, min_partitions: int | None = None):
@@ -148,13 +162,16 @@ _VERIFIED_IDS_CAP = 256
 #   checkpoint would mark every input file already processed;
 # - ``kmeans``, ``pq``, ``bpe``: trained k-means centroids, PQ
 #   codebooks and BPE merge tables (train once, reuse everywhere);
-# - ``supp_count``: sf_dir -> supplier row count (``queries._partsupp``).
+# - ``supp_count``: sf_dir -> supplier row count (``queries._partsupp``);
+# - ``static_conf_checked``: :func:`apply_runtime_conf` compared the
+#   session's static conf with ENGINE_CONF (it warns once per session).
 def engine_state(spark: SparkSession) -> dict:
     """``spark``'s engine state, created on first use."""
     return spark.__dict__.get(_STATE_ATTR) or spark.__dict__.setdefault(
         _STATE_ATTR,
         {"gate_persisted": [], "tables": {}, "verified_ids": {}, "views": {},
-         "staging": {}, "kmeans": {}, "pq": {}, "bpe": {}, "supp_count": {}},
+         "staging": {}, "kmeans": {}, "pq": {}, "bpe": {}, "supp_count": {},
+         "static_conf_checked": False},
     )
 
 
@@ -328,12 +345,26 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime-settable conf to an existing session.
 
     Used when the caller (e.g. a verification harness) owns the session.
+    Static keys cannot be set on a live session: the first call on a
+    session logs one warning if it holds other values for them, which
+    its own builder must set.
     """
     for k in _RUNTIME_KEYS:
-        try:
-            spark.conf.set(k, ENGINE_CONF[k])
-        except Exception:
-            pass  # static conf on this build; the default is acceptable
+        spark.conf.set(k, ENGINE_CONF[k])
+    state = engine_state(spark)
+    if not state["static_conf_checked"]:
+        state["static_conf_checked"] = True
+        live = {k: spark.conf.get(k, None) for k in _STATIC_KEYS}
+        off = {k: v for k, v in live.items() if v != ENGINE_CONF[k]}
+        if off:
+            logger.warning(
+                "static conf differs from the engine's and cannot be "
+                "set on a live session; set it in the session builder: %s",
+                ", ".join(
+                    f"{k}={v or 'Spark default'} (engine: {ENGINE_CONF[k]})"
+                    for k, v in off.items()
+                ),
+            )
     return spark
 
 

@@ -1,8 +1,12 @@
 """default_driver_memory: the local-mode driver-heap sizing rule
 (r15 optimization — guide §5 applied to the local-mode driver that
-hosts every executor slot), and when get_spark applies it. No Spark
+hosts every executor slot), and when get_spark applies it; the static
+engine conf every get_spark builder carries, and how
+apply_runtime_conf treats it on a session built elsewhere. No Spark
 session: get_spark's builder options are captured instead of
-launching a JVM."""
+launching a JVM, and apply_runtime_conf runs on a stub session."""
+
+import logging
 
 import pytest
 from pyspark.sql import SparkSession
@@ -78,3 +82,57 @@ def test_spark_defaults_conf_wins(builder_options, tmp_path, line):
 def test_commented_spark_defaults_entry_is_ignored(builder_options, tmp_path):
     (tmp_path / "spark-defaults.conf").write_text("# spark.driver.memory 2g\n")
     assert builder_options("local[4]")["spark.driver.memory"] == "3g"
+
+
+@pytest.mark.parametrize(
+    "master", ["local[4]", "local-cluster[2,1,1024]", "spark://host:7077"]
+)
+def test_every_master_gets_the_codegen_cache_size(builder_options, master):
+    # static conf: only the builder can set it, on any master
+    assert builder_options(master)["spark.sql.codegen.cache.maxEntries"] == "4096"
+
+
+class _StubConf:
+    """A live session's conf: static keys refuse ``set`` like Spark's."""
+
+    def __init__(self, static: dict):
+        self.values = dict(static)
+
+    def set(self, key, value):
+        if key in S._STATIC_KEYS:
+            raise RuntimeError(f"CANNOT_MODIFY_STATIC_CONFIG {key}")
+        self.values[key] = value
+
+    def get(self, key, default=None):
+        return self.values.get(key, default)
+
+
+class _StubSession:
+    def __init__(self, static: dict):
+        self.conf = _StubConf(static)
+
+
+def _conf_warnings(caplog):
+    return [r for r in caplog.records if r.name == S.__name__]
+
+
+@pytest.mark.parametrize("static", [{}, {"spark.sql.codegen.cache.maxEntries": "100"}])
+def test_foreign_session_warns_once_about_static_conf(caplog, static):
+    caplog.set_level(logging.WARNING, logger=S.__name__)
+    spark = _StubSession(static)
+    for _ in range(3):  # once per gate, as queries._prep does
+        S.apply_runtime_conf(spark)
+    (warning,) = _conf_warnings(caplog)
+    assert "spark.sql.codegen.cache.maxEntries" in warning.getMessage()
+    assert all(spark.conf.values[k] == S.ENGINE_CONF[k] for k in S._RUNTIME_KEYS)
+    # each session is checked on its own
+    S.apply_runtime_conf(_StubSession(static))
+    assert len(_conf_warnings(caplog)) == 2
+
+
+def test_engine_built_session_does_not_warn(caplog):
+    caplog.set_level(logging.WARNING, logger=S.__name__)
+    spark = _StubSession({k: S.ENGINE_CONF[k] for k in S._STATIC_KEYS})
+    S.apply_runtime_conf(spark)
+    S.apply_runtime_conf(spark)
+    assert _conf_warnings(caplog) == []
