@@ -697,7 +697,8 @@ def bpe_train_merges(
     reconsider, the batch does not), which is why it is opt-in and the
     default stays 1.  Cost: driver round-trips drop from ``n_merges``
     to ~``n_merges / batch_size`` — the dominant term at production
-    model sizes, measured in tools/bpe_scale_probe.py --train.
+    model sizes, measured by the round-11 train probe (SCALE.md's BPE
+    training table).
     ``n_pairs`` records the count at selection time; ``step`` stays
     the 1-based model order.  A round that finds candidates but fewer
     than ``batch_size`` disjoint ones simply advances by what it
@@ -715,7 +716,7 @@ def bpe_train_merges(
     if n_merges / batch_size > 256:
         # production-footgun guard: the latency term is ROUND-TRIPS
         # (~n_merges / batch_size, one collect each, ~0.15 s warm —
-        # measured in tools/bpe_scale_probe.py), so the condition
+        # measured by the round-11 train probe, SCALE.md), so the condition
         # scales with the quotient rather than special-casing the
         # batch_size=1 default (review catch: 32k merges at
         # batch_size=2 is still ~40 min of pure job latency). A
@@ -854,7 +855,7 @@ def _bpe_apply_merge(sym, lhs: str, rhs: str) -> "F.Column":
 BPE_SEGMENT_MAX_MERGES = 32
 
 #: auto-dispatch crossover for :func:`bpe_tokenize` — MEASURED at sf0.1
-#: (tools/bpe_scale_probe.py): the vocab path already matches inline at
+#: (SCALE.md's BPE apply table): the vocab path already matches inline at
 #: 6 merges and is 4.4x faster at 32, because the inline HOF chain is
 #: interpreted per word occurrence.  8 keeps inline only where its
 #: pure-map shape (no shuffle, no id_col requirement) outweighs the
@@ -961,7 +962,7 @@ def bpe_tokenize(
     trainer, so train/apply agreement holds by construction.
 
     Auto threshold is MEASURED, not guessed
-    (tools/bpe_scale_probe.py, sf0.1, min-of-2 warm): vocab already
+    (SCALE.md's BPE apply table, sf0.1, min-of-2 warm): vocab already
     edges out inline at 6 merges (1.60 vs 1.79 s) and is 4.4x faster
     at 32 (1.44 vs 6.38 s — the interpreted per-occurrence chain's
     linear-in-merges cost); vocab grows ~0.35 s per 32-merge stage

@@ -193,8 +193,8 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
       several unconditional positions — CaseWhen children are
       excluded from codegen subexpression elimination, so each
       reference re-ran the normalize regex.  Measured at sf0.1
-      (tools/fingerprint_probe.py, fingerprint_docs gate, median of
-      5): CaseWhen guard 2.37-2.39 s vs 1.79-2.09 s unguarded vs
+      (fingerprint_docs gate, median of 5; the round-11 table in
+      PLANS.md): CaseWhen guard 2.37-2.39 s vs 1.79-2.09 s unguarded vs
       2.04 s this form — the r10 1.29x driver regression, recovered
       with the guard semantics kept.
 

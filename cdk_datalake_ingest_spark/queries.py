@@ -1219,8 +1219,8 @@ GROUP BY 1
 
 def text_metrics_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan out the single-file fixture scan before the expression-heavy
-    # map stage (no-op at production partition counts; profiled as a
-    # single-task job in tools/hotspot_sweep.json)
+    # map stage (no-op at production partition counts; the r14 per-gate
+    # sweep measured it as a 0.3-0.6 s single-task job, OPTIMIZATION_r14.md §F)
     docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
     c = F.col("text")
     # project the token array once (r12, the curate_documents lesson:
@@ -1296,8 +1296,8 @@ FROM documents
 
 def lang_id_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan out the single-file fixture scan before the expression-heavy
-    # map stage (no-op at production partition counts; profiled as a
-    # single-task job in tools/hotspot_sweep.json)
+    # map stage (no-op at production partition counts; the r14 per-gate
+    # sweep measured it as a 0.3-0.6 s single-task job, OPTIMIZATION_r14.md §F)
     docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
     # staged hits shape (r12, the curate_documents lesson — and the
     # oracle's own CTE `h` shape below): tokens once, the four hit
@@ -1355,8 +1355,8 @@ FROM h
 
 def fingerprint_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan out the single-file fixture scan before the expression-heavy
-    # map stage (no-op at production partition counts; profiled as a
-    # single-task job in tools/hotspot_sweep.json)
+    # map stage (no-op at production partition counts; the r14 per-gate
+    # sweep measured it as a 1.9 s single-task job, OPTIMIZATION_r14.md §F)
     docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
     from cdk_datalake_ingest_spark.operators.dedup import word_shingles
 
@@ -1732,8 +1732,8 @@ def decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdk_datalake_ingest_spark.operators.dedup import word_shingles
 
     # fan out the single-file fixture scan before the expression-heavy
-    # map stage (no-op at production partition counts; profiled as a
-    # single-task job in tools/hotspot_sweep.json)
+    # map stage (no-op at production partition counts; the r14 per-gate
+    # sweep measured it as a 1.6 s single-task job, OPTIMIZATION_r14.md §F)
     docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
     grams = F.array_distinct(word_shingles(F.col("text"), DECONTAM_NGRAM))
     train = docs.filter(F.col("source") != DECONTAM_EVAL_SOURCE)
@@ -1801,8 +1801,9 @@ def decontaminate_multi_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdk_datalake_ingest_spark.operators.dedup import word_shingles
 
     # fan out the single-file fixture scan before the expression-heavy
-    # map stage (no-op at production partition counts; profiled as a
-    # single-task job in tools/hotspot_sweep.json)
+    # map stage (no-op at production partition counts; the r14 per-gate
+    # sweep measured the text gates' map stages on this scan as
+    # 0.3-1.9 s single-task jobs, OPTIMIZATION_r14.md §F)
     docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
     grams = F.array_distinct(word_shingles(F.col("text"), DECONTAM_NGRAM))
     evals = list(DECONTAM_MULTI_SOURCES)
@@ -2042,10 +2043,10 @@ def curate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan has thousands of natural partitions and this is a no-op
     # (ensure_parallelism only repartitions UP).
     enrich_src = ensure_parallelism(docs)
-    # Staged enrich (round-12 perf fix, attributed by
-    # tools/normalize_ab_probe.py: the r11 normalize body re-evaluated
-    # through ~10 expression positions cost a measured 1.36x on this
-    # gate). Each stage projects a NON-CHEAP alias referenced more
+    # Staged enrich (round-12 perf fix, attributed by a paired A/B in
+    # PLANS.md "Round-12: the three r11 weak movers": the r11 normalize
+    # body re-evaluated through ~10 expression positions cost a
+    # measured 1.36x on this gate). Each stage projects a NON-CHEAP alias referenced more
     # than once downstream — CollapseProject keeps such projects
     # separate, so normalize_text runs ONCE per row, the token split
     # once, and each language's stopword filter once (the oracle's CTE
@@ -2132,8 +2133,8 @@ def curate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         # shingle/MinHash/band stage in near_dup_edge_pairs, which
         # otherwise runs as ONE task over the un-fanned docs scan —
         # profiled at 2.2 s of the gate's 8.3 s fresh-session wall
-        # (tools/hotspot_sweep.py max_1task_job). No-op at production
-        # partition counts.
+        # (the r14 per-gate sweep's slowest single-task job,
+        # OPTIMIZATION_r14.md §F). No-op at production partition counts.
         surv_text = ensure_parallelism(docs.select("doc_id", "text")).join(
             surv.select("doc_id"), "doc_id"
         )
@@ -2237,8 +2238,8 @@ def pii_scrub_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: a pure map stage — no shuffle, no UDF; at 100 TB this
     is scan-bound and pipelines with any downstream filter."""
     # fan out the single-file fixture scan before the expression-heavy
-    # map stage (no-op at production partition counts; profiled as a
-    # single-task job in tools/hotspot_sweep.json)
+    # map stage (no-op at production partition counts; the r14 per-gate
+    # sweep measured it as a 0.3-0.6 s single-task job, OPTIMIZATION_r14.md §F)
     docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
     d = F.col("doc_id")
     injected = F.concat(
@@ -2316,8 +2317,9 @@ def repetition_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # fan out the single-file fixture scan before the expression-heavy
-    # map stage (no-op at production partition counts; profiled as a
-    # single-task job in tools/hotspot_sweep.json)
+    # map stage (no-op at production partition counts; the r14 per-gate
+    # sweep measured the text gates' map stages on this scan as
+    # 0.3-1.9 s single-task jobs, OPTIMIZATION_r14.md §F)
     docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
     grams = docs.select(
         "doc_id", word_shingles(F.col("text"), 2).alias("__g")
@@ -3887,8 +3889,8 @@ def token_stats_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token budgeting: whitespace tokens vs BPE-ish pre-tokenizer
     pieces vs regex words."""
     # fan out the single-file fixture scan before the expression-heavy
-    # map stage (no-op at production partition counts; profiled as a
-    # single-task job in tools/hotspot_sweep.json)
+    # map stage (no-op at production partition counts; the r14 per-gate
+    # sweep measured it as a 0.3-0.6 s single-task job, OPTIMIZATION_r14.md §F)
     docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
     c = F.col("text")
     return docs.select(
@@ -5133,8 +5135,8 @@ def gopher_rules_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the token array; ratios are exact integer divisions so the
     threshold comparisons cannot drift cross-engine."""
     # fan out the single-file fixture scan before the expression-heavy
-    # map stage (no-op at production partition counts; profiled as a
-    # single-task job in tools/hotspot_sweep.json)
+    # map stage (no-op at production partition counts; the r14 per-gate
+    # sweep measured it as a 0.7 s single-task job, OPTIMIZATION_r14.md §F)
     docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
     c = F.col("text")
     # two-stage shape (r12, the curate_documents lesson): tokens once,
@@ -5296,8 +5298,8 @@ def hash_embed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cdk_datalake_ingest_spark.functions.embed import hash_embed_counts
 
     # fan out the single-file fixture scan before the expression-heavy
-    # map stage (no-op at production partition counts; profiled as a
-    # single-task job in tools/hotspot_sweep.json)
+    # map stage (no-op at production partition counts; the r14 per-gate
+    # sweep measured it as a 0.3-0.6 s single-task job, OPTIMIZATION_r14.md §F)
     docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
     counts = hash_embed_counts(F.col("text"), 64)
     return docs.select(
@@ -6275,8 +6277,9 @@ def _hash_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # fan out BEFORE the featurize so the checkpoint materializes (and
     # every downstream Lloyd/pair stage reads) 32-way instead of the
-    # fixture's single scan partition (hotspot_sweep: the semantic
-    # gates' 0.6-2.3 s single-task jobs were this chain)
+    # fixture's single scan partition (the r14 per-gate sweep,
+    # OPTIMIZATION_r14.md §F: the semantic gates' 0.6-2.3 s single-task
+    # jobs were this chain)
     corpus = ensure_parallelism(_t(spark, sf_dir, "documents")).select(
         F.col("doc_id").alias("vec_id"),
         hash_embed(F.col("text"), _KM_DIM).alias("embedding"),

@@ -255,6 +255,15 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def is_local_master(master: str) -> bool:
+    """Whether ``master`` is plain ``local`` / ``local[...]``: one JVM
+    that hosts the driver and every executor slot.  ``local-cluster``
+    and real cluster masters run executors in other JVMs, so the
+    single-JVM defaults (the driver heap, the near-dup loop's
+    ``localCheckpoint``) do not apply to them."""
+    return re.fullmatch(r"local(\[[^\]]*\])?", master) is not None
+
+
 def default_driver_memory() -> str | None:
     """Driver heap for engine-created LOCAL sessions, or None to keep
     Spark's default.
@@ -442,7 +451,7 @@ def get_spark(
     for k, v in ENGINE_CONF.items():
         builder = builder.config(k, v)
     if (
-        re.fullmatch(r"local(\[[^\]]*\])?", master)
+        is_local_master(master)
         and "spark.driver.memory" not in (extra_conf or {})
         and not _driver_memory_preset()
     ):

@@ -77,6 +77,7 @@ from cdk_datalake_ingest_spark.operators.table import (
     GroupTransaction,
     ManagedTable,
 )
+from cdk_datalake_ingest_spark.session import is_local_master
 
 #: batch-tag column appended to both sink tables; also their
 #: partition column and the leading merge key
@@ -401,6 +402,16 @@ def migrate_split_index(
     )
 
 
+def _truncates_by_default(spark: SparkSession) -> bool:
+    """Whether the ingest loop truncates each batch's plans unless the
+    caller says otherwise: only on plain local masters.  The truncation
+    is a ``localCheckpoint``, whose blocks live on executors and are
+    lost with them; in one local JVM that loss is the driver's own
+    death, but on a cluster an executor loss would fail the batch
+    instead of recomputing it from lineage."""
+    return is_local_master(spark.sparkContext.master)
+
+
 def apply_ingest_step(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -465,8 +476,8 @@ def apply_ingest_step(
         run_key = uuid.uuid4().hex[:16]
     # the LOOP caller rebuilds the whole dedup plan every micro-batch,
     # so the per-batch plan-truncation pays for itself here (and only
-    # here — see ingest_batch's truncate_plans note)
-    sig_params.setdefault("truncate_plans", True)
+    # here — see ingest_batch's truncate_plans note), on local masters
+    sig_params.setdefault("truncate_plans", _truncates_by_default(spark))
     persisted: list[DataFrame] = []
     try:
         not_self = ~(

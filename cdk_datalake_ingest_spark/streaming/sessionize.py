@@ -97,9 +97,9 @@ def sessionize(
     + start/end) is aggregate-shaped, and for aggregate-shaped
     payloads the JVM ``session_window`` aggregate wins at every scale
     (no Arrow batch transfer, no Python state, whole-stage codegen;
-    ``tools/sessionize_scale_probe.py`` measured the Python topology
-    at ~30x the state-store bytes and a fraction of the rows/sec —
-    SCALE.md records it).  So ``mode="auto"`` dispatches to
+    the round-6 probe measured the Python topology at ~30x the
+    state-store bytes and a fraction of the rows/sec — SCALE.md's
+    stateful-sessionizer table records it).  So ``mode="auto"`` dispatches to
     :func:`sessionize_stream_native` UNLESS the caller asks for the
     one semantics an aggregate cannot express — ``emit_on_gap=True``,
     closing a session the moment a later event reveals the gap instead
@@ -248,9 +248,9 @@ def sessionize_stream_native(
 ) -> DataFrame:
     """JVM-native twin of :func:`sessionize_stream` built on the
     ``session_window`` aggregate — same output shape, same values
-    (``tools/sessionize_scale_probe.py`` measured the Python-stateful
-    topology at ~30x the state-store bytes and a fraction of the
-    rows/sec; SCALE.md records the crossover).
+    (the round-6 probe measured the Python-stateful topology at ~30x
+    the state-store bytes and a fraction of the rows/sec; SCALE.md's
+    stateful-sessionizer table records the crossover).
 
     When to use which: the aggregate-shaped payload here (count + sum)
     is everything ``session_window`` can express, and for it this

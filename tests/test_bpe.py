@@ -404,7 +404,7 @@ def test_bpe_tokenize_corpus_and_modes(spark):
     assert got2 == got
 
     # auto routes mid-size models (> BPE_AUTO_INLINE_MAX) to vocab —
-    # the measured 4.4x-at-32-merges crossover (tools/bpe_scale_probe)
+    # the measured 4.4x-at-32-merges crossover (SCALE.md's BPE apply table)
     from cdk_datalake_ingest_spark.operators.corpus import (
         BPE_AUTO_INLINE_MAX,
     )

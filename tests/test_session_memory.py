@@ -4,7 +4,9 @@ hosts every executor slot), and when get_spark applies it; the static
 engine conf every get_spark builder carries, and how
 apply_runtime_conf treats it on a session built elsewhere. No Spark
 session: get_spark's builder options are captured instead of
-launching a JVM, and apply_runtime_conf runs on a stub session."""
+launching a JVM, and apply_runtime_conf runs on a stub session. The
+near-dup loop's plan-truncation default, which follows the same
+local-master test, is checked on a stub session too."""
 
 import logging
 
@@ -136,3 +138,19 @@ def test_engine_built_session_does_not_warn(caplog):
     S.apply_runtime_conf(spark)
     S.apply_runtime_conf(spark)
     assert _conf_warnings(caplog) == []
+
+
+@pytest.mark.parametrize(
+    "master,local",
+    [("local[4]", True), ("local-cluster[2,1,1024]", False), ("spark://h:7077", False)],
+)
+def test_near_dup_loop_truncates_plans_only_on_local_masters(master, local):
+    # the loop's localCheckpoint blocks die with their executor, so the
+    # truncation default holds only where the executor is the driver
+    from types import SimpleNamespace
+
+    from cdk_datalake_ingest_spark.streaming import neardup
+
+    assert S.is_local_master(master) is local
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(master=master))
+    assert neardup._truncates_by_default(spark) is local

@@ -10,7 +10,10 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+if __name__ == "__main__":
+    # the repo root takes this directory's place on sys.path, where
+    # tools/profile.py would shadow the standard library's profile module
+    sys.path[0] = str(Path(__file__).resolve().parents[1])
 
 import duckdb
 import pandas as pd

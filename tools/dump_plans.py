@@ -1,17 +1,34 @@
-"""Regenerate PLANS.md: formatted physical plans for the headline
-queries, with a note on why each plan is the right one at 100 TB.
+"""Formatted physical plans of the bench queries.
 
-Usage: python tools/dump_plans.py  (writes /root/repo/PLANS.md)
+Usage:
+  python tools/dump_plans.py
+      Regenerate the plan sections of PLANS.md: each NOTES query's
+      plan, with a note on why it is the right plan at 100 TB.  The
+      hand-kept sections after them (from the first heading that is
+      not a NOTES query: the DMS note and the round measurement notes)
+      are kept as they are.
+  python tools/dump_plans.py OUT_DIR before|after [query ...]
+      Write each named query's plan (default: every bench query) to
+      ``OUT_DIR/<query>_<tag>.txt``, a plan round directory such as
+      ``plans/r16``.  OUT_DIR is relative to the repo root unless
+      absolute.  Eager gates still return a DataFrame; its plan is the
+      one written.
+
+Both forms plan the sf0.001 fixtures in an 8-shuffle-partition session:
+the plan shape, not the sizes, is the point.
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
+import re
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+ROOT = Path(__file__).resolve().parents[1]
+if __name__ == "__main__":
+    # the repo root takes this directory's place on sys.path, where
+    # tools/profile.py would shadow the standard library's profile module
+    sys.path[0] = str(ROOT)
 
 SF = "/root/testdata/sf0.001"
 
@@ -314,277 +331,23 @@ NOTES = {
     ),
 }
 
-#: appended verbatim — control-plane-dominated chain whose interesting
-#: structure is the state machinery, not a Spark plan.
-DMS_NOTE = """
-## dms_full_load_pipeline_orders
-
-Control-plane-dominated e2e gate (round 4): the instance/task state machine and
-landing promotion are O(#tables)/O(#files) driver-side metadata; the data plane
-is (a) a strided JDBC scan — `MaxFullLoadSubTasks` non-overlapping key-range
-partitions, one connection each, the same parallel-unload shape DMS uses — into
-a distributed gzip-CSV write, then (b) a schema-less CSV scan → partial
-aggregate → one exchange. Neither pass materializes anything on the driver
-beyond the 2-scalar min/max stride probe, so at 100 TB the chain is bounded by
-the source RDBMS's read bandwidth, exactly like the service it models. No plan
-dump: the interesting structure is the status/state machinery (pinned in
-tests/test_replication_landing.py), not the trivially-shaped scans.
-"""
+def formatted_plan(spark, df) -> str:
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    return df._jdf.queryExecution().explainString(mode)
 
 
-
-#: appended verbatim — round-8 measurement notes (stage costs,
-#: bench comparison, noise calibration); keep these when adding
-#: NOTES entries so regeneration never loses the analysis.
-ROUND8_NOTES = """
-## curate_documents — stage cost breakdown (round 8, VERDICT #5)
-
-Steady-state wall times at sf0.1, local[32], warm JVM (profiled twice,
-quiet machine; `BENCH_DETAIL.json` steady min for the whole gate was
-6.19 s this round — the three-round 5.0→5.7→6.2 "drift" tracked the
-same ~8% whole-suite environmental shift measured across all 107
-code-unchanged entries, not a plan change):
-
-| stage | wall | share | shape |
-|---|---|---|---|
-| 1. enrich (lang-ID, quality, tokens, md5) + eligibility filter + exact-dedup window | ~2.8 s | ~41% | ONE column-pruned text scan, narrow native-Column maps, one content-hash shuffle |
-| 2. survivor re-join + shingle/MinHash/LSH pair build | ~2.0 s | ~29% | second pruned (doc_id,text) scan, banded join on (band,sig) |
-| 3. connected components (large-star/small-star) | ~1.5 s | ~21% | iterative, bounded by 188-edge graph at this SF |
-| 4. attach reps + self-filter + checkpoint | ~0.8 s | ~11% | broadcast-sized assignment join |
-
-No stage exceeds the 40%-unexplained trigger: stage 1 is the
-irreducible single pass over the corpus text (all four enrichment
-columns computed in one projection — splitting them would re-scan),
-and stages 2-4 shrink with the eligible-survivor set, which is the
-filter-first design doing its job. At 100× the only superlinear risk
-is stage 3's edge count; `connected_components` already banded and
-capped (driver union-find only <1M edges).
-
-## Round-8 bench vs round-7 (first same-order comparison)
-
-CORRECTION (round 9, r8 verdict "What's wrong" #1): the +5.5% figure
-below was computed from an earlier run that was NOT the committed
-BENCH_DETAIL.json; the committed r8 artifact shows the common-107
-total at 123.8 → 140.4 s (+13.4%), outside the stated ±6% band, with
-1.4-1.7× swings on code-untouched queries. The noise analysis below
-(and the isolated re-benches that WERE committed) still supports the
-environmental-shift reading, but the number was not reproducible from
-the artifact the driver records — a process defect, fixed in round 9:
-bench.py now reports the median-of-3 (min-of-2 was under-powered
-against the documented 1.4-1.7× single-query noise floor) and every
-round-over-round section from round 9 on is computed FROM the
-committed BENCH_DETAIL.json of both rounds.
-
-`bench.py` has been alphabetical since late round 7, so this is the
-first clean round-over-round read. Common 107 entries: 123.8 → 130.6 s
-(+5.5%; committed artifact: 140.4 s / +13.4% — see correction above);
-the per-query ratio distribution is a uniform shift (median
-1.084, quartiles 0.85 / 0.99 / 1.08 / 1.18 / 1.30) across
-code-untouched queries — environmental, not plan changes. Confirmed by
-spot re-benching the worst apparent "regressions" in isolation
-(3 repeats, quiet machine): `streaming_corpus_stats` 7.22 in-suite →
-**5.86** isolated (below its r7 6.43 — the round-7 watch item closes),
-`ann_cosine_topk` 1.01 → 0.74 (≈ r7's 0.71). The round-7 prediction
-held: the ANN family reverted to ~r6 levels once order stabilized
-(`ann_ivf_kmeans_topk` 3.18→2.09, `ann_lsh_topk` 2.28→1.67,
-`kmeans_clusters_embeddings` 0.83→0.59, `decontaminate_docs`
-2.24→1.91). The only CODE-attributable change is
-`table_change_feed_events` 1.32→1.77: the erasure+backfill scenario
-adds a per-user rollup aggregation (one extra small shuffle over the
-post-window slice) and a larger classified diff — the price of making
-all four change types structurally occur and oracle-verified.
-
-Run-to-run noise calibration: two full same-code bench runs this round
-(the committed BENCH_DETAIL.json is a later run that also carries the
-four new gates — restore 0.9 s, zorder 2.4 s, PQ 5.8 s, IVFADC 3.1 s;
-PQ retrains its quantizer every run — the visible-training gate, the
-kmeans_train_hash_docs convention — while IVFADC reuses the memoized
-quantizers and times routing + search) had a per-query median
-ratio of 0.98 with single-query
-outliers to 1.5× (`streaming_corpus_stats` 7.2 ↔ 11.0 s — isolated
-3-repeat min 5.86 s; `q21` 1.20 ↔ 1.73 s). Read any per-query delta
-under ~1.5× against this noise floor before calling it a regression;
-totals are comparable only to ~±6%.
-"""
-
-
-#: appended verbatim — round-10 measurement notes. The round-over-round
-#: numbers are `python tools/bench_compare.py /tmp/prev.json BENCH_DETAIL.json`
-#: output with /tmp/prev.json = `git show 2a29cef:BENCH_DETAIL.json`
-#: (the artifact the round-9 driver committed — its own r9 run, 146.8 s).
-ROUND10_NOTES = """
-## Round-10 bench vs round-9 — computed FROM the committed artifacts
-
-Same methodology both sides (median-of-3, alphabetical order, sf0.1).
-Baseline: the BENCH_DETAIL.json committed in the r9 tree (the driver's
-own r9 run, total 146.8 s — the r9 verdict corroborated it at +4.5%
-over the earlier-committed 140.4 s, inside the noise band; using the
-tree's artifact keeps the comparison single-source). SEVEN full runs
-this round as the code accumulated (BPE gate -> NULL-id guards ->
-merge/table hardening -> dedup hardening -> similarity hardening),
-totals 135.4 / 145.4 / 134.3 / 192.4 / 146.5 / 155.5 / 142.3 s — the
-fourth ran on a visibly loaded box (15-min load avg 7.4; its worst
-"movers" were 2.4-3.6x on entries with zero code change, so it is
-disclosed and discarded as contaminated), the same box-state noise r9
-calibrated at 175.0/147.9/152.0/140.4. The LAST run (final code) is
-committed and every number below is bench_compare output against it.
-
-- common 111 entries: 146.8 -> 138.8 s (-5.4% on the committed run;
-  the same-round spread ran -11.0% to +3.3% — the spread IS the
-  box); per-query ratio distribution min 0.65 / q1 0.82 /
-  median 0.95 / q3 1.03 / max 1.30, no regression outside the
-  calibrated 1.4-1.7x single-query noise floor attributable to code
-  (worst: ann_cosine 1.03 -> 1.34 and fingerprint 1.58 -> 2.04, both
-  inside their own historical swings).
-- **the similarity sweep's IVF fix is a real win**: dropping the
-  per-centroid norm(vec) fold from the assignment lambda (ranking-
-  invariant; mirrored in both oracles) reads ann_ivf_topk
-  2.21 (r9) -> 1.79 (0.81x) and ann_ivf_kmeans_topk 2.19 -> 1.92
-  (0.87x) on the committed run. The zero-norm/dim guards are
-  latent-cost (filters over already-computed norms).
-- entry added: `bpe_tokenize_docs` median 3.45 s (the cold run
-  carries JIT + the first 6-merge training; every repeat retrains
-  visibly, the ann_pq_adc_topk convention). Registry 113 -> 114;
-  headline total 142.3 s over 112 benched entries.
-- the r9-flagged watch item `streaming_corpus_stats` read 6.7-7.2 s
-  across the five usable runs (9.05 on the committed noisier one; vs
-  7.25 driver r9) — code-unchanged, now ATTRIBUTED (see the stage
-  table below) and closed: ~93% fixed micro-batch machinery, bounded
-  per batch, 1.2x at 10x data.
-- **the merge/table hardening is free**: merge_upsert 0.65 (r9) ->
-  0.61, merge_delete_window 0.76 -> 0.60, schema_evolution_merge
-  0.94 -> 0.62, salesforce_incremental_upsert 1.29 -> 1.10 — the
-  null-safe anti-join conditions compile to the same keyed hash
-  joins.
-- **the dedup hardening is free**: under the fixed MinHash
-  permutation (2^31-1 prime — same arithmetic shape, now actually
-  affine and ANSI-portable) minhash_near_dup 1.28 (r9) -> 1.49,
-  incremental_minhash_ingest 1.99 -> 1.82, curate_documents
-  6.87 -> 6.27, near_dup_clusters 2.76 -> 2.19; simhash with the
-  content-less-doc exclusion 0.63 -> 0.68. All inside the per-query
-  noise floor, several improved.
-- the NULL-id guards cost what the pushdown argument predicted —
-  nothing visible beyond noise: each probe is an IsNull take(1) that
-  parquet statistics answer from footers (scrub_boilerplate
-  2.30 (r9) -> 2.47 on this run, 1.71/1.99 on the two earlier
-  post-guard runs).
-
-## streaming_corpus_stats — stage cost attribution (round 10, VERDICT #3)
-
-Three rounds as the most expensive bench entry (7.0-7.3 s) with no
-breakdown. `tools/corpus_stats_profile.py` (sf0.1, local[32], quiet
-machine, median of 3) decomposes the gate:
-
-| stage | median | what it is |
-|---|---|---|
-| A. staging (write_jsonl, 6 gzip shards) | 0.47 warm / 2.9 cold | memoized across bench repeats; first_run only |
-| B. availableNow drain, maxFilesPerTrigger=2 (3 micro-batches) | 5.10 s | the gated topology |
-| C. same drain, no trigger cap (1 micro-batch) | 3.08 s | isolates per-batch machinery |
-| D. batch-mode equivalent (read.json + agg + parquet write) | 0.36 s | the pure data cost |
-| E. final sink read-back | 0.31 s | driver hash input |
-
-Derived: fixed micro-batch machinery ≈ 2.7 s for the first batch
-(stream query start/stop, per-batch planning, HDFS-backed state-store
-round-trip, commit/offset log) + ~1.0 s per additional micro-batch;
-the gzip-JSONL scan + |lang|x|source|-sized aggregate is 0.36 s —
-**~93% of the drain is fixed streaming machinery, ~7% is data**. That
-is the expected profile for a complete-mode monitor whose state is
-the report itself: at 100 TB the per-batch data term grows with shard
-size while the machinery term stays constant per batch, so the
-wall-clock ratio INVERTS at scale (see the streaming_corpus_stats 10x
-rehearsal row in SCALE.md, added this round — a ratio well under 10x
-is machinery-bound, exactly this attribution). The 3-batch topology
-is deliberate (multi-batch
-complete-mode re-emission is the contract under test); closing the
-watch item — the cost is machinery, priced, and bounded per batch,
-not a data-path defect.
-"""
-
-
-#: appended verbatim — round-9 measurement notes. Every number in the
-#: round-over-round section is the output of
-#: `python tools/bench_compare.py <(git show <r8-commit>:BENCH_DETAIL.json) BENCH_DETAIL.json`
-#: or directly readable from the committed BENCH_DETAIL.json "runs"
-#: map — the r8 verdict's evidence-pipeline fix, structural this time.
-ROUND9_NOTES = """
-## Round-9 bench vs round-8 — computed FROM the committed artifacts
-
-Methodology changed this round (r8 verdict task #1): bench.py now
-reports the MEDIAN of 3 repeats (was: min of 2) and BENCH_DETAIL.json
-carries the raw per-run times under "runs", so every statistic —
-including a min-of-first-2 reconstruction for same-methodology
-comparison with rounds <= 8 — is recomputable from the committed
-artifact. `tools/bench_compare.py` prints the comparison below from
-the two committed files (`git show <r8-commit>:BENCH_DETAIL.json` vs
-the committed r9 file); no headline number comes from an uncommitted
-run.
-
-Headline (committed r8 BENCH_DETAIL.json vs committed r9; quiet box,
-full suite 140.4 s over 111 entries):
-
-- common 108 entries: median-of-3 130.6 s vs r8's min-of-2 145.1 s —
-  **-10.0% despite the median statistic sitting above the min by
-  construction**. Same-methodology reconstruction from "runs": r9
-  min-of-first-2 127.9 s (**-11.9%**), r9 min-of-3 117.8 s (-18.8%).
-  Per-query ratio distribution (median/min basis): min 0.28 / q1 0.81
-  / median 0.93 / q3 1.08 / max 1.53.
-- entry changes: ann_lsh_topk (1.93) + ann_lsh_multiprobe_topk (2.28)
-  folded into ann_lsh_suite_topk (both probe radii in one union);
-  streaming_sessionize_native_events (4.80) replaced by
-  streaming_sessionize_stateful_events (4.83, the quarter-cohort
-  Python compat gate); bpe_train_merges_docs added (runs
-  [3.38, 1.90, 1.74] — the corpus pass once, merge iterations
-  vocabulary-sized).
-- the one large CODE-attributable improvement:
-  streaming_sessionize_events 10.28 -> 2.84 s (0.28x) — the default
-  sessionizer is now the JVM session_window dispatch (r8 verdict task
-  #3). Sessionize family lineup total: 15.08 s (python-default +
-  jvm-twin) -> 7.67 s (jvm-default + cohort-scoped python compat).
-- the one CODE-attributable regression: table_change_feed_events
-  2.18 -> 3.06 s (1.41x) — the gate now ALSO writes a v1 replica,
-  applies the change feed through the new apply_changes consumer, and
-  raises unless the result equals the v2 read (two exceptAll counts).
-  The produce->consume round-trip moved INTO the gate; the delta is
-  the price of verifying it every run.
-- streaming-gate medians now measure the STREAM: the staged input
-  drop (a pure function of the read-only fixture) is memoized across
-  repeats like the k-means quantizers, while checkpoints/sinks stay
-  fresh per run (a reused availableNow checkpoint would emit
-  nothing). The first_run column retains staging+stream (sessionize
-  4.90 cold vs 2.84 median; corpus_stats 8.70 vs 7.03) — nothing is
-  hidden, the repeat loop just stopped re-measuring parquet/JSONL
-  write throughput. Repeat-identity of all five gates verified by
-  result hash.
-- semantic_dedup_hash_docs (the r8 verdict's missing isolated
-  number): committed in-suite runs [4.827, 4.115, 3.656] — the
-  min-of-3 (3.66) is BELOW the r7 acceptance value (3.82 min-of-2)
-  and the median 4.12 is below r8's 4.74, so the r8 "regression" was
-  the noise floor, not the dot_arrow change (an isolated cold-session
-  3-repeat read [5.53, 5.39, 5.28]; isolated runs pay cold
-  page-cache/codegen the alphabetical suite amortizes, which is why
-  cross-round comparison uses in-suite numbers under a fixed order).
-- remaining worst movers are all sub-second entries with no r9 code
-  change (gap_fill 0.45->0.69, events_value_percentiles 0.35->0.52,
-  exact_dedup 0.31->0.44) — per-query noise floor, auditable against
-  their own committed "runs"; ann_pq_adc_topk is flat (5.76 -> 5.64
-  median; an earlier busier-box run this round read 8.5 in-suite and
-  6.29 isolated — the spread, not the code, moved).
-
-Noise calibration, now visible IN the artifact: four same-code
-median-of-3 full runs this round totaled 175.0 / 147.9 / 152.0 /
-140.4 s (first immediately after a full parity run; last two on a
-quiet box; the LAST is committed) — the committed "runs" lists carry
-per-repeat spreads so any reader can check a mover against its own
-repeats before calling it a regression. The median-of-3 headline
-damps exactly this; the raw-runs map makes the damping auditable.
-"""
-
-
-def main() -> int:
+def write_plans_md(spark) -> None:
     from cdk_datalake_ingest_spark.queries import QUERIES
-    from cdk_datalake_ingest_spark.session import get_spark
 
-    spark = get_spark("dump-plans", shuffle_partitions=8)
+    path = ROOT / "PLANS.md"
+    old = path.read_text()
+    kept = [
+        m.start()
+        for m in re.finditer(r"^## (.+)$", old, re.M)
+        if m.group(1) not in NOTES
+    ]
     out = [
         "# PLANS — physical plans of the headline queries\n",
         "Generated by `python tools/dump_plans.py` (sf0.001 fixtures; the plan\n"
@@ -592,11 +355,7 @@ def main() -> int:
         "plan you want on a 1000-executor cluster at 100 TB.\n",
     ]
     for name, note in NOTES.items():
-        df = QUERIES[name](spark, SF)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
+        plan = formatted_plan(spark, QUERIES[name](spark, SF))
         # keep the operator tree + scan details, drop the (long) per-node
         # attribute dumps except scans (PushedFilters/ReadSchema live there)
         tree, _, details = plan.partition("\n\n")
@@ -609,14 +368,35 @@ def main() -> int:
         for b in scan_bits:
             out.append("\n" + b.strip() + "\n")
         out.append("```\n")
-    out.append(DMS_NOTE)
-    out.append(ROUND10_NOTES)
-    out.append(ROUND9_NOTES)
-    out.append(ROUND8_NOTES)
-    Path(__file__).resolve().parents[1].joinpath("PLANS.md").write_text(
-        "".join(out)
-    )
+    if kept:
+        out.append("\n" + old[kept[0]:])
+    path.write_text("".join(out))
     print("wrote PLANS.md")
+
+
+def write_plan_files(spark, out_dir: Path, tag: str, names: list[str]) -> None:
+    from bench import bench_queries
+    from cdk_datalake_ingest_spark.queries import QUERIES
+
+    out_dir.mkdir(parents=True, exist_ok=True)
+    for name in names or bench_queries():
+        try:
+            plan = formatted_plan(spark, QUERIES[name](spark, SF))
+        except Exception as ex:  # pragma: no cover - diagnostic tool
+            plan = f"ERROR: {ex}"
+        (out_dir / f"{name}_{tag}.txt").write_text(plan + "\n")
+        print(f"[{tag}] {name}")
+
+
+def main() -> int:
+    from cdk_datalake_ingest_spark.session import get_spark
+
+    spark = get_spark("dump-plans", shuffle_partitions=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    if len(sys.argv) > 1:
+        write_plan_files(spark, ROOT / sys.argv[1], sys.argv[2], sys.argv[3:])
+    else:
+        write_plans_md(spark)
     spark.stop()
     return 0
 

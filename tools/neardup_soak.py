@@ -30,7 +30,10 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+if __name__ == "__main__":
+    # the repo root takes this directory's place on sys.path, where
+    # tools/profile.py would shadow the standard library's profile module
+    sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:

@@ -41,7 +41,10 @@ import time
 from collections import Counter
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+if __name__ == "__main__":
+    # the repo root takes this directory's place on sys.path, where
+    # tools/profile.py would shadow the standard library's profile module
+    sys.path[0] = str(Path(__file__).resolve().parents[1])
 
 BASE = "/root/testdata/sf0.1"
 SCALE_DIR = "/tmp/spark_graft_scale10"
@@ -274,12 +277,12 @@ def time_query(fn, spark, sf_dir: str, repeats: int = 2) -> float:
 
 def _bpe_apply_section() -> list[str]:
     """Static record of the round-10 BPE apply-cost probe
-    (tools/bpe_scale_probe.py) — rerun that tool to refresh; numbers
-    reproduced here so SCALE.md survives rehearsal rewrites."""
+    (a one-off script, since removed): the numbers live here so
+    SCALE.md survives rehearsal rewrites."""
     return [
         "## BPE apply: inline expression chain vs vocabulary memoization",
         "",
-        "`tools/bpe_scale_probe.py` (rounds 10-11; sf0.1, local[32],",
+        "A one-off apply probe (rounds 10-11; sf0.1, local[32],",
         "min of 2 warm runs, noop sink; the 6 trained merges padded",
         "with non-matching no-op pairs — conservative, since a no-op",
         "merge still pays its full replace scan per stage).  Rows at",
@@ -319,12 +322,12 @@ def _bpe_apply_section() -> list[str]:
 
 def _bpe_train_section() -> list[str]:
     """Static record of the round-11 BPE TRAIN-cost probe
-    (tools/bpe_scale_probe.py --train) — rerun that tool to refresh;
-    numbers reproduced here so SCALE.md survives rehearsal rewrites."""
+    (a one-off script, since removed): the numbers live here so
+    SCALE.md survives rehearsal rewrites."""
     return [
         "## BPE training: sequential argmax vs batched top-M rounds",
         "",
-        "`tools/bpe_scale_probe.py --train` (round 11; sf0.1,",
+        "A one-off train probe (round 11; sf0.1,",
         "local[32], one run per point — the job-count story is",
         "deterministic).  The sf0.1 documents vocabulary EXHAUSTS at",
         "~89 merges (synthetic corpus, small word list), so the curve",
@@ -358,13 +361,12 @@ def _bpe_train_section() -> list[str]:
 
 def _sessionizer_section() -> list[str]:
     """Static record of the round-6 sessionizer probe
-    (tools/sessionize_scale_probe.py) — rerun that tool to refresh the
-    numbers; they are reproduced here so the full SCALE document
-    survives rehearsal rewrites."""
+    (a one-off script, since removed): the numbers live here so the
+    full SCALE document survives rehearsal rewrites."""
     return [
         "## Stateful sessionizer: Python state vs JVM session_window",
         "",
-        "`tools/sessionize_scale_probe.py` (round 6; local[32],",
+        "A one-off probe (round 6; local[32],",
         "availableNow drain of the gate's 3-slice drop, sentinel row",
         "included):",
         "",
