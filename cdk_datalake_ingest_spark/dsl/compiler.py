@@ -151,20 +151,14 @@ def _split_rules(args: list) -> list[tuple[str, str]]:
 
 def _fn_concatenate(args, data_type, dialect, strict):
     # D1, SJ:150-152 / TL:152-154.
-    cols = [_col_arg_strip(a, data_type, dialect, strict) for a in args]
+    cols = [_col_arg(a, data_type, dialect, strict) for a in args]
     return F.concat_ws(dialect.concat_separator, *cols)
-
-
-def _col_arg_strip(node, data_type, dialect, strict):
-    if isinstance(node, FuncCall):
-        return _compile_call(node, data_type, dialect, strict)
-    return F.col(node.text.strip())
 
 
 def _fn_concatenate_ws(args, data_type, dialect, strict):
     # D2, SJ:154-156: last argument is the separator.
     sep = _arg_text(args[-1])
-    cols = [_col_arg_strip(a, data_type, dialect, strict) for a in args[:-1]]
+    cols = [_col_arg(a, data_type, dialect, strict) for a in args[:-1]]
     return F.concat_ws(sep, *cols)
 
 
@@ -284,7 +278,7 @@ def _fn_datetime(args, data_type, dialect, strict):
 
 def _fn_clear_string(args, data_type, dialect, strict):
     # D8, SJ:241-258.
-    origin = _col_arg_strip(args[0], data_type, dialect, strict)
+    origin = _col_arg(args[0], data_type, dialect, strict)
     if len(args) > 1:
         default = _lit_or_col(_arg_text(args[1]))
         return F.when(origin.isNotNull(), F.trim(origin)).otherwise(default)
@@ -293,7 +287,7 @@ def _fn_clear_string(args, data_type, dialect, strict):
 
 def _fn_date_to_string(args, data_type, dialect, strict):
     # D9, SJ:260-261.
-    origin = _col_arg_strip(args[0], data_type, dialect, strict)
+    origin = _col_arg(args[0], data_type, dialect, strict)
     return F.date_format(origin, _arg_text(args[1]))
 
 
@@ -307,7 +301,7 @@ def _magic_date_expr(origin: Column) -> Column:
 
 def _fn_date_magic(args, data_type, dialect, strict):
     # D10, SJ:263-277.
-    origin = _col_arg_strip(args[0], data_type, dialect, strict)
+    origin = _col_arg(args[0], data_type, dialect, strict)
     fmt = _arg_text(args[1])
     default = _arg_text(args[-1])
     valid = F.regexp_extract(origin.cast("string"), MAGIC_DATE_PATTERN, 1) != ""
@@ -321,8 +315,8 @@ def _fn_datetime_magic(args, data_type, dialect, strict):
     # branches (the reference truncates 'yyyy-MM-dd HH:mm:ss' to
     # 'yyyy-MM-' there; under the LEGACY parser that prefix-parses to
     # the first of the month).
-    d_col = _col_arg_strip(args[0], data_type, dialect, strict)
-    t_col = _col_arg_strip(args[1], data_type, dialect, strict)
+    d_col = _col_arg(args[0], data_type, dialect, strict)
+    t_col = _col_arg(args[1], data_type, dialect, strict)
     fmt = _arg_text(args[2])
     default = _arg_text(args[-1])
     d_valid = F.regexp_extract(d_col.cast("string"), MAGIC_DATE_PATTERN, 1) != ""
@@ -340,8 +334,8 @@ def _fn_datetime_magic(args, data_type, dialect, strict):
 
 def _fn_period_magic(args, data_type, dialect, strict):
     # D12, SJ:311-322: NULL period -> '190001', else period || lpad(ej,2,'0').
-    period = _col_arg_strip(args[0], data_type, dialect, strict)
-    ejercicio = _col_arg_strip(args[1], data_type, dialect, strict)
+    period = _col_arg(args[0], data_type, dialect, strict)
+    ejercicio = _col_arg(args[1], data_type, dialect, strict)
     return F.when(period.isNull(), DEFAULT_PERIOD).otherwise(
         F.concat(period, F.lpad(ejercicio, 2, "0"))
     )

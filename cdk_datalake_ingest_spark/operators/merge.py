@@ -19,6 +19,8 @@ anti-join when the table is partitioned on the window column.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -44,36 +46,53 @@ def merge_dataframes(
     - Schema evolution: union is by name with missing columns allowed,
       mirroring delta.schema.autoMerge (aje-stage-dms-load.py:44).
     """
-    import functools
+    source = dedup_source(source, keys, order_by)
+    return upsert_unique(
+        target, source, keys, delete_predicate, broadcast_source
+    )
 
+
+def dedup_source(
+    source: DataFrame, keys: list[str], order_by: list[str] | None = None
+) -> DataFrame:
+    """One row per key: the latest under ``order_by`` (W1), else any."""
     if order_by:
-        source = latest_record_dedup(source, keys, order_by)
-    else:
-        source = source.dropDuplicates(keys)
+        return latest_record_dedup(source, keys, order_by)
+    return source.dropDuplicates(keys)
+
+
+def upsert_unique(
+    target: DataFrame,
+    source: DataFrame,
+    keys: list[str],
+    delete_predicate: Column | None = None,
+    broadcast_source: bool = False,
+) -> DataFrame:
+    """:func:`merge_dataframes` for a ``source`` that is already one row
+    per key: nothing is added to dedup it."""
     if delete_predicate is not None:
         target = target.filter(
             ~F.coalesce(delete_predicate, F.lit(False))
         )
     src_for_join = F.broadcast(source) if broadcast_source else source
-    # null-safe anti-join conditions: NULL is a legitimate key value
-    # (dropDuplicates/latest_record_dedup already group NULL keys
-    # together, and changes_between classifies them with eqNullSafe) —
-    # a name-list anti-join would never match a NULL key, so the stale
-    # target row would survive NEXT TO the upserted source row,
-    # duplicating the key on every merge.
-    anti = functools.reduce(
-        lambda a, b: a & b,
-        [
-            F.col(f"__t.{k}").eqNullSafe(F.col(f"__s.{k}"))
-            for k in keys
-        ],
-    )
-    survivors = (
-        target.alias("__t")
-        .join(
-            src_for_join.select(*keys).distinct().alias("__s"),
-            anti,
-            "left_anti",
-        )
+    survivors = match_keys(
+        target, src_for_join.select(*keys), keys, "left_anti"
     )
     return source.unionByName(survivors, allowMissingColumns=True)
+
+
+def match_keys(
+    target: DataFrame, key_df: DataFrame, keys: list[str], how: str
+) -> DataFrame:
+    """``target`` rows whose ``keys`` do (``how="left_semi"``) or do not
+    (``"left_anti"``) appear in ``key_df``, under null-safe equality.
+    NULL is a legitimate key value (dropDuplicates/latest_record_dedup
+    group NULL keys together, and changes_between classifies them with
+    eqNullSafe): a name-list join would never match a NULL key, so a
+    stale NULL-keyed target row would survive NEXT TO its upserted
+    source row, duplicating the key on every merge."""
+    cond = functools.reduce(
+        lambda a, b: a & b,
+        [F.col(f"__t.{k}").eqNullSafe(F.col(f"__k.{k}")) for k in keys],
+    )
+    return target.alias("__t").join(key_df.alias("__k"), cond, how)

@@ -46,7 +46,11 @@ from pathlib import Path
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdk_datalake_ingest_spark.operators.merge import merge_dataframes
+from cdk_datalake_ingest_spark.operators.merge import (
+    dedup_source,
+    match_keys,
+    upsert_unique,
+)
 
 try:  # pragma: no cover - environment-dependent
     from delta.tables import DeltaTable  # type: ignore
@@ -768,26 +772,41 @@ class ManagedTable:
         else:
             m = self._read_manifest() or {"version": 0}
             base_version = int(m["version"])
-        version, data_dir = self._claim_snapshot(base_version)
         if coalesce_single_file:  # S12 single-file compaction
             df = df.repartition(1)
+        self._write_snapshot(
+            df, base_version, partition_by or [], op, txn, carry=[]
+        )
+
+    def _write_snapshot(
+        self,
+        df: DataFrame,
+        base_version: int,
+        pby: list[str],
+        op: str,
+        txn: "GroupTransaction | None",
+        carry: list[tuple[Path, Path]],
+    ) -> None:
+        """The tail every snapshot write shares: claim a fresh snapshot
+        dir, write ``df`` into it as parquet (hive-partitioned on
+        ``pby``) with its ``_schema.json`` sidecar, hard-link each
+        ``carry`` (dir, path relative to the new snapshot) pair into it,
+        then CAS-commit on ``base_version`` — or enlist in ``txn``."""
+        version, data_dir = self._claim_snapshot(base_version)
+        new_dir = self.path / data_dir
         w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(str(self.path / data_dir))
-        self._write_schema_sidecar(data_dir, df)
-        manifest = {
-            "version": version,
-            "data_dir": data_dir,
-            "partition_by": partition_by or [],
-        }
+        if pby:
+            w = w.partitionBy(*pby)
+        w.parquet(str(new_dir))
+        (new_dir / SCHEMA_SIDECAR).write_text(df.schema.json())
+        for src, rel in carry:
+            self._link_tree(src, new_dir / rel)
+        manifest = {"version": version, "data_dir": data_dir,
+                    "partition_by": pby}
         if txn is not None:
             txn.enlist(self, manifest, base_version, op)
-            return
-        self._commit(manifest, expected_version=base_version, op=op)
-
-    def _write_schema_sidecar(self, data_dir: str, df: DataFrame) -> None:
-        (self.path / data_dir / SCHEMA_SIDECAR).write_text(df.schema.json())
+        else:
+            self._commit(manifest, expected_version=base_version, op=op)
 
     def merge_upsert(
         self,
@@ -808,17 +827,18 @@ class ManagedTable:
         :meth:`write`); ignored on a Delta-backed table, which commits
         the merge immediately through its own log.
 
-        ``source_unique``: caller asserts the source is already
-        one-row-per-key, letting the scoped insert-only fast path skip
-        the defensive dropDuplicates shuffle (the streaming sinks'
-        per-batch merges — their relations are key-unique by
-        construction). Only an optimization hint: paths that join
-        against the target ignore it.
+        ``source_unique``: the source is deduplicated to one row per
+        key once, here (W1 under ``order_by``, else dropDuplicates), and
+        every path — new table, Delta MERGE, scoped insert-only, target
+        join — takes that relation. ``source_unique=True`` asserts the
+        source already is one row per key (the stage pipeline after
+        ``transform``'s W1, the streaming sinks by construction) and
+        skips the dedup; ``order_by`` then goes unused.
 
         ``touched_partitions``: caller asserts every source row's
         partition-column values are among these tuples (value order =
         the table's partition_by), sparing the scoped path its
-        touched-partition aggregation — which otherwise EVALUATES the
+        touched-partition collect — which otherwise EVALUATES the
         whole source plan once before the write evaluates it again.
         Worth it exactly when the source is an expensive computed
         relation with a statically-known partition tag (the streaming
@@ -827,29 +847,17 @@ class ManagedTable:
         target rows outside the declared set could exist and the hint
         is UNSOUND — rejected with ValueError). Rows outside the
         declared set would be silently mis-merged — that's the
-        contract the caller signs. On a Delta-backed table both hints
-        are no-ops: DeltaTable.merge prunes files from the key
-        condition itself."""
+        contract the caller signs. On a Delta-backed table it is a
+        no-op: DeltaTable.merge prunes files from the key condition
+        itself."""
+        src = source if source_unique else dedup_source(source, keys, order_by)
         if not self.exists:
-            self.write(
-                source.dropDuplicates(keys)
-                if not order_by
-                else merge_dataframes(
-                    source.limit(0), source, keys, order_by=order_by
-                ),
-                op="merge",
-                txn=txn,
-            )
+            self.write(src, op="merge", txn=txn)
             return
         if HAS_DELTA and DeltaTable.isDeltaTable(self.spark, str(self.path)):
             dt = DeltaTable.forPath(self.spark, str(self.path))
             if delete_predicate is not None:
                 dt.delete(delete_predicate)
-            src = (
-                merge_dataframes(source.limit(0), source, keys, order_by=order_by)
-                if order_by
-                else source.dropDuplicates(keys)
-            )
             # <=> (null-safe): NULL is a legitimate key value — '='
             # would never match it and whenNotMatchedInsertAll would
             # duplicate the NULL-keyed row on every merge (the same
@@ -875,17 +883,12 @@ class ManagedTable:
                 "exist and the hint would silently corrupt the merge"
             )
         if m.get("partition_by") and self._merge_partition_scoped(
-            m, target, source, keys, order_by, delete_predicate,
-            broadcast_source, source_unique, touched_partitions, txn,
+            m, target, src, keys, touched_partitions, delete_predicate,
+            broadcast_source, txn,
         ):
             return
-        merged = merge_dataframes(
-            target,
-            source,
-            keys,
-            order_by=order_by,
-            delete_predicate=delete_predicate,
-            broadcast_source=broadcast_source,
+        merged = upsert_unique(
+            target, src, keys, delete_predicate, broadcast_source
         )
         self.write(
             merged,
@@ -904,29 +907,30 @@ class ManagedTable:
         self,
         m: dict,
         target: DataFrame,
-        source: DataFrame,
+        src: DataFrame,
         keys: list[str],
-        order_by: list[str] | None,
+        touched_partitions: list[tuple] | None,
         delete_predicate: Column | None,
         broadcast_source: bool,
-        source_unique: bool = False,
-        touched_partitions: list[tuple] | None = None,
         txn: "GroupTransaction | None" = None,
     ) -> bool:
         """O(touched-partitions) merge for hive-partitioned tables —
         the versioned-parquet analogue of Delta's file-level MERGE
         rewrite (Delta rewrites only files holding matched rows; here
-        the rewrite unit is the partition directory).
+        the rewrite unit is the partition directory). ``src`` is the
+        source already deduplicated by :meth:`merge_upsert`.
 
-        Touched = source rows' partitions ∪ partitions holding a
-        MATCHED key (an updated row may move partitions, so its old
-        partition must be rewritten — found with a column-pruned
-        semi-join scan of only key+partition columns) ∪ partitions with
-        delete_predicate hits. Only touched partitions go through the
-        merge dataflow and are rewritten; every other partition dir is
-        HARD-LINKED from the previous snapshot into the new one, so
-        time travel and ``vacuum`` keep working (link refcounts keep
-        shared files alive when an old snapshot dir is rmtree'd).
+        Touched = the source rows' partitions (or the declared
+        ``touched_partitions``) ∪ partitions holding a MATCHED key (an
+        updated row may move partitions, so its old partition must be
+        rewritten — found with a column-pruned semi-join scan of only
+        key+partition columns) ∪ partitions with delete_predicate hits,
+        all collected in one job by :meth:`_touched_partitions`. Only
+        touched partitions go through the merge dataflow and are
+        rewritten; every other partition dir is HARD-LINKED from the
+        previous snapshot into the new one, so time travel and
+        ``vacuum`` keep working (link refcounts keep shared files alive
+        when an old snapshot dir is rmtree'd).
 
         At 100 TB this converts the reference's riskiest scale surface
         (A6/A7: full-table rewrite per merge) into two pruned
@@ -934,58 +938,30 @@ class ManagedTable:
         object store the link step becomes manifest-level file
         references; the touched-partition computation is unchanged.
 
-        Returns False (caller does the full rewrite) when the layout
-        can't be matched safely: non-integral/non-string partition
-        columns (directory-name round-trip not guaranteed), NULL
-        partition values among the touched set (hive default-partition
-        matching), or more than MAX_SCOPED_PARTITIONS touched.
+        Returns False (caller does the full rewrite) on schema
+        evolution or when :meth:`_scoped_types` or
+        :meth:`_touched_partitions` refuses the layout.
         """
         pby: list[str] = list(m["partition_by"])
         # schema evolution must rewrite EVERY partition: linked old
         # partitions would otherwise keep the pre-evolution schema and
         # the default parquet reader (no mergeSchema) would drop the
         # new column from the snapshot
-        if set(source.columns) != set(target.columns):
+        if set(src.columns) != set(target.columns):
             return False
-        by_name = {f.name: f.dataType.simpleString() for f in target.schema}
-        if any(
-            by_name.get(c) not in self._SCOPED_PARTITION_TYPES
-            for c in pby
-        ):
+        by_name = self._scoped_types(pby, target)
+        if by_name is None:
             return False
-
-        if touched_partitions is not None:
-            # trusted hint (validated pby ⊆ keys in merge_upsert): the
-            # source plan is not evaluated at all before the write.
-            if any(len(t) != len(pby) for t in touched_partitions):
-                raise ValueError(
-                    f"touched_partitions tuples must match partition_by "
-                    f"{pby} in width"
-                )
-            touched = [tuple(t) for t in touched_partitions]
-            if delete_predicate is not None:
-                touched += [
-                    tuple(r[c] for c in pby)
-                    for r in target.filter(delete_predicate)
-                    .select(*pby)
-                    .dropDuplicates(pby)
-                    .limit(self.MAX_SCOPED_PARTITIONS + 1)
-                    .collect()
-                ]
-            if len(set(touched)) > self.MAX_SCOPED_PARTITIONS:
-                return False
-            if any(
-                v is None or v == self.HIVE_DEFAULT
-                for t in touched
-                for v in t
-            ):
-                return False
-            return self._merge_scoped_finish(
-                m, target, source, keys, order_by, delete_predicate,
-                broadcast_source, source_unique, pby, by_name, touched,
-                txn,
+        # a declared hint (validated pby ⊆ keys in merge_upsert) spares
+        # the source plan its evaluation before the write
+        frames = []
+        if touched_partitions is None:
+            frames.append(src.select(*pby))
+        elif any(len(t) != len(pby) for t in touched_partitions):
+            raise ValueError(
+                f"touched_partitions tuples must match partition_by "
+                f"{pby} in width"
             )
-        touched_df = source.select(*pby)
         if not set(pby) <= set(keys):
             # partitions holding a matched key: an update may move a
             # row's partition value, so the OLD copy's partition must
@@ -996,68 +972,22 @@ class ManagedTable:
             # a merge key: then a matched target row agrees with its
             # source row on all of pby by definition (rows "can't move
             # partitions"), so the matched partitions are already in
-            # source.select(pby) — and the skip removes the one
-            # O(target) column scan from the scoped path, making each
-            # merge O(touched partitions) outright. The streaming
-            # ingest sinks (batch-partitioned, batch-keyed) rely on
-            # this: their per-batch merge cost must not grow with the
-            # table.
-            src_keys = source.select(*keys).dropDuplicates(keys)
-            semi = functools.reduce(
-                lambda a, b: a & b,
-                [
-                    F.col(f"__t.{k}").eqNullSafe(F.col(f"__s.{k}"))
-                    for k in keys
-                ],
-            )
-            touched_df = touched_df.unionByName(
-                target.alias("__t")
-                .join(src_keys.alias("__s"), semi, "left_semi")
+            # src.select(pby) — and the skip removes the one O(target)
+            # column scan from the scoped path, making each merge
+            # O(touched partitions) outright. The streaming ingest
+            # sinks (batch-partitioned, batch-keyed) rely on this:
+            # their per-batch merge cost must not grow with the table.
+            frames.append(
+                match_keys(target, src.select(*keys), keys, "left_semi")
                 .select(*pby)
             )
         if delete_predicate is not None:
-            touched_df = touched_df.unionByName(
-                target.filter(delete_predicate).select(*pby)
-            )
-        cap = self.MAX_SCOPED_PARTITIONS
-        rows = touched_df.dropDuplicates(pby).limit(cap + 1).collect()
-        if len(rows) > cap:
-            return False
-        touched = [tuple(r[c] for c in pby) for r in rows]
-        if any(
-            v is None or v == self.HIVE_DEFAULT for t in touched for v in t
-        ):
-            # NULL partitions land in the hive sentinel leaf, and a
-            # string column whose GENUINE value is the sentinel text is
-            # indistinguishable from one on disk — _canon_vals maps both
-            # to "always link forward", which would duplicate the
-            # rewritten rows. Full rewrite instead of corrupting.
-            return False
-        return self._merge_scoped_finish(
-            m, target, source, keys, order_by, delete_predicate,
-            broadcast_source, source_unique, pby, by_name, touched, txn,
+            frames.append(target.filter(delete_predicate).select(*pby))
+        touched = self._touched_partitions(
+            pby, touched_partitions or [], frames
         )
-
-    def _merge_scoped_finish(
-        self,
-        m: dict,
-        target: DataFrame,
-        source: DataFrame,
-        keys: list[str],
-        order_by: list[str] | None,
-        delete_predicate: Column | None,
-        broadcast_source: bool,
-        source_unique: bool,
-        pby: list[str],
-        by_name: dict[str, str],
-        touched: list[tuple],
-        txn: "GroupTransaction | None" = None,
-    ) -> bool:
-        """Shared tail of the scoped merge once ``touched`` is known
-        (computed from the data or declared by the caller): pick the
-        insert-only or target-join plan and write the new snapshot."""
-        touched_set = {tuple(str(v) for v in t) for t in touched}
-
+        if touched is None:
+            return False
         cond = self._partition_cond(pby, touched)
         if cond is None:  # empty source and no delete hits: no-op merge
             return True
@@ -1069,39 +999,17 @@ class ManagedTable:
         # is a driver-side dir walk of the snapshot (no Spark job);
         # leaves whose canonical form is unknown (None) can never equal
         # a collected touched tuple, so they don't affect disjointness.
-        if delete_predicate is None:
-            existing = {
-                c
-                for _, vals in self._leaf_partitions(
-                    self.path / m["data_dir"], pby
-                )
-                if (c := self._canon_vals(pby, by_name, vals)) is not None
-            }
-            if touched_set.isdisjoint(existing):
-                if order_by:
-                    merged = merge_dataframes(
-                        source.limit(0), source, keys, order_by=order_by
-                    )
-                elif source_unique:
-                    merged = source
-                else:
-                    merged = source.dropDuplicates(keys)
-                self._write_scoped(
-                    m, pby, touched_set, merged, by_name, op="merge",
-                    txn=txn,
-                )
-                return True
-        merged = merge_dataframes(
-            target.filter(cond),
-            source,
-            keys,
-            order_by=order_by,
-            delete_predicate=delete_predicate,
-            broadcast_source=broadcast_source,
+        insert_only = delete_predicate is None and {
+            self._canon_vals(pby, by_name, vals)
+            for _, vals in self._leaf_partitions(
+                self.path / m["data_dir"], pby
+            )
+        }.isdisjoint(tuple(str(v) for v in t) for t in touched)
+        merged = src if insert_only else upsert_unique(
+            target.filter(cond), src, keys, delete_predicate,
+            broadcast_source,
         )
-        self._write_scoped(
-            m, pby, touched_set, merged, by_name, op="merge", txn=txn
-        )
+        self._write_scoped(m, pby, touched, merged, by_name, "merge", txn)
         return True
 
     def _delete_partition_scoped(
@@ -1112,34 +1020,58 @@ class ManagedTable:
         their kept rows); the rest are hard-linked forward. Same
         fallback conditions as the scoped merge."""
         pby: list[str] = list(m["partition_by"])
-        by_name = {f.name: f.dataType.simpleString() for f in target.schema}
-        if any(
-            by_name.get(c) not in self._SCOPED_PARTITION_TYPES
-            for c in pby
-        ):
+        by_name = self._scoped_types(pby, target)
+        if by_name is None:
             return False
         hit = F.coalesce(predicate, F.lit(False))
-        cap = self.MAX_SCOPED_PARTITIONS
-        rows = (
-            target.filter(hit).select(*pby).dropDuplicates(pby)
-            .limit(cap + 1).collect()
+        touched = self._touched_partitions(
+            pby, [], [target.filter(hit).select(*pby)]
         )
-        if len(rows) > cap:
-            return False
-        touched = [tuple(r[c] for c in pby) for r in rows]
-        if any(
-            v is None or v == self.HIVE_DEFAULT for t in touched for v in t
-        ):
-            # see the scoped-merge note: a genuine sentinel-text string
-            # value would be linked forward AND rewritten — fall back
+        if touched is None:
             return False
         cond = self._partition_cond(pby, touched)
         if cond is None:  # no rows match: delete is a no-op
             return True
         kept = target.filter(cond).filter(~hit)
-        touched_set = {tuple(str(v) for v in t) for t in touched}
-        self._write_scoped(m, pby, touched_set, kept, by_name, op="delete")
+        self._write_scoped(m, pby, touched, kept, by_name, "delete")
         return True
+
+    def _touched_partitions(
+        self, pby: list[str], declared: list[tuple], frames: list[DataFrame]
+    ) -> list[tuple] | None:
+        """THE touched-partition rule of every scoped rewrite: the
+        ``declared`` tuples plus the distinct rows of the ``frames``
+        (each a ``select(*pby)``), collected in ONE capped job — none
+        when ``frames`` is empty. None means "full rewrite": over
+        MAX_SCOPED_PARTITIONS, or a NULL / hive-sentinel value among
+        them (a NULL lands in the sentinel leaf, and a string whose
+        GENUINE value is the sentinel text is indistinguishable from
+        one on disk: _canon_vals links both forward, which would
+        duplicate the rewritten rows)."""
+        cap = self.MAX_SCOPED_PARTITIONS
+        rows = (
+            functools.reduce(DataFrame.unionByName, frames)
+            .dropDuplicates(pby).limit(cap + 1).collect()
+            if frames else []
+        )
+        touched = list(dict.fromkeys(map(tuple, [*declared, *rows])))
+        if len(touched) > cap or any(
+            v is None or v == self.HIVE_DEFAULT for t in touched for v in t
+        ):
+            return None
+        return touched
+
+    def _scoped_types(
+        self, pby: list[str], df: DataFrame
+    ) -> dict[str, str] | None:
+        """``df``'s {column: simpleString type} when every partition
+        column has a type whose hive dir-name round-trip is exact
+        (_SCOPED_PARTITION_TYPES); None when a scoped rewrite is not
+        safe."""
+        by_name = {f.name: f.dataType.simpleString() for f in df.schema}
+        if all(by_name.get(c) in self._SCOPED_PARTITION_TYPES for c in pby):
+            return by_name
+        return None
 
     #: Spark's sentinel leaf for NULL partition values
     HIVE_DEFAULT = "__HIVE_DEFAULT_PARTITION__"
@@ -1204,42 +1136,28 @@ class ManagedTable:
         self,
         m: dict,
         pby: list[str],
-        touched_set: set[tuple[str, ...]],
+        touched: list[tuple],
         df: DataFrame,
-        by_name: dict[str, str] | None = None,
-        op: str = "write",
+        by_name: dict[str, str],
+        op: str,
         txn: "GroupTransaction | None" = None,
     ) -> None:
-        """Write ``df`` (the rewritten touched partitions) as a new
+        """Write ``df`` (the rewritten ``touched`` partitions) as a new
         snapshot, carry every untouched partition forward by hard link
         (O(#files) metadata, zero data movement), and CAS-commit
         anchored on the pinned read version (or enlist in ``txn``, see
-        :meth:`write`). ``touched_set`` holds
-        CANONICAL value tuples (``str(collected)``); leaf dirs are
-        canonicalized through ``_canon_vals`` before the membership
-        test so dir-text variants of the same value never slip into
-        the linked set."""
-        base_version = int(m["version"])
-        version, data_dir = self._claim_snapshot(base_version)
-        new_dir = self.path / data_dir
-        df.write.mode("overwrite").partitionBy(*pby).parquet(str(new_dir))
-        self._write_schema_sidecar(data_dir, df)
+        :meth:`write`). ``touched`` values compare as ``str(value)``;
+        leaf dirs are canonicalized through ``_canon_vals`` before the
+        membership test so dir-text variants of the same value never
+        slip into the linked set."""
         old_dir = self.path / m["data_dir"]
-        by_name = by_name or {}
-        for leaf, vals in self._leaf_partitions(old_dir, pby):
-            canon = self._canon_vals(pby, by_name, vals)
-            if canon is not None and canon in touched_set:
-                continue
-            self._link_tree(leaf, new_dir / leaf.relative_to(old_dir))
-        manifest = {
-            "version": version,
-            "data_dir": data_dir,
-            "partition_by": pby,
-        }
-        if txn is not None:
-            txn.enlist(self, manifest, base_version, op)
-            return
-        self._commit(manifest, expected_version=base_version, op=op)
+        touched_set = {tuple(str(v) for v in t) for t in touched}
+        untouched = [
+            (leaf, leaf.relative_to(old_dir))
+            for leaf, vals in self._leaf_partitions(old_dir, pby)
+            if self._canon_vals(pby, by_name, vals) not in touched_set
+        ]
+        self._write_snapshot(df, int(m["version"]), pby, op, txn, untouched)
 
     @staticmethod
     def _leaf_partitions(
@@ -1356,21 +1274,10 @@ class ManagedTable:
             ct.isin("insert", "update_postimage", "delete")
         ).select(*key_cols).distinct()
         m, target = self._pinned_snapshot()
-        # null-safe anti-join conditions, mirroring changes_between's
-        # eqNullSafe classification: a name-list anti-join would never
-        # match a NULL key, leaving the stale preimage row in the
-        # replica next to the applied postimage.
-        anti = functools.reduce(
-            lambda a, b: a & b,
-            [
-                F.col(f"__t.{k}").eqNullSafe(F.col(f"__c.{k}"))
-                for k in key_cols
-            ],
-        )
-        kept = (
-            target.alias("__t")
-            .join(touched.alias("__c"), anti, "left_anti")
-        )
+        # null-safe, mirroring changes_between's eqNullSafe
+        # classification: the stale preimage row of a NULL key must not
+        # stay in the replica next to the applied postimage
+        kept = match_keys(target, touched, key_cols, "left_anti")
         # allowMissingColumns: a feed from a schema-evolved diff carries
         # v_to's new columns; pre-existing kept rows take NULLs — the
         # same null-compare semantics changes_between classified with
@@ -1667,11 +1574,8 @@ class ManagedTable:
                 "compact_hot_partitions needs a partitioned table; "
                 "use compact() for unpartitioned layouts"
             )
-        by_name = {f.name: f.dataType.simpleString() for f in snap.schema}
-        if any(
-            by_name.get(c) not in self._SCOPED_PARTITION_TYPES
-            for c in pby
-        ):
+        by_name = self._scoped_types(pby, snap)
+        if by_name is None:
             raise ValueError(
                 "compact_hot_partitions requires integral/string "
                 "partition columns; use compact()"
@@ -1717,7 +1621,7 @@ class ManagedTable:
                 .sortWithinPartitions(*[F.col(c) for c in pby], F.col("__z"))
                 .drop("__z")
             )
-        self._write_scoped(m, pby, set(hot), df, by_name, op="compact")
+        self._write_scoped(m, pby, hot, df, by_name, "compact")
         return hot
 
     def optimize(
@@ -1972,7 +1876,7 @@ class GroupTransaction:
         op: str,
     ) -> None:
         """Record one table's staged (written but uncommitted) snapshot.
-        Called by ``ManagedTable.write``/``_write_scoped`` when a txn is
+        Called by ``ManagedTable._write_snapshot`` when a txn is
         passed; not part of the public surface."""
         if self._done:
             raise RuntimeError("GroupTransaction already committed")

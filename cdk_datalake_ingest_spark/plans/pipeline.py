@@ -153,7 +153,14 @@ class StagePipeline:
 
     # -- write --------------------------------------------------------------
     def write(self, df: DataFrame, stage_path: str) -> str:
-        """Load-type dispatch (SJ:470-518) with retry (SJ:467-503).
+        """Load-type dispatch (SJ:470-518) with retry (SJ:467-503) of
+        ``df``, the output of :meth:`transform`.
+
+        When every id and filter-date column made it through the
+        transform, ``transform`` already ran W1 on exactly the merge's
+        keys and recency columns, so the merge takes ``df`` as
+        key-unique (``source_unique``) instead of deduplicating it a
+        second time.
 
         Returns the write mode used. Raises NoDataToMigrateException for
         an empty batch (without destroying existing data — see
@@ -173,6 +180,8 @@ class StagePipeline:
                 cutoff = lookback_period_cutoff(self.table.delay_incremental_ini)
                 delete_pred = F.col("processperiod").cast("int") >= F.lit(cutoff)
                 mode = "delete+merge"
+        ids, dates = self.id_columns, self.filter_date_columns
+        deduped = bool(ids and dates) and set(ids + dates) <= set(df.columns)
         last_error: Exception | None = None
         for attempt in range(1, self.max_write_attempts + 1):
             try:
@@ -186,6 +195,7 @@ class StagePipeline:
                         keys=self.id_columns,
                         order_by=self.filter_date_columns or None,
                         delete_predicate=delete_pred,
+                        source_unique=deduped,
                     )
                 table.vacuum()
                 return mode

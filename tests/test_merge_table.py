@@ -368,6 +368,84 @@ def test_partition_scoped_merge_equals_dataflow_merge(spark, tmp_path, seed):
     assert got == want
 
 
+@pytest.mark.parametrize("seed", [11, 23])
+def test_declared_partition_merge_equals_dataflow_merge(
+    spark, tmp_path, monkeypatch, seed
+):
+    """The declared-partition path (``touched_partitions``, which needs
+    every partition column among the keys) against the pure-dataflow
+    merge: with delete hits outside the declared partitions it gives
+    the same rows; over a cap of 1 it falls back to a full rewrite
+    (no file linked forward) with the same rows; without a delete
+    predicate it runs no Spark job before the write."""
+    import random
+
+    rng = random.Random(seed)
+    periods = [20240101 + d for d in range(6)]
+    tgt_rows = [
+        Row(k=k, period=rng.choice(periods), v=f"t{k}") for k in range(40)
+    ]
+    hot = periods[:3]
+    src_rows = [
+        Row(k=r.k, period=r.period, v=f"s{r.k}")
+        for r in rng.sample([r for r in tgt_rows if r.period in hot], 6)
+    ] + [Row(k=100 + i, period=rng.choice(hot), v="new") for i in range(4)]
+    declared = sorted({(r.period,) for r in src_rows})
+    keys = ["period", "k"]
+    # hits the three partitions the source never touches, plus some
+    # rows inside the declared ones
+    delete = (F.col("period") >= periods[3]) | (F.col("k") % 7 == 0)
+    target = spark.createDataFrame(tgt_rows)
+    source = spark.createDataFrame(src_rows)
+
+    def rows_of(df):
+        return {(r.k, r.period, r.v) for r in df.collect()}
+
+    sc = spark.sparkContext
+    group = f"declared-hint-{seed}"
+
+    def merged(name, delete_predicate):
+        t = ManagedTable(spark, tmp_path / f"{name}{seed}")
+        t.write(target, partition_by=["period"])
+        sc.setJobGroup(group, "declared-partition merge")
+        try:
+            t.merge_upsert(
+                source, keys=keys, delete_predicate=delete_predicate,
+                touched_partitions=declared,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return t
+
+    want = rows_of(merge_dataframes(target, source, keys,
+                                    delete_predicate=delete))
+    assert rows_of(merged("hint_del", delete).read()) == want
+
+    with monkeypatch.context() as mp:
+        mp.setattr(ManagedTable, "MAX_SCOPED_PARTITIONS", 1)
+        t = merged("hint_cap", delete)
+    assert rows_of(t.read()) == want
+    old, new = _inode_map(t.path / "v00001"), _inode_map(t.path / "v00002")
+    assert not set(old.values()) & set(new.values())
+
+    jobs_before_write = []
+    write_scoped = ManagedTable._write_scoped
+
+    def spy(self, *a, **kw):
+        jobs_before_write.append(
+            len(sc.statusTracker().getJobIdsForGroup(group))
+        )
+        return write_scoped(self, *a, **kw)
+
+    monkeypatch.setattr(ManagedTable, "_write_scoped", spy)
+    earlier = len(sc.statusTracker().getJobIdsForGroup(group))
+    t = merged("hint_nodel", None)
+    assert jobs_before_write == [earlier]
+    assert rows_of(t.read()) == rows_of(
+        merge_dataframes(target, source, keys)
+    )
+
+
 def test_scoped_merge_bails_on_genuine_hive_sentinel_value(
     spark, tmp_path, monkeypatch
 ):
@@ -704,9 +782,9 @@ def test_scoped_merge_partition_keys_skip_table_scan_and_stay_correct(
 
 def test_insert_only_merge_skips_the_target_join(spark, tmp_path, monkeypatch):
     """r13 fast path: merging into partitions that don't exist in the
-    snapshot must never build the target-join plan (merge_dataframes) —
+    snapshot must never build the target-join plan (upsert_unique) —
     the deduped source IS the result. Pinned by poisoning
-    merge_dataframes for the duration."""
+    upsert_unique for the duration."""
     import cdk_datalake_ingest_spark.operators.table as tbl_mod
 
     t = ManagedTable(spark, tmp_path / "insonly")
@@ -715,9 +793,9 @@ def test_insert_only_merge_skips_the_target_join(spark, tmp_path, monkeypatch):
     )
 
     def boom(*a, **k):  # pragma: no cover
-        raise AssertionError("merge_dataframes called on insert-only merge")
+        raise AssertionError("upsert_unique called on insert-only merge")
 
-    monkeypatch.setattr(tbl_mod, "merge_dataframes", boom)
+    monkeypatch.setattr(tbl_mod, "upsert_unique", boom)
     t.merge_upsert(
         spark.createDataFrame([Row(b=1, k=2, v="b")]),
         keys=["b", "k"],

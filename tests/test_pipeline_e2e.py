@@ -154,6 +154,56 @@ def test_transactional_delete_window(spark, tmp_path, monkeypatch):
     assert rows == {2: 202608, 4: 202608}
 
 
+def test_stage_merge_dedups_the_source_once(spark, tmp_path, monkeypatch):
+    """transform() already ran W1 on the merge keys, so the delete+merge
+    takes its output as key-unique: the DataFrame handed to the scoped
+    write holds one row_number Window per use of the source (the upsert
+    union and the anti-join keys), 2 in all — not a second dedup of
+    each copy on top of transform's (4)."""
+    import dataclasses
+    import re
+
+    from cdk_datalake_ingest_spark.operators import incremental
+    from cdk_datalake_ingest_spark.plans import pipeline
+
+    monkeypatch.setattr(
+        pipeline,
+        "lookback_period_cutoff",
+        lambda m: incremental.lookback_period_cutoff(
+            m, now=dt.datetime(2026, 8, 1)
+        ),
+    )
+    columns = [
+        dataclasses.replace(c, is_partition=c.column_name == "processperiod")
+        for c in COLUMNS
+    ]
+    table_t = TableSpec(
+        target_table_name="PE_TXN_PART",
+        id_column="id",
+        load_type="incremental",
+        source_table_type="t",
+        delay_incremental_ini=-2,
+    )
+    pipe = StagePipeline(spark, table_t, columns, strict=True, retry_sleep_base=0.0)
+    stage = str(tmp_path / "stage_tp")
+    pipe.run(spark.createDataFrame(RAW_BATCH1), stage)
+
+    windows = []
+    write_scoped = ManagedTable._write_scoped
+
+    def spy(self, m, pby, touched, df, *a, **kw):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        windows.append(len(re.findall(r"\bWindow \[row_number\(\)", plan)))
+        return write_scoped(self, m, pby, touched, df, *a, **kw)
+
+    monkeypatch.setattr(ManagedTable, "_write_scoped", spy)
+    result = pipe.run(spark.createDataFrame(RAW_BATCH2), stage)
+    assert getattr(result, "write_mode") == "delete+merge"
+    assert windows == [2]
+    rows = {r.id: r.processperiod for r in ManagedTable(spark, stage).read().collect()}
+    assert rows == {2: 202608, 4: 202608}
+
+
 def test_error_isolation_degrades_to_warning(spark):
     bad_cols = COLUMNS + [
         ColumnSpec("broken", 99, "int", "fn_transform_ByteMagic(nonexistent_col,$U)")

@@ -338,16 +338,21 @@ def formatted_plan(spark, df) -> str:
     return df._jdf.queryExecution().explainString(mode)
 
 
+def hand_kept_tail(old: str, generated) -> str:
+    """The hand-kept end of a generated markdown document: everything
+    from its first ``## `` heading that is not in ``generated``, or ''
+    when every heading is generated."""
+    for m in re.finditer(r"^## (.+)$", old, re.M):
+        if m.group(1) not in generated:
+            return old[m.start():]
+    return ""
+
+
 def write_plans_md(spark) -> None:
     from cdk_datalake_ingest_spark.queries import QUERIES
 
     path = ROOT / "PLANS.md"
-    old = path.read_text()
-    kept = [
-        m.start()
-        for m in re.finditer(r"^## (.+)$", old, re.M)
-        if m.group(1) not in NOTES
-    ]
+    kept = hand_kept_tail(path.read_text(), NOTES)
     out = [
         "# PLANS — physical plans of the headline queries\n",
         "Generated by `python tools/dump_plans.py` (sf0.001 fixtures; the plan\n"
@@ -369,7 +374,7 @@ def write_plans_md(spark) -> None:
             out.append("\n" + b.strip() + "\n")
         out.append("```\n")
     if kept:
-        out.append("\n" + old[kept[0]:])
+        out.append("\n" + kept)
     path.write_text("".join(out))
     print("wrote PLANS.md")
 

@@ -3,7 +3,8 @@ and at a synthesized ~10x corpus, record wall-time scaling, and check
 the physical plan SHAPE does not change with scale (a plan that flips
 strategy at 10x would flip harder at the 100 TB target).
 
-Usage: python tools/scale_rehearsal.py  (writes /root/repo/SCALE.md)
+Usage: python tools/scale_rehearsal.py  (rewrites SCALE.md's generated
+sections and keeps its hand-kept ones)
 
 Corpus synthesis (10 shifted copies of the sf0.1 tables, written once
 to /tmp/spark_graft_scale10 and reused):
@@ -41,10 +42,13 @@ import time
 from collections import Counter
 from pathlib import Path
 
+ROOT = Path(__file__).resolve().parents[1]
 if __name__ == "__main__":
     # the repo root takes this directory's place on sys.path, where
     # tools/profile.py would shadow the standard library's profile module
-    sys.path[0] = str(Path(__file__).resolve().parents[1])
+    sys.path[0] = str(ROOT)
+
+from tools.dump_plans import hand_kept_tail  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
 SCALE_DIR = "/tmp/spark_graft_scale10"
@@ -539,6 +543,17 @@ def main() -> None:
                       "t10x": round(ac10, 2),
                       "ratio": round(ac10 / ac1, 2)}))
 
+    path = ROOT / "SCALE.md"
+    path.write_text(render_scale_md(rows, path.read_text()))
+    print(f"wrote {path}")
+    spark.stop()
+
+
+def render_scale_md(rows, old: str) -> str:
+    """SCALE.md from the rehearsal ``rows`` (name, 1x s, 10x s, ratio,
+    plan-shape note) and the generated sections, followed by the
+    hand-kept sections of ``old``: everything from its first heading
+    this script does not write."""
     md = [
         "# SCALE — 10x rehearsal (round 11)",
         "",
@@ -620,9 +635,8 @@ def main() -> None:
     md += _bpe_train_section()
     md += _sessionizer_section()
     md += _profile_section()
-    Path("/root/repo/SCALE.md").write_text("\n".join(md))
-    print("wrote /root/repo/SCALE.md")
-    spark.stop()
+    generated = {line[3:] for line in md if line.startswith("## ")}
+    return "\n".join(md) + hand_kept_tail(old, generated)
 
 
 if __name__ == "__main__":
