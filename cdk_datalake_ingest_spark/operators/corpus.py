@@ -22,8 +22,10 @@ Scale notes (100 TB):
   table itself is large (AQE then picks a sort-merge join).
 - Multi-pass operators tokenize ONCE (r13): unigram_lm_scores,
   nb_quality_scores, scrub_boilerplate, and dedup_substrings project
-  a shared ``(id, tokens)`` stage their passes derive from (persisted
-  by default, ``cache=False`` to opt out), so the normalize regex —
+  a shared ``(id, tokens)`` stage their passes derive from, persisted
+  and appended to the caller's ``persisted`` list
+  (``session.persist_into``; MEMORY_AND_DISK, so a stage past memory
+  spills to disk), so the normalize regex —
   the dominant narrow cost on real documents — runs once per row
   instead of once per pass. Measured on the 10x rehearsal corpus:
   10x walls fall 1.3-2.4x, scaling ratios flatten to 1.4-2.2x
@@ -44,6 +46,11 @@ from cdk_datalake_ingest_spark.functions.text import tokens
 from cdk_datalake_ingest_spark.operators.dedup import (
     word_shingles,
     word_shingles_of_tokens,
+)
+from cdk_datalake_ingest_spark.session import (
+    ensure_parallelism,
+    persist_into,
+    require_unique_non_null_ids,
 )
 
 
@@ -70,7 +77,6 @@ def unigram_lm_scores(
     id_col: str = "doc_id",
     alpha: float = 0.5,
     broadcast_vocab: bool = True,
-    cache: bool = True,
     persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Score each document by its average per-token surprisal (bits
@@ -88,11 +94,11 @@ def unigram_lm_scores(
     rare-token (often noise) documents — both tails are what quality
     filters cut.
 
-    ``cache`` (default True) persists the (id, tokens) projection the
-    vocabulary build AND the scoring pass both explode from (the r13
+    The (id, tokens) projection the vocabulary build AND the scoring
+    pass both explode from is persisted into ``persisted`` (the r13
     single-tokenize recipe): the normalize regex — the dominant narrow
     cost on real documents — runs once per row instead of once per
-    pass. Pass False for a corpus too large to persist.
+    pass.
     """
     # NO fan-out here (measured, r14): this is an aggregation-shaped
     # operator — ensure_parallelism before the tokenize projection made
@@ -104,10 +110,7 @@ def unigram_lm_scores(
     base = docs.select(
         F.col(id_col), tokens(F.col(text_col)).alias("__toks")
     )
-    if cache:
-        base = base.persist()
-        if persisted is not None:
-            persisted.append(base)
+    base = persist_into(base, persisted)
     toks = base.select(
         F.col(id_col), F.explode(F.col("__toks")).alias("tok")
     )
@@ -142,7 +145,6 @@ def nb_quality_scores(
     text_col: str = "text",
     id_col: str = "doc_id",
     alpha: float = 0.5,
-    cache: bool = True,
     persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Classifier-based quality filtering (the fastText-classifier
@@ -184,13 +186,10 @@ def nb_quality_scores(
         tokens(F.col(text_col)).alias("__toks"),
         F.col(label_col).cast("boolean").alias("__pos"),
     )
-    if cache:
-        # shared single-tokenize projection (r13): the vocabulary
-        # build and the scoring join both explode from it, and the
-        # prior aggregate reads only __pos off the same cache
-        labeled = labeled.persist()
-        if persisted is not None:
-            persisted.append(labeled)
+    # shared single-tokenize projection (r13): the vocabulary build
+    # and the scoring join both explode from it, and the prior
+    # aggregate reads only __pos off the same cache
+    labeled = persist_into(labeled, persisted)
     toks = labeled.select(
         F.col(id_col),
         "__pos",
@@ -392,8 +391,6 @@ def boilerplate_ngrams(
     the downstream scrubber joins this (small, frequency-filtered)
     relation back against the corpus.
     """
-    from cdk_datalake_ingest_spark.session import ensure_parallelism
-
     docs = ensure_parallelism(docs)
     sh = docs.select(
         F.col(id_col).alias("_id"), F.col(text_col).alias("__t")
@@ -415,7 +412,6 @@ def scrub_boilerplate(
     text_col: str = "text",
     id_col: str = "doc_id",
     check_ids: bool = True,
-    cache: bool = True,
     persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Boilerplate REMOVAL (the scrub half of C4's repeated-span
@@ -432,7 +428,7 @@ def scrub_boilerplate(
     fixture scale the gate's warm cost is aggregation-bound and
     unchanged (~3 s at sf0.1, measured both shapes); the win is the
     scan count — at 100 TB three full corpus reads become one read
-    plus cached (or, uncached, cheap array-typed) reuse, and the
+    plus cached reuse, and the
     normalize regex — the dominant narrow cost on real documents —
     runs once per row instead of three times. The frequency-filtered
     n-gram relation is Zipf-small and broadcast; positions are
@@ -442,11 +438,10 @@ def scrub_boilerplate(
     flagged spans pass through unchanged (left join). Output:
     ``(id_col, clean_text, n_removed_tokens)``.
 
-    ``cache`` (default True) persists the token projection so the two
-    consumers share one tokenize; blocks release via the
-    ContextCleaner once the result is dropped (the _minhash_banded
-    contract) — pass False for a corpus too large to persist and pay
-    the second tokenize instead.
+    The token projection is persisted into ``persisted`` so the two
+    consumers share one tokenize (``session.persist_into``: without
+    the list, blocks release via the ContextCleaner once the result is
+    dropped).
 
     ``id_col`` must be UNIQUE and non-NULL (the covered-position
     rejoin is name-keyed: a NULL id would come back UNSCRUBBED, and a
@@ -454,21 +449,13 @@ def scrub_boilerplate(
     cross-scrub both) — probed by default, see
     session.require_unique_non_null_ids (memoized per session;
     ``check_ids=False`` skips it when the key is guaranteed)."""
-    from cdk_datalake_ingest_spark.session import (
-        ensure_parallelism,
-        require_unique_non_null_ids,
-    )
-
     if check_ids:
         require_unique_non_null_ids(docs, id_col, "scrub_boilerplate")
     docs = ensure_parallelism(docs)
     base = docs.select(
         F.col(id_col), tokens(F.col(text_col)).alias("__toks")
     )
-    if cache:
-        base = base.persist()
-        if persisted is not None:
-            persisted.append(base)
+    base = persist_into(base, persisted)
     sh = base.select(
         F.col(id_col),
         F.posexplode(word_shingles_of_tokens(F.col("__toks"), n)).alias(
@@ -541,7 +528,6 @@ def dedup_substrings(
     text_col: str = "text",
     id_col: str = "doc_id",
     check_ids: bool = True,
-    cache: bool = True,
     persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Exact substring deduplication (Lee et al. 2022, "Deduplicating
@@ -569,10 +555,9 @@ def dedup_substrings(
     raw window text, so the gate cross-checks the hashed path against
     the exact one.
 
-    ``cache`` (default True) persists the shared (id, tokens)
-    projection the windows AND the reassembly derive from (the r13
-    single-tokenize restructure, same as scrub_boilerplate) — pass
-    False for a corpus too large to persist and pay a second tokenize.
+    The shared (id, tokens) projection the windows AND the
+    reassembly derive from is persisted into ``persisted`` (the r13
+    single-tokenize restructure, same as scrub_boilerplate).
 
     ``id_col`` must be UNIQUE and non-NULL (it keys both the
     MIN-survivor struct and the covered-position rejoin; a NULL id
@@ -580,11 +565,6 @@ def dedup_substrings(
     id would merge two documents' covered spans and rewrite both with
     the union) — probed by default via
     session.require_unique_non_null_ids (memoized per session)."""
-    from cdk_datalake_ingest_spark.session import (
-        ensure_parallelism,
-        require_unique_non_null_ids,
-    )
-
     if length < 1:
         raise ValueError(
             f"dedup_substrings: window length must be >= 1, got {length}"
@@ -599,10 +579,7 @@ def dedup_substrings(
     base = docs.select(
         F.col(id_col), tokens(F.col(text_col)).alias("__toks")
     )
-    if cache:
-        base = base.persist()
-        if persisted is not None:
-            persisted.append(base)
+    base = persist_into(base, persisted)
     wins = (
         base.select(
             F.col(id_col),
@@ -734,8 +711,6 @@ def bpe_train_merges(
             f"sequential-BPE merge order.",
             stacklevel=2,
         )
-    from cdk_datalake_ingest_spark.session import ensure_parallelism
-
     words = (
         # tokens() already lowercases through the pinned normalize_text
         # path (simple case mapping for İ/Σ); re-lowering here would be
@@ -1025,13 +1000,7 @@ def bpe_tokenize(
             "mode='inline' for short models on keyless frames"
         )
     if check_ids:
-        from cdk_datalake_ingest_spark.session import (
-            require_unique_non_null_ids,
-        )
-
         require_unique_non_null_ids(docs, id_col, "bpe_tokenize (vocab mode)")
-    from cdk_datalake_ingest_spark.session import ensure_parallelism
-
     # fan out before the tokenize+explode (no-op at production
     # partition counts — same rationale as bpe_train_merges' words
     # stage: a single-file fixture corpus otherwise tokenizes on one

@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from cdk_datalake_ingest_spark.functions.sqltext import _attr_sql
-from cdk_datalake_ingest_spark.session import ensure_parallelism
+from cdk_datalake_ingest_spark.session import ensure_parallelism, persist_into
 from pyspark.sql.functions import pandas_udf
 
 #: THE pinned ASCII-whitespace class (Java's \s, which RE2-based
@@ -303,7 +303,6 @@ def _minhash_banded(
     bands: int,
     seed: int,
     prime: int,
-    cache: bool,
     persisted: list[DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared signature stage of the MinHash family: ``(banded,
@@ -337,25 +336,11 @@ def _minhash_banded(
     shingled = shingled.withColumn(
         "__h", shingle_hashes(F.col("__sh"), seed)
     )
-    if cache:
-        # the plan scans the shingle sets from four branches (band
-        # self-join left/right + verify left/right); shingling+hashing
-        # is the expensive narrow stage, so materialize it once. At
-        # cluster scale prefer a checkpoint/persisted table for very
-        # large corpora. Lifetime: persist() registers a CacheManager
-        # entry that lives until unpersist() — Python GC of the
-        # returned plans never drops the JVM-side entry, and the
-        # planner substitutes the cached relation into any later query
-        # whose subtree matches (cross-query contamination). Callers
-        # needing deterministic release (the streaming ingest loop, the
-        # query-registry gates via their session's "gate_persisted"
-        # list) pass ``persisted``, collect the appended DataFrames,
-        # and call ``df.unpersist()`` when their consumers are done —
-        # the public API that drops both the blocks and the
-        # CacheManager entry.
-        shingled = shingled.persist()
-        if persisted is not None:
-            persisted.append(shingled)
+    # the plan scans the shingle sets from four branches (band
+    # self-join left/right + verify left/right); shingling+hashing is
+    # the expensive narrow stage, so materialize it once. At cluster
+    # scale prefer a checkpoint/persisted table for very large corpora.
+    shingled = persist_into(shingled, persisted)
     # Empty-shingle drop ABOVE the cache boundary (r14): written below
     # the persist, Catalyst inlines the `__sh` alias into the predicate
     # and pushes `size(word_shingles(text)) > 0` all the way to the
@@ -363,9 +348,7 @@ def _minhash_banded(
     # the pushed filter, once in the projection), and on a single-file
     # fixture the pushed copy runs as a 1-task stage (measured 1.0 s in
     # curate's SQL node metrics). Above the InMemoryRelation it is a
-    # cheap array-length check per cached row. With cache=False there
-    # is no barrier and the planner may still push it — acceptable: an
-    # uncached caller has opted into recomputation-over-memory anyway.
+    # cheap array-length check per cached row.
     shingled = shingled.filter(F.size("__sh") > 0)
     sig = shingled.select(
         F.col(id_col),
@@ -397,7 +380,6 @@ def minhash_signature_index(
     bands: int = 8,
     seed: int = 42,
     prime: int = MINHASH_PRIME,
-    cache: bool = True,
     persisted: list[DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The PERSISTABLE near-dup index of a corpus: ``(bands_df,
@@ -410,13 +392,12 @@ def minhash_signature_index(
     Index size is O(corpus shingles), dominated by sets_df — at 100 TB
     bucket both tables by id so the verify join co-locates.
 
-    ``cache`` (default True) persists the shared shingle+hash stage so
-    writing BOTH returned relations shingles the corpus once, not
-    twice; pass False for a corpus too large to persist and accept the
-    second pass (or checkpoint upstream)."""
+    The shared shingle+hash stage is persisted (``session.persist_into``:
+    MEMORY_AND_DISK, appended to ``persisted``), so writing BOTH
+    returned relations shingles the corpus once, not twice."""
     return _minhash_banded(
         df, id_col, text_col, shingle_size, num_hashes, bands, seed,
-        prime, cache=cache, persisted=persisted,
+        prime, persisted=persisted,
     )
 
 
@@ -432,7 +413,6 @@ def incremental_near_dup(
     jaccard_threshold: float = 0.5,
     seed: int = 42,
     prime: int = MINHASH_PRIME,
-    cache: bool = True,
     max_batch_rows: int | None = 4_000_000,
     persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
@@ -444,10 +424,11 @@ def incremental_near_dup(
 
     The signature parameters MUST match the ones the index was built
     with (same seed/hashes/bands — they define the probe space).  Only
-    the new batch is shingled (``cache`` persists that stage so the
-    bands and sets branches share one pass), and the batch's banded
-    signatures are PINNED broadcast into the candidate join — the
-    stored index streams through the probe without ever shuffling.
+    the new batch is shingled (that stage is persisted into
+    ``persisted``, so the bands and sets branches share one pass), and
+    the batch's banded signatures are PINNED broadcast into the
+    candidate join — the stored index streams through the probe
+    without ever shuffling.
     That makes batch size the contract, and ``max_batch_rows``
     ENFORCES it: the batch is counted up front (short-circuit
     ``limit(n+1).count()``, same as the other boundary guards) and a
@@ -481,7 +462,7 @@ def incremental_near_dup(
             )
     new_bands, new_sets = _minhash_banded(
         new_docs, id_col, text_col, shingle_size, num_hashes, bands,
-        seed, prime, cache=cache, persisted=persisted,
+        seed, prime, persisted=persisted,
     )
     return probe_signatures(
         new_bands, new_sets, index_bands, index_sets, id_col,
@@ -548,7 +529,6 @@ def minhash_near_dup_pairs(
     jaccard_threshold: float = 0.5,
     seed: int = 42,
     prime: int = MINHASH_PRIME,
-    cache: bool = True,
     persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
     """MinHash + LSH banding near-duplicate candidate pairs, verified
@@ -562,14 +542,14 @@ def minhash_near_dup_pairs(
     width controls shuffle volume, not document text. rows_per_band =
     num_hashes/bands tunes the candidate recall/precision.
 
-    ``persisted``: the shared deterministic-release hook (see
-    ``_minhash_banded``) — the internally persisted shingle stage is
-    appended so the caller can ``unpersist()`` it when consumers are
+    ``persisted``: the deterministic-release hook (see
+    ``session.persist_into``) — the internally persisted shingle stage
+    is appended so the caller can ``unpersist()`` it when consumers are
     done instead of leaking a session-lifetime CacheManager entry.
     """
     banded, sets = _minhash_banded(
         df, id_col, text_col, shingle_size, num_hashes, bands, seed,
-        prime, cache, persisted=persisted,
+        prime, persisted=persisted,
     )
     return pairs_from_signatures(banded, sets, id_col, jaccard_threshold)
 

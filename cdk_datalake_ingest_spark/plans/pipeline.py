@@ -56,13 +56,7 @@ class StagePipeline:
         strict: bool = False,
         max_write_attempts: int = 3,
         retry_sleep_base: float = 60.0,
-        sort_mode: str = "within-partitions",
     ):
-        """``sort_mode``: 'within-partitions' (default — clusters rows
-        for write locality without the global range-shuffle; at 100 TB
-        a global sort of the stage table is never affordable),
-        'global' (bug-compatible with the reference's write-time
-        ``orderBy``, SJ:464), or 'none'."""
         self.spark = spark
         self.table = table
         self.columns = sorted(columns, key=lambda c: c.column_id)
@@ -70,7 +64,6 @@ class StagePipeline:
         self.strict = strict
         self.max_write_attempts = max_write_attempts
         self.retry_sleep_base = retry_sleep_base
-        self.sort_mode = sort_mode
 
     # -- column sets driven by the is_* flags (SJ:390-404) -----------------
     @property
@@ -137,7 +130,10 @@ class StagePipeline:
         # COLUMN_ID-ordered projection + declared sort (SJ:459-464).
         # Bug-compat note: when filter-date columns exist the reference
         # orders by them descending (variable shadowing at SJ:452);
-        # otherwise by IS_ORDER_BY ascending.
+        # otherwise by IS_ORDER_BY ascending.  The sort is within
+        # partitions: it clusters rows for write locality, where the
+        # reference's global ``orderBy`` (SJ:464) would add a range
+        # shuffle no 100 TB stage table can afford.
         names = [c.column_name for c in applied]
         out = out.select(*names)
         order = (
@@ -145,9 +141,7 @@ class StagePipeline:
             if dates
             else [F.col(c.column_name) for c in applied if c.is_order_by]
         )
-        if order and self.sort_mode == "global":
-            out = out.orderBy(*order)
-        elif order and self.sort_mode == "within-partitions":
+        if order:
             out = out.sortWithinPartitions(*order)
         return TransformResult(df=out, failed_columns=failed)
 

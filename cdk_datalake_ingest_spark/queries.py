@@ -63,7 +63,10 @@ from cdk_datalake_ingest_spark.operators.incremental import (
     between_filter,
     filter_expression,
 )
-from cdk_datalake_ingest_spark.operators.merge import merge_dataframes
+from cdk_datalake_ingest_spark.operators.merge import (
+    merge_dataframes,
+    upsert_unique,
+)
 from cdk_datalake_ingest_spark.sources.parquet import ts_us_expr
 from cdk_datalake_ingest_spark.operators.sessionize import sessionize
 from cdk_datalake_ingest_spark.plans.pipeline import StagePipeline
@@ -98,9 +101,27 @@ def _prep(spark: SparkSession) -> SparkSession:
     return spark
 
 
+# This module's entries in the session's ``engine_state``, each created
+# on first use:
+#
+# - ``gate_persisted``: the last registry query's operator-internal
+#   persists, released before the next one plans (:func:`_persisted`);
+# - ``tables``: (sf_dir, name[, derivation]) -> analyzed scan
+#   (:func:`_t` / :func:`_events`);
+# - ``staging``: (gate, sf_dir, ...) -> staged input drop directory —
+#   never a checkpoint or sink dir, since a reused availableNow
+#   checkpoint would mark every input file already processed;
+# - ``kmeans``, ``pq``, ``bpe``: trained k-means centroids, PQ
+#   codebooks and BPE merge tables (train once, reuse everywhere);
+# - ``supp_count``: sf_dir -> supplier row count (:func:`_partsupp`).
+def _memos(spark: SparkSession, entry: str) -> dict:
+    """``engine_state(spark)[entry]``, created empty on first use."""
+    return engine_state(spark).setdefault(entry, {})
+
+
 def _memo(spark: SparkSession, entry: str, key, build):
     """``engine_state(spark)[entry][key]``, built on first request."""
-    memo = engine_state(spark)[entry]
+    memo = _memos(spark, entry)
     if key not in memo:
         memo[key] = build()
     return memo[key]
@@ -108,7 +129,7 @@ def _memo(spark: SparkSession, entry: str, key, build):
 
 def _persisted(spark: SparkSession) -> list[DataFrame]:
     """The session's gate persists, drained by _with_cache_isolation."""
-    return engine_state(spark)["gate_persisted"]
+    return engine_state(spark).setdefault("gate_persisted", [])
 
 
 #: Table handles live in the session's ``engine_state`` ("tables"):
@@ -674,7 +695,8 @@ def merge_upsert_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     source = latest_record_dedup(
         ev.filter(F.col("ts_us") >= TS_JAN20_US), _EVENT_KEYS, _EVENT_ORDER
     ).select("user_id", "event_type", "event_id", "ts_us", "value")
-    return merge_dataframes(target, source, _EVENT_KEYS)
+    # W1 made the source key-unique: merge it as it is
+    return upsert_unique(target, source, _EVENT_KEYS)
 
 
 MERGE_UPSERT_SQL = f"""
@@ -704,7 +726,7 @@ def merge_delete_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     source = latest_record_dedup(
         ev.filter(F.col("ts_us") >= TS_JAN15_US), _EVENT_KEYS, _EVENT_ORDER
     ).select(*cols)
-    return merge_dataframes(
+    return upsert_unique(
         target,
         source,
         _EVENT_KEYS,
@@ -757,7 +779,7 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "quality_tier",
         F.when(F.col("value") >= 50.0, F.lit("high")).otherwise(F.lit("low")),
     )
-    return merge_dataframes(target, source, _EVENT_KEYS, broadcast_source=True)
+    return upsert_unique(target, source, _EVENT_KEYS, broadcast_source=True)
 
 
 SCHEMA_EVOLUTION_SQL = f"""
@@ -5865,7 +5887,7 @@ def bpe_train_merges_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # literal local table (bpe_train_merges collects per-step argmaxes
     # during construction), so the publishing collect is free.
     out = bpe_train_merges(docs, n_merges=6)
-    engine_state(spark)["bpe"][(sf_dir, 6)] = [
+    _memos(spark, "bpe")[(sf_dir, 6)] = [
         (r["lhs"], r["rhs"]) for r in out.orderBy("step").collect()
     ]
     return out
@@ -5953,7 +5975,7 @@ def bpe_tokenize_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that gate) when invoked standalone. Training is deterministic, and
     # the oracle replays the ENTIRE train+apply path, so a stale model
     # cannot pass
-    models = engine_state(spark)["bpe"]
+    models = _memos(spark, "bpe")
     if (sf_dir, 6) not in models:
         bpe_train_merges_docs(spark, sf_dir)
     merges = models[(sf_dir, 6)]
@@ -6302,7 +6324,7 @@ def kmeans_train_hash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # always retrain (that is the thing being timed); publish to the
     # cache so the dedup consumer sees the same centroids
     _, cents = lloyd_kmeans(corpus, k=32, iters=_KM_ITERS, dim=_KM_DIM)
-    engine_state(spark)["kmeans"][key] = cents
+    _memos(spark, "kmeans")[key] = cents
     rows = [
         (cid + 1, d, float(cents[cid][d]))
         for cid in range(len(cents))
@@ -6574,7 +6596,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # always retrain (this gate's timing IS the training cost) and
     # publish so the IVFADC consumer reuses the identical codebooks —
     # the kmeans_train_hash_docs / semantic_dedup_hash_docs pattern
-    engine_state(spark)["pq"].pop(sf_dir, None)
+    _memos(spark, "pq").pop(sf_dir, None)
     books = _pq_codebooks(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 8)
     return pq_adc_topk(

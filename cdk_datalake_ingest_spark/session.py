@@ -100,6 +100,19 @@ def ensure_parallelism(df, min_partitions: int | None = None):
     return df
 
 
+def persist_into(df, persisted: list | None):
+    """``df.persist()`` (MEMORY_AND_DISK: spills past memory), appended
+    to ``persisted`` when given — the one rule for an operator's reused
+    intermediate.  The CacheManager entry lives until ``unpersist()``
+    (plan GC never drops it, and later queries with a matching subtree
+    read it), so a caller needing deterministic release passes
+    ``persisted`` and unpersists its frames once consumers are done."""
+    df = df.persist()
+    if persisted is not None:
+        persisted.append(df)
+    return df
+
+
 def require_non_null_ids(df, id_col: str, caller: str) -> None:
     """Probe for NULL values in a row-identity column and raise — the
     shared guard for operators that reassemble or anti-join results by
@@ -147,31 +160,17 @@ _VERIFIED_IDS_CAP = 256
 # read-only for the session's life (the fixture dirs are); entries
 # keyed by plan semantics cannot see files mutated in place either —
 # see :func:`verified_ids_cache_clear` and ``register_tables(force=True)``.
-# The entries:
+# Each owner creates its own entries on first use (``queries._memos``
+# and ``queries._persisted``, ``sql._views``); this module's are:
 #
-# - ``gate_persisted``: the last registry query's operator-internal
-#   persists, released before the next one plans;
-# - ``tables``: (sf_dir, name[, derivation]) -> analyzed scan
-#   (``queries._t`` / ``queries._events``);
 # - ``verified_ids``: semanticHash -> [(DataFrame, id_col)] probed clean
 #   by :func:`require_unique_non_null_ids`, at most _VERIFIED_IDS_CAP;
-# - ``views``: temp view -> the sf_dir it points at
-#   (``sql.register_tables`` / ``sql.invalidate_view``);
-# - ``staging``: (gate, sf_dir, ...) -> staged input drop directory —
-#   never a checkpoint or sink dir, since a reused availableNow
-#   checkpoint would mark every input file already processed;
-# - ``kmeans``, ``pq``, ``bpe``: trained k-means centroids, PQ
-#   codebooks and BPE merge tables (train once, reuse everywhere);
-# - ``supp_count``: sf_dir -> supplier row count (``queries._partsupp``);
 # - ``static_conf_checked``: :func:`apply_runtime_conf` compared the
 #   session's static conf with ENGINE_CONF (it warns once per session).
 def engine_state(spark: SparkSession) -> dict:
     """``spark``'s engine state, created on first use."""
     return spark.__dict__.get(_STATE_ATTR) or spark.__dict__.setdefault(
-        _STATE_ATTR,
-        {"gate_persisted": [], "tables": {}, "verified_ids": {}, "views": {},
-         "staging": {}, "kmeans": {}, "pq": {}, "bpe": {}, "supp_count": {},
-         "static_conf_checked": False},
+        _STATE_ATTR, {"verified_ids": {}, "static_conf_checked": False}
     )
 
 

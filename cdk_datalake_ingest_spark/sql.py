@@ -24,6 +24,14 @@ TABLES = (
     "events documents embeddings"
 ).split()
 
+
+def _views(spark: SparkSession) -> dict:
+    """This module's ``engine_state`` entry, created on first use: temp
+    view -> the sf_dir it currently points at (:func:`register_tables`
+    / :func:`invalidate_view`)."""
+    return engine_state(spark).setdefault("views", {})
+
+
 def referenced_tables(query: str) -> list[str]:
     """Catalog tables mentioned (word-boundary) in the query text.
     Over-approximate by design: a CTE or string literal named like a
@@ -52,7 +60,7 @@ def register_tables(
     # session's view map records where each view CURRENTLY points, so
     # switching dirs and back re-registers — correctness never depends
     # on the cache, only cost does.
-    views = engine_state(spark)["views"]
+    views = _views(spark)
     for t in names:
         if (
             not force
@@ -80,7 +88,7 @@ def invalidate_view(spark: SparkSession, name: str) -> None:
     ``register_tables`` (today: ``ManagedTable.register``), so a view
     name colliding with a catalog table never leaves the cache
     claiming the view still points at an sf_dir it no longer does."""
-    engine_state(spark)["views"].pop(name, None)
+    _views(spark).pop(name, None)
 
 
 def run_sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdk_datalake_ingest_spark.functions.text import token_count
+from cdk_datalake_ingest_spark.streaming.events import start_stream
 
 DOC_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -90,22 +91,11 @@ def run_complete_overwrite(
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(out_dir)
 
-    spark = result.sparkSession
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            result.writeStream.outputMode("complete")
-            .foreachBatch(_apply)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        # restore as soon as the query has latched its plan conf: the
-        # batch jobs foreachBatch submits use the batch session conf,
-        # and nothing else in the session should inherit the override.
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prior)
+    writer = (
+        result.writeStream.outputMode("complete")
+        .foreachBatch(_apply)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+    )
+    q = start_stream(result.sparkSession, writer, state_partitions)
     q.awaitTermination()

@@ -11,7 +11,27 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import StructType
+
+
+def start_stream(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    shuffle_partitions: int | None = None,
+) -> StreamingQuery:
+    """``writer.start()`` under ``shuffle_partitions`` (when given):
+    the query clones the session conf at start(), so the caller's
+    value is restored right after without affecting the query."""
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    if shuffle_partitions is not None:
+        spark.conf.set(key, str(shuffle_partitions))
+    try:
+        return writer.start()
+    finally:
+        if shuffle_partitions is not None:
+            spark.conf.set(key, prior)
 
 
 def stream_events(
@@ -100,23 +120,12 @@ def run_available_now(
     streaming/corpus.py:run_complete_overwrite for the full note).
     Leave None when the state is genuinely wide (corpus-keyed dedup,
     high-cardinality sessionization at production scale)."""
-    spark = result.sparkSession
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            result.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        # StreamExecution clones the session at start(), so restoring
-        # here cannot affect the running query — only the caller's
-        # session state.
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prior)
+    writer = (
+        result.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+    )
+    q = start_stream(result.sparkSession, writer, state_partitions)
     q.awaitTermination()

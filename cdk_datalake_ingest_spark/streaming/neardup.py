@@ -63,6 +63,8 @@ the same hygiene any high-commit-rate Delta table needs (OPTIMIZE).
 
 from __future__ import annotations
 
+import inspect
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -77,7 +79,8 @@ from cdk_datalake_ingest_spark.operators.table import (
     GroupTransaction,
     ManagedTable,
 )
-from cdk_datalake_ingest_spark.session import is_local_master
+from cdk_datalake_ingest_spark.session import is_local_master, persist_into
+from cdk_datalake_ingest_spark.streaming.events import start_stream
 
 #: batch-tag column appended to both sink tables; also their
 #: partition column and the leading merge key
@@ -124,6 +127,16 @@ _BANDS_SCHEMA = _bands_schema("doc_id")
 _SETS_SCHEMA = _sets_schema("doc_id")
 
 
+def _truncates_plans(spark: SparkSession) -> bool:
+    """Whether ``ingest_batch`` truncates its plans: only on plain
+    local masters.  The truncation is a ``localCheckpoint``, whose
+    blocks live on executors and are lost with them; in one local JVM
+    that loss is the driver's own death, but on a cluster an executor
+    loss would fail the batch instead of recomputing it from
+    lineage."""
+    return is_local_master(spark.sparkContext.master)
+
+
 def ingest_batch(
     batch_df: DataFrame,
     index_bands: DataFrame,
@@ -132,15 +145,19 @@ def ingest_batch(
     text_col: str = "text",
     jaccard_threshold: float = 0.5,
     persisted: list[DataFrame] | None = None,
-    eager_pin: bool = True,
-    **sig_params,
+    *,
+    shingle_size: int = 3,
+    num_hashes: int = 32,
+    bands: int = 8,
+    seed: int = 42,
+    prime: int = MINHASH_PRIME,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """One ingest step as pure batch logic (unit-testable without a
     stream): ``(survivors, surv_bands, surv_sets)`` — the batch rows
     kept per the module survivor rule plus their signature relations,
-    ready to append to the index tables. ``sig_params`` (shingle_size/
-    num_hashes/bands/seed/prime) must match the index's build
-    parameters — they define the probe space.
+    ready to append to the index tables. The signature keywords
+    (shingle_size/num_hashes/bands/seed/prime) must match the index's
+    build parameters — they define the probe space.
 
     The batch is shingled exactly ONCE: all three consumers (the
     within-batch pair join, the index probe, the appended signatures)
@@ -155,33 +172,20 @@ def ingest_batch(
     Without the list, release falls to the GC-driven ContextCleaner
     (fine for one-shot callers; a long drain must not rely on it).
 
-    ``eager_pin`` (default True) materializes the survivor ID sets at
-    call time, so every returned relation agrees even if the caller
-    MUTATES the index paths (appends) before consuming them — the
-    contract the r12 localCheckpoint provided, now via persist+count so
-    release stays public-API. Callers whose index reads are pinned
-    snapshots (the streaming sink: ManagedTable versions are immutable)
-    pass False and save two scheduler round-trips per batch; their
-    recompute-under-eviction is deterministic by construction. Residual
-    caveat vs a true checkpoint: persist keeps lineage, so an evicted
-    block of an ``eager_pin`` id-set could in principle recompute
-    against a caller-mutated NON-snapshot index — the id-sets are tiny
-    (ids only) and MEMORY_AND_DISK, so eviction does not occur in
-    practice; snapshot-read callers are immune outright."""
-    track: list[DataFrame] = [] if persisted is None else persisted
+    The survivor id sets are persisted lazily: nothing is computed
+    until the caller consumes the returned relations, so a caller must
+    read the index through a pinned snapshot (a ManagedTable version,
+    as ``apply_ingest_step`` does) or consume the results before it
+    mutates the index paths.
+
+    Plan truncation follows the master (:func:`_truncates_plans`): on
+    a local master ``banded`` and ``sets`` are ``localCheckpoint``-ed,
+    on a cluster ``banded`` is persisted instead."""
     banded, sets = _minhash_banded(
-        batch_df,
-        id_col,
-        text_col,
-        sig_params.get("shingle_size", 3),
-        sig_params.get("num_hashes", 32),
-        sig_params.get("bands", 8),
-        sig_params.get("seed", 42),
-        sig_params.get("prime", MINHASH_PRIME),
-        cache=sig_params.get("cache", True),
-        persisted=track,
+        batch_df, id_col, text_col, shingle_size, num_hashes, bands, seed,
+        prime, persisted=persisted,
     )
-    if sig_params.get("truncate_plans", False):
+    if _truncates_plans(batch_df.sparkSession):
         # Per-batch PLAN truncation (r15, guide §4 applied to plan
         # construction): the ~12 downstream ops this function and the
         # two sink merges build on banded/sets each pay JVM-side
@@ -196,13 +200,10 @@ def ingest_batch(
         # MEMORY_AND_DISK and released by the ContextCleaner once the
         # batch's plans are dropped (GC-driven, not the deterministic
         # `persisted` drain — batch-sized blocks, bounded by eviction;
-        # the 200-batch soak bounds the steady state). Batch callers
-        # building ONE plan per query keep the persist path below:
-        # they pay construction once, and a truncation job would not
-        # amortize.
+        # the 200-batch soak bounds the steady state).
         banded = banded.localCheckpoint()
         sets = sets.localCheckpoint()
-    elif sig_params.get("cache", True):
+    else:
         # the banded relation is consumed ~4x (pair join left+right,
         # probe, survivor-signature write); each use would re-run the
         # 32-permutation signature expression from the cached shingle
@@ -210,8 +211,7 @@ def ingest_batch(
         # three ints, far smaller than the shingle stage — so pinning
         # it trades trivial memory for computing the signatures once
         # per batch.
-        banded = banded.persist()
-        track.append(banded)
+        banded = persist_into(banded, persisted)
     # (a) within-batch domination: every id_b of a within-batch pair
     # has a smaller near-dup id_a (the pair tail emits id_a < id_b)
     batch_pairs = pairs_from_signatures(
@@ -223,14 +223,10 @@ def ingest_batch(
     # anti-join), and without the pin each consumer re-executes the
     # whole pair self-join + exact-verify pipeline — profiled at ~3x
     # the drain's compute before this landed.
-    und_ids = (
-        batch_df.select(id_col)
-        .join(dominated, id_col, "left_anti")
-        .persist()
+    und_ids = persist_into(
+        batch_df.select(id_col).join(dominated, id_col, "left_anti"),
+        persisted,
     )
-    track.append(und_ids)
-    if eager_pin:
-        und_ids.count()
     # (b) probe the persisted index with the undominated remainder only
     # (same survivor set, strictly less probe work) — signatures come
     # from the SHARED stage via an id semi-join, never a re-shingle
@@ -241,10 +237,9 @@ def ingest_batch(
         jaccard_threshold,
     )
     dup_new = index_hits.select(F.col("new_id").alias(id_col)).distinct()
-    surv_ids = und_ids.join(dup_new, id_col, "left_anti").persist()
-    track.append(surv_ids)
-    if eager_pin:
-        surv_ids.count()
+    surv_ids = persist_into(
+        und_ids.join(dup_new, id_col, "left_anti"), persisted
+    )
     survivors = batch_df.join(surv_ids, id_col, "left_semi")
     surv_bands = banded.join(surv_ids, id_col, "left_semi")
     surv_sets = sets.join(surv_ids, id_col, "left_semi")
@@ -402,16 +397,6 @@ def migrate_split_index(
     )
 
 
-def _truncates_by_default(spark: SparkSession) -> bool:
-    """Whether the ingest loop truncates each batch's plans unless the
-    caller says otherwise: only on plain local masters.  The truncation
-    is a ``localCheckpoint``, whose blocks live on executors and are
-    lost with them; in one local JVM that loss is the driver's own
-    death, but on a cluster an executor loss would fail the batch
-    instead of recomputing it from lineage."""
-    return is_local_master(spark.sparkContext.master)
-
-
 def apply_ingest_step(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -474,10 +459,6 @@ def apply_ingest_step(
         import uuid
 
         run_key = uuid.uuid4().hex[:16]
-    # the LOOP caller rebuilds the whole dedup plan every micro-batch,
-    # so the per-batch plan-truncation pays for itself here (and only
-    # here — see ingest_batch's truncate_plans note), on local masters
-    sig_params.setdefault("truncate_plans", _truncates_by_default(spark))
     persisted: list[DataFrame] = []
     try:
         not_self = ~(
@@ -536,9 +517,6 @@ def apply_ingest_step(
             text_col,
             jaccard_threshold,
             persisted=persisted,
-            # snapshot reads above: lazy recompute is deterministic, so
-            # skip the two pinning jobs (fixed-cost floor, r12 verdict)
-            eager_pin=False,
             **sig_params,
         )
         # one atomic commit across both sinks (r14): each merge stages
@@ -695,7 +673,14 @@ def stream_near_dup_ingest(
     batch's listing + link cost ~2.6x by batch 100; one batch-sized
     file per partition holds the per-batch cost flat. Raise it when
     individual batches are large enough that a single parquet file
-    per sink partition would be unhealthy (multi-GB)."""
+    per sink partition would be unhealthy (multi-GB).
+
+    ``sig_params`` are ``ingest_batch``'s signature keywords
+    (shingle_size/num_hashes/bands/seed/prime); any other key raises
+    ``TypeError`` before the stream starts."""
+    # the loop forwards sig_params into every micro-batch: bind them to
+    # ingest_batch now, so a typo (num_hash) fails before the first one
+    inspect.signature(ingest_batch).bind(None, None, None, **sig_params)
 
     # stream identity for the probe's self-step exclusion: stable
     # across restarts of the same checkpoint (replayed batches keep
@@ -745,23 +730,14 @@ def stream_near_dup_ingest(
                 if tbl.exists:
                     tbl.vacuum(keep_snapshots=1)
 
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
-    try:
-        writer = (
-            source_stream.writeStream.outputMode("append")
-            .foreachBatch(_apply)
-            .option("checkpointLocation", checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        q = writer.start()
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prior)
+    writer = (
+        source_stream.writeStream.outputMode("append")
+        .foreachBatch(_apply)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    q = start_stream(spark, writer, shuffle_partitions)
     if not available_now:
         return q
     q.awaitTermination()

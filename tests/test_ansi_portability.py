@@ -127,18 +127,25 @@ def test_minhash_near_dup_is_ansi_invariant(spark, ansi_flip):
     )
 
     def run():
-        return sorted(
-            (r[0], r[1])
-            for r in minhash_near_dup_pairs(
-                _docs(spark).filter(F.col("text").isNotNull()),
-                "doc_id",
-                "text",
-                jaccard_threshold=0.5,
-                cache=False,
+        # drained after each pass, so the ANSI-on pass recomputes the
+        # shingle stage instead of reading the ANSI-off pass's blocks
+        tracked = []
+        try:
+            return sorted(
+                (r[0], r[1])
+                for r in minhash_near_dup_pairs(
+                    _docs(spark).filter(F.col("text").isNotNull()),
+                    "doc_id",
+                    "text",
+                    jaccard_threshold=0.5,
+                    persisted=tracked,
+                )
+                .select("id_a", "id_b")
+                .collect()
             )
-            .select("id_a", "id_b")
-            .collect()
-        )
+        finally:
+            for df in tracked:
+                df.unpersist()
 
     off, on = _both(ansi_flip, run)
     assert off == on

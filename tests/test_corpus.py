@@ -483,10 +483,9 @@ def test_partsupp_requires_four_suppliers(spark):
     import pytest
 
     from cdk_datalake_ingest_spark import queries as q
-    from cdk_datalake_ingest_spark.session import engine_state
 
     fake = "/nonexistent/sub4supplier"
-    counts = engine_state(spark)["supp_count"]
+    counts = q._memos(spark, "supp_count")
     counts[fake] = 3
     try:
         with pytest.raises(ValueError, match="needs >= 4"):
@@ -502,7 +501,6 @@ def test_register_tables_memoizes_per_session_and_sf_dir(spark, monkeypatch):
     again (the cache tracks where each view currently points — never
     what was once registered), and force=True busts the cache."""
     from cdk_datalake_ingest_spark import sql as sql_mod
-    from cdk_datalake_ingest_spark.session import engine_state
 
     reads = []
     real_reader = spark.read
@@ -515,7 +513,7 @@ def test_register_tables_memoizes_per_session_and_sf_dir(spark, monkeypatch):
     monkeypatch.setattr(
         type(spark), "read", property(lambda self: CountingReader())
     )
-    engine_state(spark)["views"].clear()
+    sql_mod._views(spark).clear()
     a, b = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
 
     sql_mod.register_tables(spark, a, ["orders", "customer"])
@@ -528,7 +526,7 @@ def test_register_tables_memoizes_per_session_and_sf_dir(spark, monkeypatch):
     assert len(reads) == 4  # back to the old dir -> re-register again
     sql_mod.register_tables(spark, a, ["orders"], force=True)
     assert len(reads) == 5  # force busts the cache
-    engine_state(spark)["views"].clear()
+    sql_mod._views(spark).clear()
 
 
 def test_referenced_tables_word_boundary():
@@ -765,9 +763,10 @@ def test_unique_id_probe_memoize_opt_out(spark):
 
 def test_token_projection_operators_track_persisted_frames(spark):
     """ADVICE r13: the four operators sharing the persisted (id,
-    tokens) projection expose the same `persisted` tracking hook as
-    _minhash_banded, so long-running callers can release the cached
-    token stages deterministically instead of waiting on the
+    tokens) projection, the MinHash family sharing the persisted
+    shingle stage, and the near-dup ingest step all hand every frame
+    they persist to `persisted`, so long-running callers can release
+    the cached stages deterministically instead of waiting on the
     GC-driven ContextCleaner."""
     from pyspark import StorageLevel
 
@@ -776,6 +775,16 @@ def test_token_projection_operators_track_persisted_frames(spark):
         nb_quality_scores,
         scrub_boilerplate,
         unigram_lm_scores,
+    )
+    from cdk_datalake_ingest_spark.operators.dedup import (
+        incremental_near_dup,
+        minhash_near_dup_pairs,
+        minhash_signature_index,
+    )
+    from cdk_datalake_ingest_spark.streaming.neardup import (
+        _BANDS_SCHEMA,
+        _SETS_SCHEMA,
+        ingest_batch,
     )
 
     docs = spark.createDataFrame(
@@ -787,11 +796,25 @@ def test_token_projection_operators_track_persisted_frames(spark):
         "doc_id long, text string, label boolean",
     )
     none_level = StorageLevel(False, False, False, False, 1)
+    no_bands = spark.createDataFrame([], _BANDS_SCHEMA)
+    no_sets = spark.createDataFrame([], _SETS_SCHEMA)
     for run in (
         lambda tr: unigram_lm_scores(docs, persisted=tr),
         lambda tr: nb_quality_scores(docs, "label", persisted=tr),
         lambda tr: scrub_boilerplate(docs, persisted=tr),
         lambda tr: dedup_substrings(docs, length=3, persisted=tr),
+        lambda tr: minhash_near_dup_pairs(
+            docs, "doc_id", "text", persisted=tr
+        ),
+        lambda tr: minhash_signature_index(
+            docs, "doc_id", "text", persisted=tr
+        )[1],
+        lambda tr: incremental_near_dup(
+            docs, no_bands, no_sets, "doc_id", "text", persisted=tr
+        ),
+        lambda tr: ingest_batch(
+            docs.select("doc_id", "text"), no_bands, no_sets, persisted=tr
+        )[0],
     ):
         tracked = []
         out = run(tracked)

@@ -145,12 +145,12 @@ def test_engine_built_session_does_not_warn(caplog):
     [("local[4]", True), ("local-cluster[2,1,1024]", False), ("spark://h:7077", False)],
 )
 def test_near_dup_loop_truncates_plans_only_on_local_masters(master, local):
-    # the loop's localCheckpoint blocks die with their executor, so the
-    # truncation default holds only where the executor is the driver
+    # the loop's localCheckpoint blocks die with their executor, so
+    # ingest_batch truncates only where the executor is the driver
     from types import SimpleNamespace
 
     from cdk_datalake_ingest_spark.streaming import neardup
 
     assert S.is_local_master(master) is local
     spark = SimpleNamespace(sparkContext=SimpleNamespace(master=master))
-    assert neardup._truncates_by_default(spark) is local
+    assert neardup._truncates_plans(spark) is local

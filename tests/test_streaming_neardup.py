@@ -12,12 +12,23 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from cdk_datalake_ingest_spark.streaming.neardup import (
     ingest_batch,
     stream_near_dup_ingest,
 )
+
+
+@pytest.fixture
+def drained():
+    """A ``persisted=`` list; every frame in it is unpersisted after the
+    test."""
+    frames = []
+    yield frames
+    for df in frames:
+        df.unpersist()
 
 
 def _docs(spark, rows):
@@ -43,13 +54,13 @@ def _empty_index(spark):
     )
 
 
-def test_within_batch_smaller_id_dominates(spark):
+def test_within_batch_smaller_id_dominates(spark, drained):
     bands, sets = _empty_index(spark)
     batch = _docs(
         spark, [(1, _NEAR), (2, _NEAR2), (9, _OTHER)]
     )
     survivors, surv_bands, surv_sets = ingest_batch(
-        batch, bands, sets, cache=False
+        batch, bands, sets, persisted=drained
     )
     kept = sorted(r["doc_id"] for r in survivors.collect())
     assert kept == [1, 9]  # 2 dominated by 1; 9 unrelated
@@ -58,7 +69,7 @@ def test_within_batch_smaller_id_dominates(spark):
     assert {r["doc_id"] for r in surv_sets.collect()} == {1, 9}
 
 
-def test_domination_is_by_anyone_earlier_not_greedy_mis(spark):
+def test_domination_is_by_anyone_earlier_not_greedy_mis(spark, drained):
     from cdk_datalake_ingest_spark.operators.dedup import (
         minhash_signature_index,
     )
@@ -69,18 +80,22 @@ def test_domination_is_by_anyone_earlier_not_greedy_mis(spark):
     # batch id (1) is its near-dup, even though 1 itself is dropped by
     # the index probe. Documented conservative semantics.
     idx_bands, idx_sets = minhash_signature_index(
-        _docs(spark, [(100, _NEAR)]), "doc_id", "text", cache=False
+        _docs(spark, [(100, _NEAR)]), "doc_id", "text", persisted=drained
     )
     batch = _docs(spark, [(1, _NEAR2), (3, _NEAR3)])
-    survivors, _, _ = ingest_batch(batch, idx_bands, idx_sets, cache=False)
+    survivors, _, _ = ingest_batch(
+        batch, idx_bands, idx_sets, persisted=drained
+    )
     kept = sorted(r["doc_id"] for r in survivors.collect())
     assert kept == []  # 1 dropped by index, 3 dropped by domination
 
 
-def test_no_shingle_docs_always_survive(spark):
+def test_no_shingle_docs_always_survive(spark, drained):
     bands, sets = _empty_index(spark)
     batch = _docs(spark, [(1, ""), (2, None), (3, "one two")])
-    survivors, surv_bands, _ = ingest_batch(batch, bands, sets, cache=False)
+    survivors, surv_bands, _ = ingest_batch(
+        batch, bands, sets, persisted=drained
+    )
     kept = sorted(r["doc_id"] for r in survivors.collect())
     # "", NULL and a 2-token doc (below shingle_size=3) have no
     # shingles -> never near-dup candidates -> all kept
@@ -126,7 +141,6 @@ def test_stream_matches_sequential_batches_and_index_grows(spark):
         f"{tmp}/kept",
         f"{tmp}/index",
         f"{tmp}/ckpt",
-        cache=False,
     )
     got = {
         r["doc_id"]: r["ingest_batch"]
@@ -161,7 +175,7 @@ def test_restart_resumes_from_the_index_tables(spark):
     )
     stream_near_dup_ingest(
         spark, src1, f"{tmp}/kept", f"{tmp}/index",
-        f"{tmp}/ckpt1", cache=False,
+        f"{tmp}/ckpt1",
     )
     second = _docs(spark, [(20, _NEAR), (21, "novel text entirely")])
     drop2 = _stage_time_ordered_drop([second], "ndup_r2_", 2)
@@ -172,7 +186,7 @@ def test_restart_resumes_from_the_index_tables(spark):
     )
     stream_near_dup_ingest(
         spark, src2, f"{tmp}/kept", f"{tmp}/index",
-        f"{tmp}/ckpt2", cache=False,
+        f"{tmp}/ckpt2",
     )
     kept = sorted(
         r["doc_id"] for r in _read_table(spark, f"{tmp}/kept").collect()
@@ -207,13 +221,13 @@ def test_replay_of_a_batch_is_idempotent(spark):
     # a REPLAY shares the original's stream identity (the streaming
     # sink's checkpoint-scoped run_key); an omitted run_key now mints
     # a fresh nonce per call (ADVICE r13) — not a replay
-    apply_ingest_step(spark, b0, 0, *args, run_key="rk", cache=False)
-    apply_ingest_step(spark, b1, 1, *args, run_key="rk", cache=False)
+    apply_ingest_step(spark, b0, 0, *args, run_key="rk")
+    apply_ingest_step(spark, b1, 1, *args, run_key="rk")
     before = [_table_fingerprint(spark, p) for p in args]
     # replay the LAST batch (the standard redelivery case)...
-    apply_ingest_step(spark, b1, 1, *args, run_key="rk", cache=False)
+    apply_ingest_step(spark, b1, 1, *args, run_key="rk")
     # ...and an EARLIER one (paranoid: out-of-order redelivery)
-    apply_ingest_step(spark, b0, 0, *args, run_key="rk", cache=False)
+    apply_ingest_step(spark, b0, 0, *args, run_key="rk")
     after = [_table_fingerprint(spark, p) for p in args]
     assert after == before
     # and the survivor set is the expected one: 1 dominates 2; 11 is a
@@ -225,7 +239,7 @@ def test_replay_of_a_batch_is_idempotent(spark):
     assert kept == {1: 0, 9: 0, 12: 1}
 
 
-def test_replay_after_partial_failure_recovers_survivors(spark):
+def test_replay_after_partial_failure_recovers_survivors(spark, drained):
     """Worst-case crash: the batch's SIGNATURES reached the index but
     its survivors never landed. The replay must still keep the batch's
     documents — the probe excludes the batch's own index rows, so they
@@ -241,7 +255,7 @@ def test_replay_after_partial_failure_recovers_survivors(spark):
     tmp = tempfile.mkdtemp(prefix="ndup_partial_")
     args = (f"{tmp}/kept", f"{tmp}/index")
     b0 = _docs(spark, [(1, _NEAR), (9, _OTHER)])
-    apply_ingest_step(spark, b0, 0, *args, run_key="rk", cache=False)
+    apply_ingest_step(spark, b0, 0, *args, run_key="rk")
     # simulate the crash for batch 1: signatures written, survivors NOT
     # (structurally impossible through the r14 atomic group commit;
     # kept as the defense-in-depth contract for direct callers with
@@ -252,7 +266,7 @@ def test_replay_after_partial_failure_recovers_survivors(spark):
         "doc_id", "band", "band_hash"
     )
     sets0 = idx.filter(F.col("kind") == "sets").select("doc_id", "__set")
-    _, sb, ss = ingest_batch(b1, bands0, sets0, cache=False)
+    _, sb, ss = ingest_batch(b1, bands0, sets0, persisted=drained)
     # same tags apply_ingest_step(run_key="rk") would write: the crash
     # happened INSIDE that step, so its partial rows carry its identity
     from cdk_datalake_ingest_spark.streaming.neardup import fold_index_rows
@@ -265,7 +279,7 @@ def test_replay_after_partial_failure_recovers_survivors(spark):
     )
     # replay batch 1 through the real step: doc 21 must survive even
     # though its own signatures already sit in the index
-    apply_ingest_step(spark, b1, 1, *args, run_key="rk", cache=False)
+    apply_ingest_step(spark, b1, 1, *args, run_key="rk")
     kept = sorted(
         r["doc_id"] for r in _read_table(spark, f"{tmp}/kept").collect()
     )
@@ -301,7 +315,7 @@ def test_fresh_checkpoint_reingest_converges(spark):
         )
         stream_near_dup_ingest(
             spark, src, f"{tmp}/kept", f"{tmp}/index",
-            ckpt, cache=False,
+            ckpt,
         )
 
     drain(f"{tmp}/ckpt1")
@@ -333,7 +347,7 @@ def test_continuous_mode_returns_live_query_and_ingests(spark):
     )
     q = stream_near_dup_ingest(
         spark, src, f"{tmp}/kept", f"{tmp}/index",
-        f"{tmp}/ckpt", cache=False, available_now=False,
+        f"{tmp}/ckpt", available_now=False,
     )
     assert q is not None
     try:
@@ -359,7 +373,8 @@ def test_ingest_batch_tracks_persisted_frames_for_public_release(spark):
     tracked = []
     survivors, _, _ = ingest_batch(batch, bands, sets, persisted=tracked)
     assert survivors.count() == 2
-    assert len(tracked) >= 3  # shingled + banded + und_ids (+ surv_ids)
+    # shingled + und_ids + surv_ids (+ banded on a cluster master)
+    assert len(tracked) >= 3
     for df in tracked:
         df.unpersist()
     assert all(
@@ -389,7 +404,7 @@ def test_maintain_every_vacuums_between_batches(spark):
     )
     stream_near_dup_ingest(
         spark, src, f"{tmp}/kept", f"{tmp}/index",
-        f"{tmp}/ckpt", cache=False, maintain_every=1,
+        f"{tmp}/ckpt", maintain_every=1,
     )
     kept = {
         r["doc_id"]: r["ingest_batch"]
@@ -404,7 +419,9 @@ def test_maintain_every_vacuums_between_batches(spark):
         assert len(vdirs) == 1, (sub, vdirs)
 
 
-def test_first_batch_partial_crash_between_index_merges_recovers(spark):
+def test_first_batch_partial_crash_between_index_merges_recovers(
+    spark, drained
+):
     """Direct-caller defense (the crash-between-index-merges scenario
     this test originally pinned is structurally impossible since the
     r14 fold + atomic group commit): a hand-seeded index table holding
@@ -422,7 +439,7 @@ def test_first_batch_partial_crash_between_index_merges_recovers(spark):
     tmp = tempfile.mkdtemp(prefix="ndup_fb_")
     b0 = _docs(spark, [(1, _NEAR), (9, _OTHER)])
     bands0, sets0 = _empty_index(spark)
-    _, sb, ss = ingest_batch(b0, bands0, sets0, cache=False)
+    _, sb, ss = ingest_batch(b0, bands0, sets0, persisted=drained)
     # simulate: index written with batch 0's signatures, survivors NOT
     ManagedTable(spark, f"{tmp}/index").write(
         fold_index_rows(sb, ss)
@@ -434,7 +451,7 @@ def test_first_batch_partial_crash_between_index_merges_recovers(spark):
     # the survivors despite their own signatures sitting in the index
     apply_ingest_step(
         spark, b0, 0, f"{tmp}/kept", f"{tmp}/index",
-        run_key="rk", cache=False,
+        run_key="rk",
     )
     kept = sorted(
         r["doc_id"] for r in _read_table(spark, f"{tmp}/kept").collect()
@@ -482,7 +499,7 @@ def test_checkpoint_path_reuse_mints_fresh_run_key(spark):
         )
         stream_near_dup_ingest(
             spark, src, f"{tmp}/kept", f"{tmp}/index",
-            f"{tmp}/ckpt2", cache=False,
+            f"{tmp}/ckpt2",
         )
 
     drain()
@@ -515,7 +532,6 @@ def test_pre_r13_plain_parquet_index_is_a_loud_error(spark):
             0,
             f"{tmp}/kept",
             f"{tmp}/index",
-            cache=False,
         )
 
 
@@ -537,7 +553,7 @@ def test_batch_sinks_commit_atomically(spark, monkeypatch):
     tmp = tempfile.mkdtemp(prefix="ndup_atomic_")
     args = (f"{tmp}/kept", f"{tmp}/index")
     b0 = _docs(spark, [(1, _NEAR), (9, _OTHER)])
-    apply_ingest_step(spark, b0, 0, *args, run_key="rk", cache=False)
+    apply_ingest_step(spark, b0, 0, *args, run_key="rk")
     versions_before = [
         ManagedTable(spark, p).versions() for p in args
     ]
@@ -555,14 +571,14 @@ def test_batch_sinks_commit_atomically(spark, monkeypatch):
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError, match="crash before commit point"):
-        apply_ingest_step(spark, b1, 1, *args, run_key="rk", cache=False)
+        apply_ingest_step(spark, b1, 1, *args, run_key="rk")
     monkeypatch.undo()
     # NOTHING advanced — no partial batch to recover from
     assert [
         ManagedTable(spark, p).versions() for p in args
     ] == versions_before
     # the replay lands batch 1 whole
-    apply_ingest_step(spark, b1, 1, *args, run_key="rk", cache=False)
+    apply_ingest_step(spark, b1, 1, *args, run_key="rk")
     kept = sorted(
         r["doc_id"] for r in _read_table(spark, f"{tmp}/kept").collect()
     )
@@ -605,7 +621,7 @@ def test_explicit_run_key_threads_through_the_stream(spark):
     )
     stream_near_dup_ingest(
         spark, src, f"{tmp}/kept", f"{tmp}/index",
-        f"{tmp}/ckpt", run_key="caller-owned-key", cache=False,
+        f"{tmp}/ckpt", run_key="caller-owned-key",
     )
     keys = {
         r["run_key"]
@@ -621,7 +637,7 @@ def test_explicit_run_key_threads_through_the_stream(spark):
     assert not os.path.exists(f"{tmp}/ckpt/{RUN_KEY_FILE}")
 
 
-def test_r13_split_index_raises_and_migrates(spark):
+def test_r13_split_index_raises_and_migrates(spark, drained):
     """An r13 two-table index passed as index_dir must fail loudly (no
     'kind' column), and migrate_split_index must fold it — preserving
     batch/run_key bookkeeping — so the drain resumes deduping against
@@ -640,7 +656,7 @@ def test_r13_split_index_raises_and_migrates(spark):
     tmp = tempfile.mkdtemp(prefix="ndup_migr_")
     b0 = _docs(spark, [(10, _NEAR), (11, _OTHER)])
     bands0, sets0 = _empty_index(spark)
-    _, sb, ss = ingest_batch(b0, bands0, sets0, cache=False)
+    _, sb, ss = ingest_batch(b0, bands0, sets0, persisted=drained)
     # build the r13 layout: separate bands/sets tables with tags
     for name, df, in (("bands", sb), ("sets", ss)):
         ManagedTable(spark, f"{tmp}/{name}").write(
@@ -660,7 +676,6 @@ def test_r13_split_index_raises_and_migrates(spark):
             0,
             f"{tmp}/kept",
             f"{tmp}/bands",
-            cache=False,
         )
     migrate_split_index(
         spark, f"{tmp}/bands", f"{tmp}/sets", f"{tmp}/index"
@@ -675,9 +690,30 @@ def test_r13_split_index_raises_and_migrates(spark):
         f"{tmp}/kept",
         f"{tmp}/index",
         run_key="new",
-        cache=False,
     )
     kept = sorted(
         r["doc_id"] for r in _read_table(spark, f"{tmp}/kept").collect()
     )
     assert kept == [10, 11, 21]
+
+
+def test_unknown_signature_keys_raise_before_the_stream_starts(spark):
+    """A signature key ``ingest_batch`` does not take — a typo such as
+    ``num_hash``, or a removed option such as ``cache`` — raises instead
+    of silently building and probing a default-parameter index; the
+    stream form raises before it touches the source or the checkpoint."""
+    import os
+
+    bands, sets = _empty_index(spark)
+    batch = _docs(spark, [(1, _NEAR)])
+    for bad in ({"num_hash": 64}, {"cache": False}):
+        with pytest.raises(TypeError):
+            ingest_batch(batch, bands, sets, **bad)
+    tmp = tempfile.mkdtemp(prefix="ndup_sig_")
+    for bad in ({"num_hash": 64}, {"truncate_plans": True}):
+        with pytest.raises(TypeError, match=next(iter(bad))):
+            stream_near_dup_ingest(
+                spark, None, f"{tmp}/kept", f"{tmp}/index",
+                f"{tmp}/ckpt", **bad,
+            )
+    assert not os.path.exists(f"{tmp}/ckpt")
