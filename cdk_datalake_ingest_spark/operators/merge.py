@@ -5,16 +5,21 @@ Re-expresses the reference's Delta MERGE
 aje-stage-dms-load.py:492-495) and the transactional delete-before-merge
 (processperiod >= lookback cutoff, :488-491) as a join rewrite:
 
-    merged = source ∪ (target ⟕anti source on keys)
+    merged = source ⟗ kept-target on keys, the source row winning
+             wherever it exists
 
 which is exactly upsert when the source is key-unique. Persistence of
 the result (atomic swap) is ManagedTable's job (operators/table.py);
 with delta-spark installed ManagedTable uses real Delta MERGE instead.
 
-Scale notes: one shuffle on the merge keys (broadcast the source side
-when it is a small incremental batch — pass ``broadcast_source=True``);
-the delete-window predicate prunes target partitions before the
-anti-join when the table is partitioned on the window column.
+Scale notes: one full outer join on the (null-safe) merge keys reads
+the source once, as Delta's own MERGE rewrite does; the union-plus-
+anti-join form read it twice, once per branch. A full outer join cannot
+broadcast, so ``broadcast_source=True`` keeps that form
+(``source ∪ (target ⟕anti broadcast(source))``) for a small source over
+a target that should not be shuffled. The delete-window predicate
+prunes target partitions before the join when the table is
+partitioned on the window column.
 """
 
 from __future__ import annotations
@@ -25,6 +30,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cdk_datalake_ingest_spark.operators.dedup import latest_record_dedup
+
+#: marker column the full-outer merge puts on the source side: non-NULL
+#: exactly on the joined rows a source row took part in
+_SOURCE_MARK = "__merge_src"
 
 
 def merge_dataframes(
@@ -43,7 +52,8 @@ def merge_dataframes(
     - ``delete_predicate``: rows of ``target`` where this is TRUE are
       deleted before the merge (A7). NULL predicate values keep the row
       (Delta DELETE semantics).
-    - Schema evolution: union is by name with missing columns allowed,
+    - Schema evolution: the result has the columns and types of
+      ``source.unionByName(target, allowMissingColumns=True)``,
       mirroring delta.schema.autoMerge (aje-stage-dms-load.py:44).
     """
     source = dedup_source(source, keys, order_by)
@@ -69,30 +79,89 @@ def upsert_unique(
     broadcast_source: bool = False,
 ) -> DataFrame:
     """:func:`merge_dataframes` for a ``source`` that is already one row
-    per key: nothing is added to dedup it."""
+    per key: nothing is added to dedup it.
+
+    The rule is one full outer join of ``source`` with the kept target
+    rows on null-safe ``keys``; each output row is the source row where
+    one joined, else the target row. The source is evaluated once. A
+    target row matched by a source row is replaced by it (a target that
+    holds a key twice yields the source row twice, as Delta's MERGE
+    updates every matched target row). Columns and types are those of
+    ``source.unionByName(target, allowMissingColumns=True)``: source
+    columns first, then target-only ones, NULL where a side lacks the
+    column, each cast to the union's widened type.
+
+    ``broadcast_source=True`` keeps the union form, ``source ∪ (target
+    ⟕anti broadcast(source keys))``, which reads the source twice but
+    streams the target past a broadcast instead of shuffling it: the
+    full outer join cannot broadcast either side."""
     if delete_predicate is not None:
         target = target.filter(
             ~F.coalesce(delete_predicate, F.lit(False))
         )
-    src_for_join = F.broadcast(source) if broadcast_source else source
-    survivors = match_keys(
-        target, src_for_join.select(*keys), keys, "left_anti"
+    if broadcast_source:
+        survivors = drop_matched(
+            target, F.broadcast(source).select(*keys), keys
+        )
+        return source.unionByName(survivors, allowMissingColumns=True)
+    # analysis only (no job): the union fixes the result's column order
+    # and widened types
+    union = source.unionByName(target, allowMissingColumns=True).schema
+    # unionByName matches names under the session's case rule
+    fold = (
+        (lambda n: n)
+        if source.sparkSession.conf.get("spark.sql.caseSensitive") == "true"
+        else str.lower
     )
-    return source.unionByName(survivors, allowMissingColumns=True)
+    types = {
+        alias: {fold(f.name): f.dataType for f in df.schema}
+        for alias, df in (("__s", source), ("__t", target))
+    }
+
+    def side(alias: str, f) -> str:
+        dtype = types[alias].get(fold(f.name))
+        if dtype is None:
+            return "NULL"
+        ref = f"{alias}.{_quoted(f.name)}"
+        if dtype == f.dataType:
+            return ref
+        return f"CAST({ref} AS {f.dataType.simpleString()})"
+
+    marked = source.select("*", F.lit(True).alias(_SOURCE_MARK))
+    joined = marked.alias("__s").join(
+        target.alias("__t"), null_safe_cond("__s", "__t", keys), "full_outer"
+    )
+    # one SQL projection: built from Column objects it cost ~8 py4j
+    # calls a column on every merge
+    return joined.selectExpr(*[
+        f"IF(__s.{_SOURCE_MARK} IS NOT NULL, {side('__s', f)}, "
+        f"{side('__t', f)}) AS {_quoted(f.name)}"
+        for f in union
+    ])
 
 
-def match_keys(
-    target: DataFrame, key_df: DataFrame, keys: list[str], how: str
+def _quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def drop_matched(
+    target: DataFrame, key_df: DataFrame, keys: list[str]
 ) -> DataFrame:
-    """``target`` rows whose ``keys`` do (``how="left_semi"``) or do not
-    (``"left_anti"``) appear in ``key_df``, under null-safe equality.
-    NULL is a legitimate key value (dropDuplicates/latest_record_dedup
-    group NULL keys together, and changes_between classifies them with
-    eqNullSafe): a name-list join would never match a NULL key, so a
-    stale NULL-keyed target row would survive NEXT TO its upserted
-    source row, duplicating the key on every merge."""
-    cond = functools.reduce(
+    """``target`` rows whose ``keys`` do not appear in ``key_df``, under
+    null-safe equality (a left anti join)."""
+    cond = null_safe_cond("__t", "__k", keys)
+    return target.alias("__t").join(key_df.alias("__k"), cond, "left_anti")
+
+
+def null_safe_cond(left: str, right: str, keys: list[str]) -> Column:
+    """``left.k <=> right.k`` for every key, ANDed: the join condition
+    of every merge. NULL is a legitimate key value
+    (dropDuplicates/latest_record_dedup group NULL keys together, and
+    changes_between classifies them with eqNullSafe): a name-list join
+    would never match a NULL key, so a stale NULL-keyed target row would
+    survive NEXT TO its upserted source row, duplicating the key on
+    every merge."""
+    return functools.reduce(
         lambda a, b: a & b,
-        [F.col(f"__t.{k}").eqNullSafe(F.col(f"__k.{k}")) for k in keys],
+        [F.col(f"{left}.{k}").eqNullSafe(F.col(f"{right}.{k}")) for k in keys],
     )
-    return target.alias("__t").join(key_df.alias("__k"), cond, how)

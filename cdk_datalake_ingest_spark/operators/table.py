@@ -48,7 +48,8 @@ from pyspark.sql import functions as F
 
 from cdk_datalake_ingest_spark.operators.merge import (
     dedup_source,
-    match_keys,
+    drop_matched,
+    null_safe_cond,
     upsert_unique,
 )
 
@@ -133,6 +134,12 @@ class NoDataToMigrateException(Exception):
 
     def __str__(self) -> str:  # same message text as the reference
         return repr("no data detected to migrate")
+
+
+def _require_rows(df: DataFrame) -> None:
+    """NoDataToMigrateException when ``df`` is empty (one isEmpty job)."""
+    if df.isEmpty():
+        raise NoDataToMigrateException()
 
 
 class ManagedTable:
@@ -792,6 +799,16 @@ class ManagedTable:
         ``pby``) with its ``_schema.json`` sidecar, hard-link each
         ``carry`` (dir, path relative to the new snapshot) pair into it,
         then CAS-commit on ``base_version`` — or enlist in ``txn``."""
+        # a string partition value equal to the NULL sentinel lands in
+        # the NULL leaf anyway; written as NULL, one task holding both
+        # writes that leaf once instead of twice under one file name
+        sentinel = {
+            f.name: F.when(F.col(f.name) != self.HIVE_DEFAULT, F.col(f.name))
+            for f in df.schema
+            if f.name in pby and f.dataType.simpleString() == "string"
+        }
+        if sentinel:
+            df = df.withColumns(sentinel)
         version, data_dir = self._claim_snapshot(base_version)
         new_dir = self.path / data_dir
         w = df.write.mode("overwrite")
@@ -818,9 +835,17 @@ class ManagedTable:
         source_unique: bool = False,
         touched_partitions: list[tuple] | None = None,
         txn: "GroupTransaction | None" = None,
+        raise_if_empty: bool = False,
     ) -> None:
         """Delta-MERGE-equivalent upsert (S10/A6) with optional
         delete-window (A7).
+
+        ``raise_if_empty``: raise :class:`NoDataToMigrateException`,
+        before anything is written, when the source has no rows (the
+        reference's empty-drop check, aje-stage-dms-load.py:505-518).
+        The scoped merge reads that from its touched-partition collect;
+        the other paths (new table, Delta, the ``touched_partitions``
+        hint, the full rewrite) run one ``isEmpty`` job for it.
 
         ``txn``: enlist the merge's new snapshot in a
         :class:`GroupTransaction` instead of committing (see
@@ -852,9 +877,13 @@ class ManagedTable:
         itself."""
         src = source if source_unique else dedup_source(source, keys, order_by)
         if not self.exists:
+            if raise_if_empty:
+                _require_rows(src)
             self.write(src, op="merge", txn=txn)
             return
         if HAS_DELTA and DeltaTable.isDeltaTable(self.spark, str(self.path)):
+            if raise_if_empty:
+                _require_rows(src)
             dt = DeltaTable.forPath(self.spark, str(self.path))
             if delete_predicate is not None:
                 dt.delete(delete_predicate)
@@ -884,9 +913,11 @@ class ManagedTable:
             )
         if m.get("partition_by") and self._merge_partition_scoped(
             m, target, src, keys, touched_partitions, delete_predicate,
-            broadcast_source, txn,
+            broadcast_source, txn, raise_if_empty,
         ):
             return
+        if raise_if_empty:
+            _require_rows(src)
         merged = upsert_unique(
             target, src, keys, delete_predicate, broadcast_source
         )
@@ -913,6 +944,7 @@ class ManagedTable:
         delete_predicate: Column | None,
         broadcast_source: bool,
         txn: "GroupTransaction | None" = None,
+        raise_if_empty: bool = False,
     ) -> bool:
         """O(touched-partitions) merge for hive-partitioned tables —
         the versioned-parquet analogue of Delta's file-level MERGE
@@ -923,9 +955,11 @@ class ManagedTable:
         Touched = the source rows' partitions (or the declared
         ``touched_partitions``) ∪ partitions holding a MATCHED key (an
         updated row may move partitions, so its old partition must be
-        rewritten — found with a column-pruned semi-join scan of only
-        key+partition columns) ∪ partitions with delete_predicate hits,
-        all collected in one job by :meth:`_touched_partitions`. Only
+        rewritten) ∪ partitions with delete_predicate hits, all
+        collected in one job by :meth:`_touched_partitions`; the first
+        two come from one pass over the source
+        (:meth:`_source_partitions`), whose tag also tells an empty
+        source apart (``raise_if_empty``). Only
         touched partitions go through the merge dataflow and are
         rewritten; every other partition dir is HARD-LINKED from the
         previous snapshot into the new one, so time travel and
@@ -934,7 +968,11 @@ class ManagedTable:
 
         At 100 TB this converts the reference's riskiest scale surface
         (A6/A7: full-table rewrite per merge) into two pruned
-        column-scans plus a rewrite proportional to the delta. On an
+        column-scans plus a rewrite proportional to the delta. The
+        matched-key scan is a left join of the source with the target's
+        key and partition columns: the target side is broadcast while
+        it fits ``autoBroadcastJoinThreshold`` and shuffled once per
+        merge above it. On an
         object store the link step becomes manifest-level file
         references; the touched-partition computation is unchanged.
 
@@ -954,40 +992,27 @@ class ManagedTable:
             return False
         # a declared hint (validated pby ⊆ keys in merge_upsert) spares
         # the source plan its evaluation before the write
-        frames = []
+        tagged = None
         if touched_partitions is None:
-            frames.append(src.select(*pby))
+            tagged = self._source_partitions(src, target, keys, pby)
         elif any(len(t) != len(pby) for t in touched_partitions):
             raise ValueError(
                 f"touched_partitions tuples must match partition_by "
                 f"{pby} in width"
             )
-        if not set(pby) <= set(keys):
-            # partitions holding a matched key: an update may move a
-            # row's partition value, so the OLD copy's partition must
-            # be rewritten. Null-safe conditions: a NULL-keyed row
-            # whose update moves partitions would otherwise leave its
-            # old copy in a linked-forward (unrewritten) partition — a
-            # duplicate. SKIPPED when every partition column is itself
-            # a merge key: then a matched target row agrees with its
-            # source row on all of pby by definition (rows "can't move
-            # partitions"), so the matched partitions are already in
-            # src.select(pby) — and the skip removes the one O(target)
-            # column scan from the scoped path, making each merge
-            # O(touched partitions) outright. The streaming ingest
-            # sinks (batch-partitioned, batch-keyed) rely on this:
-            # their per-batch merge cost must not grow with the table.
-            frames.append(
-                match_keys(target, src.select(*keys), keys, "left_semi")
-                .select(*pby)
-            )
+        elif raise_if_empty:
+            _require_rows(src)
+        frames = []
         if delete_predicate is not None:
             frames.append(target.filter(delete_predicate).select(*pby))
-        touched = self._touched_partitions(
-            pby, touched_partitions or [], frames
+        found = self._touched_partitions(
+            pby, touched_partitions or [], frames, tagged
         )
-        if touched is None:
+        if found is None:
             return False
+        touched, has_source_rows = found
+        if raise_if_empty and tagged is not None and not has_source_rows:
+            raise NoDataToMigrateException()
         cond = self._partition_cond(pby, touched)
         if cond is None:  # empty source and no delete hits: no-op merge
             return True
@@ -1024,11 +1049,12 @@ class ManagedTable:
         if by_name is None:
             return False
         hit = F.coalesce(predicate, F.lit(False))
-        touched = self._touched_partitions(
+        found = self._touched_partitions(
             pby, [], [target.filter(hit).select(*pby)]
         )
-        if touched is None:
+        if found is None:
             return False
+        touched = found[0]
         cond = self._partition_cond(pby, touched)
         if cond is None:  # no rows match: delete is a no-op
             return True
@@ -1036,30 +1062,88 @@ class ManagedTable:
         self._write_scoped(m, pby, touched, kept, by_name, "delete")
         return True
 
+    #: boolean column of the :meth:`_source_partitions` rows: TRUE on a
+    #: source row's partition, FALSE on a matched target row's
+    _FROM_SOURCE = "__touched_src"
+
+    @classmethod
+    def _source_partitions(
+        cls, src: DataFrame, target: DataFrame, keys: list[str],
+        pby: list[str],
+    ) -> DataFrame:
+        """(pby..., _FROM_SOURCE) rows over ONE pass of ``src``: each
+        source row's partition, tagged TRUE, and the partition of each
+        target row matching a source key, tagged FALSE.
+
+        The matched partitions matter because an update may move a
+        row's partition value, so the OLD copy's partition must be
+        rewritten; they come from a left join of the source's
+        (keys, pby) with the target's on null-safe keys (a NULL-keyed
+        row whose update moves partitions would otherwise leave its old
+        copy in a linked-forward partition — a duplicate). SKIPPED when
+        every partition column is itself a merge key: a matched target
+        row then agrees with its source row on all of pby, so the
+        O(target) column scan drops out and each merge is O(touched
+        partitions) outright. The streaming ingest sinks
+        (batch-partitioned, batch-keyed) rely on this: their per-batch
+        merge cost must not grow with the table."""
+        if set(pby) <= set(keys):
+            return src.select(*pby, F.lit(True).alias(cls._FROM_SOURCE))
+        cols = list(dict.fromkeys([*keys, *pby]))
+        joined = src.select(*cols).alias("__s").join(
+            target.select(*cols, F.lit(True).alias("__m")).alias("__t"),
+            null_safe_cond("__s", "__t", keys),
+            "left",
+        )
+
+        def side(alias: str, from_source: bool) -> str:
+            fields = ", ".join(f"'{c}', {alias}.`{c}`" for c in pby)
+            return f"named_struct({fields}, '{cls._FROM_SOURCE}', {from_source})"
+
+        # one row per source row, one more per matched target row; one
+        # SQL projection, so the plan costs a single py4j call
+        return joined.selectExpr(
+            f"inline(array_compact(array({side('__s', True)}, "
+            f"IF(__t.__m IS NULL, NULL, {side('__t', False)}))))"
+        )
+
     def _touched_partitions(
-        self, pby: list[str], declared: list[tuple], frames: list[DataFrame]
-    ) -> list[tuple] | None:
+        self,
+        pby: list[str],
+        declared: list[tuple],
+        frames: list[DataFrame],
+        tagged: DataFrame | None = None,
+    ) -> tuple[list[tuple], bool] | None:
         """THE touched-partition rule of every scoped rewrite: the
-        ``declared`` tuples plus the distinct rows of the ``frames``
-        (each a ``select(*pby)``), collected in ONE capped job — none
-        when ``frames`` is empty. None means "full rewrite": over
-        MAX_SCOPED_PARTITIONS, or a NULL / hive-sentinel value among
-        them (a NULL lands in the sentinel leaf, and a string whose
-        GENUINE value is the sentinel text is indistinguishable from
-        one on disk: _canon_vals links both forward, which would
-        duplicate the rewritten rows)."""
+        ``declared`` tuples plus the distinct partitions of the
+        ``frames`` (each a ``select(*pby)``) and of ``tagged`` (a
+        :meth:`_source_partitions` frame), collected in ONE capped job —
+        none when there is no frame. Returns the touched tuples and
+        whether any ``tagged`` row came from the source. None means
+        "full rewrite": over MAX_SCOPED_PARTITIONS, or a NULL /
+        hive-sentinel value among them (a NULL lands in the sentinel
+        leaf, and a string whose GENUINE value is the sentinel text is
+        indistinguishable from one on disk: _canon_vals links both
+        forward, which would duplicate the rewritten rows)."""
         cap = self.MAX_SCOPED_PARTITIONS
+        tag = self._FROM_SOURCE
+        frames = [f.select(*pby, F.lit(False).alias(tag)) for f in frames]
+        if tagged is not None:
+            frames.append(tagged)
         rows = (
             functools.reduce(DataFrame.unionByName, frames)
-            .dropDuplicates(pby).limit(cap + 1).collect()
+            .groupBy(*pby).agg(F.max(tag).alias(tag))
+            .limit(cap + 1).collect()
             if frames else []
         )
-        touched = list(dict.fromkeys(map(tuple, [*declared, *rows])))
+        touched = list(dict.fromkeys(
+            map(tuple, [*declared, *(r[:len(pby)] for r in rows)])
+        ))
         if len(touched) > cap or any(
             v is None or v == self.HIVE_DEFAULT for t in touched for v in t
         ):
             return None
-        return touched
+        return touched, any(r[tag] for r in rows)
 
     def _scoped_types(
         self, pby: list[str], df: DataFrame
@@ -1122,15 +1206,18 @@ class ManagedTable:
     def _partition_cond(
         pby: list[str], touched: list[tuple]
     ) -> Column | None:
-        """OR-of-ANDs membership condition over partition columns —
-        partition-prunable by the parquet scan. None when empty."""
-        cond = None
-        for t in touched:
-            c = F.lit(True)
-            for col, v in zip(pby, t):
-                c = c & (F.col(col) == F.lit(v))
-            cond = c if cond is None else (cond | c)
-        return cond
+        """Membership of the partition columns in ``touched``: one
+        ``isin`` on a single column, one struct IN over several —
+        partition-prunable by the parquet scan either way, and one
+        expression however many partitions. None when empty."""
+        if not touched:
+            return None
+        if len(pby) == 1:
+            return F.col(pby[0]).isin([t[0] for t in touched])
+        return F.struct(*pby).isin([
+            F.struct(*[F.lit(v).alias(c) for c, v in zip(pby, t)])
+            for t in touched
+        ])
 
     def _write_scoped(
         self,
@@ -1277,7 +1364,7 @@ class ManagedTable:
         # null-safe, mirroring changes_between's eqNullSafe
         # classification: the stale preimage row of a NULL key must not
         # stay in the replica next to the applied postimage
-        kept = match_keys(target, touched, key_cols, "left_anti")
+        kept = drop_matched(target, touched, key_cols)
         # allowMissingColumns: a feed from a schema-evolved diff carries
         # v_to's new columns; pre-existing kept rows take NULLs — the
         # same null-compare semantics changes_between classified with

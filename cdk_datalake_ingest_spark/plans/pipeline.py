@@ -64,6 +64,14 @@ class StagePipeline:
         self.strict = strict
         self.max_write_attempts = max_write_attempts
         self.retry_sleep_base = retry_sleep_base
+        # compiled once per pipeline, not per drop: a column that fails
+        # to compile keeps its exception and is isolated on every drop
+        self._compiled: list[Column | Exception] = []
+        for spec in self.columns:
+            try:
+                self._compiled.append(self.compile_column(spec))
+            except Exception as e:  # noqa: BLE001 - isolation by design
+                self._compiled.append(e)
 
     # -- column sets driven by the is_* flags (SJ:390-404) -----------------
     @property
@@ -98,7 +106,9 @@ class StagePipeline:
         may REPLACE a same-named raw column, and later transformations
         may reference earlier stage outputs (the reference applies
         columns sequentially, SJ:418-424); Catalyst collapses the
-        projection chain, so only driver-side analysis repeats."""
+        projection chain, so only driver-side analysis repeats. The
+        columns were compiled once, in the constructor; a column whose
+        compile failed is recorded as failed on every call."""
         # ANSI guard BEFORE the isolation loop: on an ANSI-on session
         # the DSL's null-on-bad-cast contract is undefined (rows throw
         # instead of nulling) — refuse loudly rather than let per-column
@@ -107,21 +117,24 @@ class StagePipeline:
         failed: list[str] = []
         out = raw_df
         applied: list[ColumnSpec] = []
-        for spec in self.columns:
-            try:
-                expr = self.compile_column(spec)
-                candidate = out.withColumn(spec.column_name, expr)
-                # Force analysis now so a bad column fails here, not at
-                # the terminal action (the reference got this for free
-                # from its debugging .show() calls).
-                candidate.schema
-                out = candidate
-                applied.append(spec)
-            except Exception as e:  # noqa: BLE001 - isolation by design
-                failed.append(spec.column_name)
-                logger.warning(
-                    "column transform failed for %s: %s", spec.column_name, e
-                )
+        for spec, expr in zip(self.columns, self._compiled):
+            err = expr if isinstance(expr, Exception) else None
+            if err is None:
+                try:
+                    candidate = out.withColumn(spec.column_name, expr)
+                    # Force analysis now so a bad column fails here, not
+                    # at the terminal action (the reference got this for
+                    # free from its debugging .show() calls).
+                    candidate.schema
+                    out = candidate
+                    applied.append(spec)
+                    continue
+                except Exception as e:  # noqa: BLE001 - isolation by design
+                    err = e
+            failed.append(spec.column_name)
+            logger.warning(
+                "column transform failed for %s: %s", spec.column_name, err
+            )
         # W1 dedup: only when recency columns are declared (SJ:444-456).
         ids = [c.column_name for c in applied if c.is_id]
         dates = [c.column_name for c in applied if c.is_filter_date]
@@ -158,13 +171,11 @@ class StagePipeline:
 
         Returns the write mode used. Raises NoDataToMigrateException for
         an empty batch (without destroying existing data — see
-        ManagedTable docstring for the deliberate divergence)."""
+        ManagedTable docstring for the deliberate divergence). An
+        overwrite checks for rows first; a merge leaves the check to
+        ``merge_upsert(raise_if_empty=True)``, which folds it into its
+        touched-partition collect and still raises before writing."""
         table = ManagedTable(self.spark, stage_path)
-        is_empty = df.isEmpty()
-        if is_empty:
-            if not table.exists:
-                table.write(df, coalesce_single_file=True)
-            raise NoDataToMigrateException()
         mode = "overwrite"
         delete_pred = None
         if self.table.is_incremental and table.exists:
@@ -174,6 +185,10 @@ class StagePipeline:
                 cutoff = lookback_period_cutoff(self.table.delay_incremental_ini)
                 delete_pred = F.col("processperiod").cast("int") >= F.lit(cutoff)
                 mode = "delete+merge"
+        if mode == "overwrite" and df.isEmpty():
+            if not table.exists:
+                table.write(df, coalesce_single_file=True)
+            raise NoDataToMigrateException()
         ids, dates = self.id_columns, self.filter_date_columns
         deduped = bool(ids and dates) and set(ids + dates) <= set(df.columns)
         last_error: Exception | None = None
@@ -190,9 +205,12 @@ class StagePipeline:
                         order_by=self.filter_date_columns or None,
                         delete_predicate=delete_pred,
                         source_unique=deduped,
+                        raise_if_empty=True,
                     )
                 table.vacuum()
                 return mode
+            except NoDataToMigrateException:
+                raise
             except Exception as e:  # noqa: BLE001 - retried
                 last_error = e
                 if attempt < self.max_write_attempts:

@@ -813,3 +813,94 @@ def test_insert_only_merge_skips_the_target_join(spark, tmp_path, monkeypatch):
             keys=["k"],
             touched_partitions=[(2,)],
         )
+
+
+def _union_rule(target, source, keys, delete_predicate=None):
+    """The union form upsert_unique replaced, kept here as the oracle:
+    source ∪ (kept target ⟕anti source keys), null-safe."""
+    from cdk_datalake_ingest_spark.operators.merge import drop_matched
+
+    if delete_predicate is not None:
+        target = target.filter(~F.coalesce(delete_predicate, F.lit(False)))
+    survivors = drop_matched(target, source.select(*keys), keys)
+    return source.unionByName(survivors, allowMissingColumns=True)
+
+
+def test_upsert_unique_null_keys_and_delete_window(spark):
+    """The full-outer-join merge matches NULL keys null-safely (the
+    NULL-keyed target row is replaced, not kept next to its update),
+    drops delete-window rows (a NULL predicate keeps the row) unless a
+    source row brings the key back, and gives the union form's rows."""
+    from cdk_datalake_ingest_spark.operators.merge import upsert_unique
+
+    schema = "k1 long, k2 string, period int, v string"
+    target = spark.createDataFrame(
+        [
+            (1, "a", 202401, "t1"),
+            (None, "a", 202401, "t-null1"),
+            (2, None, 202402, "t-null2"),
+            (None, None, 202403, "t-nullboth"),
+            (3, "c", 202403, "t3-deleted"),
+            (4, "d", None, "t4-nullperiod"),
+            (5, "e", 202403, "t5-deleted-then-upserted"),
+        ],
+        schema,
+    )
+    source = spark.createDataFrame(
+        [
+            (None, "a", 202401, "s-null1"),
+            (None, None, 202401, "s-nullboth"),
+            (5, "e", 202401, "s5"),
+            (6, None, 202403, "s6"),
+        ],
+        schema,
+    )
+    keys = ["k1", "k2"]
+    delete = F.col("period") >= F.lit(202403)
+    got = upsert_unique(target, source, keys, delete_predicate=delete)
+    rows = sorted(map(tuple, got.collect()), key=repr)
+    assert rows == sorted(
+        [
+            (1, "a", 202401, "t1"),
+            (None, "a", 202401, "s-null1"),
+            (2, None, 202402, "t-null2"),
+            (None, None, 202401, "s-nullboth"),
+            (4, "d", None, "t4-nullperiod"),
+            (5, "e", 202401, "s5"),
+            (6, None, 202403, "s6"),
+        ],
+        key=repr,
+    )
+    assert rows == sorted(
+        map(tuple, _union_rule(target, source, keys, delete).collect()),
+        key=repr,
+    )
+
+
+def test_upsert_unique_schema_evolution_matches_union_by_name(spark):
+    """Schema evolution: the merged frame has exactly the column order
+    and types of source.unionByName(target, allowMissingColumns=True) —
+    widened where the sides differ (int vs bigint, decimal precision),
+    source-only and target-only columns NULL on the other side's rows —
+    and the same rows."""
+    from cdk_datalake_ingest_spark.operators.merge import upsert_unique
+
+    target = spark.createDataFrame(
+        [(1, 10, "old1", "x"), (2, 20, "old2", "y")],
+        "k int, n bigint, v string, legacy string",
+    ).withColumn("amount", F.lit("1.5").cast("decimal(10,1)"))
+    source = spark.createDataFrame(
+        [(2, "new2", 7, 3), (3, "new3", 8, 4)],
+        "k bigint, v string, n int, tier int",
+    ).withColumn("amount", F.lit("2.25").cast("decimal(12,2)"))
+    got = upsert_unique(target, source, ["k"])
+    union = _union_rule(target, source, ["k"])
+    assert got.dtypes == union.dtypes
+    assert [c for c, _ in got.dtypes] == ["k", "v", "n", "tier", "amount",
+                                          "legacy"]
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        map(tuple, union.collect()), key=repr
+    )
+    rows = {r.k: r for r in got.collect()}
+    assert rows[1].tier is None and rows[1].legacy == "x"
+    assert rows[2].v == "new2" and rows[2].legacy is None

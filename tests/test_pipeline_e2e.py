@@ -156,10 +156,10 @@ def test_transactional_delete_window(spark, tmp_path, monkeypatch):
 
 def test_stage_merge_dedups_the_source_once(spark, tmp_path, monkeypatch):
     """transform() already ran W1 on the merge keys, so the delete+merge
-    takes its output as key-unique: the DataFrame handed to the scoped
-    write holds one row_number Window per use of the source (the upsert
-    union and the anti-join keys), 2 in all — not a second dedup of
-    each copy on top of transform's (4)."""
+    takes its output as key-unique, and the full outer join of the
+    upsert reads it once: the DataFrame handed to the scoped write holds
+    one row_number Window — not one per branch of a union with an
+    anti-join (2), nor a second dedup of each copy on top (4)."""
     import dataclasses
     import re
 
@@ -199,7 +199,7 @@ def test_stage_merge_dedups_the_source_once(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(ManagedTable, "_write_scoped", spy)
     result = pipe.run(spark.createDataFrame(RAW_BATCH2), stage)
     assert getattr(result, "write_mode") == "delete+merge"
-    assert windows == [2]
+    assert windows == [1]
     rows = {r.id: r.processperiod for r in ManagedTable(spark, stage).read().collect()}
     assert rows == {2: 202608, 4: 202608}
 

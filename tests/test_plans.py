@@ -12,6 +12,8 @@ import contextlib
 import io
 import re
 
+import pytest
+
 from cdk_datalake_ingest_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
@@ -193,6 +195,54 @@ def test_scoped_merge_filter_is_partition_pruned(spark, tmp_path):
     assert m and "period" in m.group(1), plan
     dfil = re.search(r"DataFilters: \[([^\]]*)\]", plan)
     assert dfil is None or dfil.group(1).strip() == "", plan
+
+
+@pytest.mark.parametrize("n_touched", [2, 12])
+def test_partition_cond_forms_prune_like_or_of_ands(spark, tmp_path, n_touched):
+    """_partition_cond is one ``isin`` on a single partition column and
+    one struct IN over several (12 tuples also cross Spark's
+    inSetConversionThreshold of 10, where IN becomes InSet): both land
+    in the scan's PartitionFilters and select the same rows as the
+    OR-of-ANDs they replaced."""
+    import functools
+
+    from pyspark.sql import functions as F
+
+    from cdk_datalake_ingest_spark.operators.table import ManagedTable
+
+    t = ManagedTable(spark, tmp_path / "pc")
+    t.write(
+        spark.range(96).selectExpr(
+            "id AS k", "CAST(20240101 + id % 16 AS INT) AS period",
+            "CONCAT('r', id % 3) AS region", "'x' AS v",
+        ),
+        partition_by=["period", "region"],
+    )
+    _m, target = t._pinned_snapshot()
+    pairs = sorted({(20240101 + i % 16, f"r{i % 3}") for i in range(96)})
+    for pby, touched in (
+        (["period"], sorted({(p,) for p, _ in pairs})[:n_touched]),
+        (["period", "region"], pairs[::3][:n_touched]),
+    ):
+        cond = ManagedTable._partition_cond(pby, touched)
+        plan = target.filter(cond)._jdf.queryExecution().executedPlan().toString()
+        m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
+        assert m and all(c in m.group(1) for c in pby), plan
+        dfil = re.search(r"DataFilters: \[([^\]]*)\]", plan)
+        assert dfil is None or dfil.group(1).strip() == "", plan
+        or_of_ands = functools.reduce(
+            lambda a, b: a | b,
+            [
+                functools.reduce(
+                    lambda a, b: a & b,
+                    [F.col(c) == F.lit(v) for c, v in zip(pby, tup)],
+                )
+                for tup in touched
+            ],
+        )
+        got = sorted(r.k for r in target.filter(cond).collect())
+        assert got == sorted(r.k for r in target.filter(or_of_ands).collect())
+        assert len(got) == 96 // (16 if len(pby) == 1 else 48) * len(touched)
 
 
 def test_new_relational_queries_avoid_cartesians(spark):

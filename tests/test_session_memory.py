@@ -154,3 +154,19 @@ def test_near_dup_loop_truncates_plans_only_on_local_masters(master, local):
     assert S.is_local_master(master) is local
     spark = SimpleNamespace(sparkContext=SimpleNamespace(master=master))
     assert neardup._truncates_plans(spark) is local
+
+
+@pytest.mark.parametrize(
+    "master,local",
+    [("local[4]", True), ("local-cluster[2,1,1024]", False), ("spark://h:7077", False)],
+)
+def test_snapshot_leaves_are_listed_on_the_driver_only_on_local_masters(
+    master, local
+):
+    # a ManagedTable snapshot of up to MAX_SCOPED_PARTITIONS leaves is
+    # listed without a Spark job where the driver is the executor
+    from cdk_datalake_ingest_spark.operators.table import ManagedTable
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    conf = S.local_master_conf(master)
+    assert conf == ({key: str(ManagedTable.MAX_SCOPED_PARTITIONS)} if local else {})

@@ -12,7 +12,9 @@ Usage:
       ``OUT_DIR/<query>_<tag>.txt``, a plan round directory such as
       ``plans/r16``.  OUT_DIR is relative to the repo root unless
       absolute.  Eager gates still return a DataFrame; its plan is the
-      one written.
+      one written.  The plans are normalised (:func:`normalise`), so
+      two dumps of the same gate compare byte for byte even from one
+      process or from different processes.
 
 Both forms plan the sf0.001 fixtures in an 8-shuffle-partition session:
 the plan shape, not the sizes, is the point.
@@ -331,6 +333,45 @@ NOTES = {
     ),
 }
 
+#: per-process numbering in plan text: expression ids (``#1234``,
+#: ``#1234L``), exchange ``plan_id=`` numbers and RDD ids come from
+#: JVM-global counters, lambda variable names (``lambda x_23``) from
+#: PySpark's
+_COUNTERS = (
+    re.compile(r"#(\d+)"),
+    re.compile(r"plan_id=(\d+)"),
+    re.compile(r"RDD\[(\d+)\]"),
+    re.compile(r"lambda \w+?_(\d+)\b"),
+)
+#: random names: the ``tempfile.mkdtemp(prefix="cdk_...")`` suffix (8
+#: characters) of the gates' scratch dirs, and UUIDs
+_RANDOM = (
+    (re.compile(r"\b(cdk_[a-z_]*?)[a-z0-9_]{8}(?=[/\],\s]|$)", re.M),
+     r"\1XXXXXXXX"),
+    (re.compile(r"\b[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-"
+                r"[0-9a-f]{12}\b"), "UUID"),
+)
+
+
+def normalise(plan: str) -> str:
+    """``plan`` without what differs between two plannings of the same
+    query: each counter's numbers renumbered from 0 in order of first
+    appearance (so which attributes are the same one still shows), and
+    random temp-dir names and UUIDs replaced by placeholders."""
+    for pattern in _COUNTERS:
+        ids: dict[str, str] = {}
+
+        def renumber(m: re.Match) -> str:
+            new = ids.setdefault(m.group(1), str(len(ids)))
+            i, j = m.start(1) - m.start(), m.end(1) - m.start()
+            return m.group(0)[:i] + new + m.group(0)[j:]
+
+        plan = pattern.sub(renumber, plan)
+    for pattern, placeholder in _RANDOM:
+        plan = pattern.sub(placeholder, plan)
+    return plan
+
+
 def formatted_plan(spark, df) -> str:
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
@@ -386,7 +427,7 @@ def write_plan_files(spark, out_dir: Path, tag: str, names: list[str]) -> None:
     out_dir.mkdir(parents=True, exist_ok=True)
     for name in names or bench_queries():
         try:
-            plan = formatted_plan(spark, QUERIES[name](spark, SF))
+            plan = normalise(formatted_plan(spark, QUERIES[name](spark, SF)))
         except Exception as ex:  # pragma: no cover - diagnostic tool
             plan = f"ERROR: {ex}"
         (out_dir / f"{name}_{tag}.txt").write_text(plan + "\n")
