@@ -29,7 +29,7 @@ survive executor loss; the hook is the ``checkpoint`` callable arg.
 Convergence is detected exactly: a round that leaves the edge set
 unchanged (checked with a one-row aggregate of count + xor/sum of a
 64-bit edge hash — one cheap job, no exceptAll anti-join shuffle) is
-final. ``max_rounds`` bounds the loop defensively; hitting it raises
+final. ``MAX_ROUNDS`` bounds the loop defensively; hitting it raises
 rather than returning a half-merged clustering.
 """
 
@@ -39,6 +39,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["connected_components", "attach_components"]
+
+#: Canonical edge count up to which :func:`connected_components` labels
+#: on the driver (1M edge pairs ≈ tens of MB collected).
+DRIVER_THRESHOLD_EDGES = 1_000_000
+#: Star-contraction rounds before the distributed loop gives up; it
+#: needs O(log n), so hitting this means the loop is not converging.
+MAX_ROUNDS = 25
+#: Assignment rows up to which :func:`attach_components` broadcasts the
+#: assignment (~10M rows ≈ low-hundreds MB of long pairs, inside
+#: Spark's 8GB broadcast ceiling with headroom).
+BROADCAST_THRESHOLD_ROWS = 10_000_000
 
 
 def _canon(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -91,7 +102,7 @@ def _fingerprint(edges: DataFrame) -> tuple[int, int]:
     one tiny aggregate job used as the exact convergence test (edge
     sets here are canonical/distinct, so equal fingerprints on a
     shrinking-universe iteration mean equal sets for any practical
-    purpose; max_rounds still backstops the theoretical collision)."""
+    purpose; MAX_ROUNDS still backstops the theoretical collision)."""
     row = edges.agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.sum(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
@@ -144,9 +155,7 @@ def connected_components(
     edges: DataFrame,
     src_col: str,
     dst_col: str,
-    max_rounds: int = 25,
     checkpoint=None,
-    driver_threshold_edges: int = 1_000_000,
 ) -> DataFrame:
     """Return (node, component) for every node incident to an edge;
     ``component`` is the smallest node id in the node's connected
@@ -158,14 +167,14 @@ def connected_components(
 
     Adaptive execution, AQE-style: the canonical edge COUNT falls out
     of the convergence fingerprint for free, and when it is at most
-    ``driver_threshold_edges`` (bounded: 1M edge pairs ≈ tens of MB)
-    the component labels are computed by union-find on the driver in
-    one pass — a near-dup edge set is typically minuscule next to its
-    corpus, and 3-4 rounds of star-contraction (each two shuffles + a
-    checkpoint + a fingerprint job) is pure scheduling overhead at that
-    size. Above the threshold the distributed alternating-star loop
+    ``DRIVER_THRESHOLD_EDGES`` the component labels are computed by
+    union-find on the driver in one pass — a near-dup edge set is
+    typically minuscule next to its corpus, and 3-4 rounds of
+    star-contraction (each two shuffles + a checkpoint + a fingerprint
+    job) is pure scheduling overhead at that size. Above the threshold the distributed alternating-star loop
     runs unchanged — that is the 100 TB path. Both paths produce the
-    identical min-id labeling; tests force each explicitly.
+    identical min-id labeling; tests force each by patching the
+    constant.
 
     ``checkpoint``: optional DataFrame→DataFrame lineage-truncation
     hook; defaults to ``localCheckpoint(eager=True)`` (single-machine /
@@ -194,12 +203,12 @@ def connected_components(
     )
     e = ck(_canon(raw, "src", "dst"))
     fp = _fingerprint(e)
-    if fp[0] <= driver_threshold_edges:
+    if fp[0] <= DRIVER_THRESHOLD_EDGES:
         assign = _driver_union_find(e)
         return universe.join(assign, "node", "left").select(
             "node", F.coalesce("component", F.col("node")).alias("component")
         )
-    for _ in range(max_rounds):
+    for _ in range(MAX_ROUNDS):
         nxt = ck(_small_star(_large_star(e)))
         nfp = _fingerprint(nxt)
         e.unpersist()
@@ -209,7 +218,7 @@ def connected_components(
         fp = nfp
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds"
+            f"connected_components did not converge in {MAX_ROUNDS} rounds"
         )
     # Converged edge set is a star forest: every edge points child→root.
     roots = e.select(F.col("dst").alias("node")).distinct().withColumn(
@@ -229,7 +238,6 @@ def attach_components(
     assignment: DataFrame,
     id_col: str,
     component_col: str = "component",
-    broadcast_threshold_rows: int = 10_000_000,
 ) -> DataFrame:
     """Left-join the component assignment onto the entity table;
     entities with no near-dup edge become singleton clusters of
@@ -239,9 +247,8 @@ def attach_components(
     (near-dup fraction well under 100%) it is much smaller than the
     entity table and broadcasting avoids shuffling the corpus. But a
     high-duplication corpus can make the assignment itself huge, so the
-    broadcast is guarded: assignments above ``broadcast_threshold_rows``
-    (~10M rows ≈ low-hundreds MB of long pairs, inside Spark's 8GB
-    broadcast ceiling with headroom) fall back to a plain shuffle join.
+    broadcast is guarded: assignments above ``BROADCAST_THRESHOLD_ROWS``
+    fall back to a plain shuffle join.
 
     The assignment lineage (universe distinct + left join over the
     checkpointed edges) is materialized here with one localCheckpoint
@@ -254,7 +261,7 @@ def attach_components(
     a = assignment.withColumnRenamed("node", id_col).withColumnRenamed(
         "component", component_col
     ).localCheckpoint(eager=True)
-    if a.count() <= broadcast_threshold_rows:
+    if a.count() <= BROADCAST_THRESHOLD_ROWS:
         a = F.broadcast(a)
     return entities.join(a, id_col, "left").withColumn(
         component_col, F.coalesce(F.col(component_col), F.col(id_col))

@@ -486,24 +486,16 @@ def scrub_boilerplate(
     return _reassemble_from_tokens(base, covered, id_col)
 
 
-def _reassemble_without(
-    docs: DataFrame, covered: DataFrame, text_col: str, id_col: str
+def _reassemble_from_tokens(
+    base: DataFrame, covered: DataFrame, id_col: str
 ) -> DataFrame:
-    """Shared scrub tail: delete each document's covered token
+    """Shared scrub tail over a PRE-TOKENIZED ``(id_col, __toks)``
+    projection (r13: callers hold a shared token stage, so the
+    tokenize regex runs once): delete each document's covered token
     positions (``covered``: (id_col, __covered array<int>), 0-based)
     and reassemble — a native filter-by-position + array_join, no
     UDFs.  Documents with no flagged spans pass through unchanged
     (left join).  Output: (id_col, clean_text, n_removed_tokens)."""
-    base = docs.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
-    return _reassemble_from_tokens(base, covered, id_col)
-
-
-def _reassemble_from_tokens(
-    base: DataFrame, covered: DataFrame, id_col: str
-) -> DataFrame:
-    """:func:`_reassemble_without` over a PRE-TOKENIZED ``(id_col,
-    __toks)`` projection (r13) — the shape callers holding a shared
-    token stage use to avoid re-running the tokenize regex."""
     joined = base.join(covered, id_col, "left").withColumn(
         "__covered",
         F.coalesce(F.col("__covered"), F.array().cast("array<int>")),

@@ -15,10 +15,9 @@ with delta-spark installed ManagedTable uses real Delta MERGE instead.
 Scale notes: one full outer join on the (null-safe) merge keys reads
 the source once, as Delta's own MERGE rewrite does; the union-plus-
 anti-join form read it twice, once per branch. A full outer join cannot
-broadcast, so ``broadcast_source=True`` keeps that form
-(``source ∪ (target ⟕anti broadcast(source))``) for a small source over
-a target that should not be shuffled. The delete-window predicate
-prunes target partitions before the join when the table is
+broadcast either side, so both sides shuffle on the keys; ManagedTable
+bounds the target side to the touched partitions. The delete-window
+predicate prunes target partitions before the join when the table is
 partitioned on the window column.
 """
 
@@ -42,7 +41,6 @@ def merge_dataframes(
     keys: list[str],
     order_by: list[str] | None = None,
     delete_predicate: Column | None = None,
-    broadcast_source: bool = False,
 ) -> DataFrame:
     """Upsert ``source`` into ``target`` on ``keys``.
 
@@ -57,9 +55,7 @@ def merge_dataframes(
       mirroring delta.schema.autoMerge (aje-stage-dms-load.py:44).
     """
     source = dedup_source(source, keys, order_by)
-    return upsert_unique(
-        target, source, keys, delete_predicate, broadcast_source
-    )
+    return upsert_unique(target, source, keys, delete_predicate)
 
 
 def dedup_source(
@@ -76,7 +72,6 @@ def upsert_unique(
     source: DataFrame,
     keys: list[str],
     delete_predicate: Column | None = None,
-    broadcast_source: bool = False,
 ) -> DataFrame:
     """:func:`merge_dataframes` for a ``source`` that is already one row
     per key: nothing is added to dedup it.
@@ -91,19 +86,12 @@ def upsert_unique(
     columns first, then target-only ones, NULL where a side lacks the
     column, each cast to the union's widened type.
 
-    ``broadcast_source=True`` keeps the union form, ``source ∪ (target
-    ⟕anti broadcast(source keys))``, which reads the source twice but
-    streams the target past a broadcast instead of shuffling it: the
+    The join shuffles both sides on the keys, whatever their sizes: a
     full outer join cannot broadcast either side."""
     if delete_predicate is not None:
         target = target.filter(
             ~F.coalesce(delete_predicate, F.lit(False))
         )
-    if broadcast_source:
-        survivors = drop_matched(
-            target, F.broadcast(source).select(*keys), keys
-        )
-        return source.unionByName(survivors, allowMissingColumns=True)
     # analysis only (no job): the union fixes the result's column order
     # and widened types
     union = source.unionByName(target, allowMissingColumns=True).schema

@@ -831,14 +831,15 @@ class ManagedTable:
         keys: list[str],
         order_by: list[str] | None = None,
         delete_predicate: Column | None = None,
-        broadcast_source: bool = False,
         source_unique: bool = False,
         touched_partitions: list[tuple] | None = None,
         txn: "GroupTransaction | None" = None,
         raise_if_empty: bool = False,
     ) -> None:
         """Delta-MERGE-equivalent upsert (S10/A6) with optional
-        delete-window (A7).
+        delete-window (A7). Outside Delta, every path that reads the
+        target merges through :func:`upsert_unique`'s one full outer
+        join.
 
         ``raise_if_empty``: raise :class:`NoDataToMigrateException`,
         before anything is written, when the source has no rows (the
@@ -913,14 +914,12 @@ class ManagedTable:
             )
         if m.get("partition_by") and self._merge_partition_scoped(
             m, target, src, keys, touched_partitions, delete_predicate,
-            broadcast_source, txn, raise_if_empty,
+            txn, raise_if_empty,
         ):
             return
         if raise_if_empty:
             _require_rows(src)
-        merged = upsert_unique(
-            target, src, keys, delete_predicate, broadcast_source
-        )
+        merged = upsert_unique(target, src, keys, delete_predicate)
         self.write(
             merged,
             partition_by=m.get("partition_by") or None,
@@ -942,7 +941,6 @@ class ManagedTable:
         keys: list[str],
         touched_partitions: list[tuple] | None,
         delete_predicate: Column | None,
-        broadcast_source: bool,
         txn: "GroupTransaction | None" = None,
         raise_if_empty: bool = False,
     ) -> bool:
@@ -1031,8 +1029,7 @@ class ManagedTable:
             )
         }.isdisjoint(tuple(str(v) for v in t) for t in touched)
         merged = src if insert_only else upsert_unique(
-            target.filter(cond), src, keys, delete_predicate,
-            broadcast_source,
+            target.filter(cond), src, keys, delete_predicate
         )
         self._write_scoped(m, pby, touched, merged, by_name, "merge", txn)
         return True

@@ -86,10 +86,6 @@ class StagePipeline:
     def partition_columns(self) -> list[str]:
         return [c.column_name for c in self.columns if c.is_partition]
 
-    @property
-    def order_by_columns(self) -> list[str]:
-        return [c.column_name for c in self.columns if c.is_order_by]
-
     # -- transform ----------------------------------------------------------
     def compile_column(self, spec: ColumnSpec) -> Column:
         text = spec.transformation or spec.column_name

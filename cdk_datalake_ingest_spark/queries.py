@@ -763,10 +763,11 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL for it — pinning the reference's
     `spark.databricks.delta.schema.autoMerge.enabled=true` sink
     behavior (aje-stage-dms-load.py:44, merge at :492-495) in the
-    pure-DataFrame rewrite (operators/merge.py:57).
+    pure-DataFrame rewrite (operators/merge.py:upsert_unique).
 
     Scale note: schema evolution is metadata-only — the plan is the
-    same single key-shuffle merge; no rewrite of historical files.
+    same one full outer join on the keys as every merge; no rewrite of
+    historical files.
     """
     ev = _events(spark, sf_dir)
     cols = ["user_id", "event_type", "event_id", "ts_us", "value"]
@@ -779,7 +780,7 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "quality_tier",
         F.when(F.col("value") >= 50.0, F.lit("high")).otherwise(F.lit("low")),
     )
-    return upsert_unique(target, source, _EVENT_KEYS, broadcast_source=True)
+    return upsert_unique(target, source, _EVENT_KEYS)
 
 
 SCHEMA_EVOLUTION_SQL = f"""
@@ -1535,16 +1536,16 @@ def _sessionize_gate(
 
 def streaming_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DEFAULT sessionizer path (streaming/sessionize.py:
-    ``sessionize``, mode="auto") through the oracle gate: 30-min-gap
+    ``sessionize``) through the oracle gate: 30-min-gap
     sessionization over the staged micro-batch drop (see
     :func:`_sessionize_gate`).  The rollup payload is aggregate-shaped
-    (count + DECIMAL-exact value sum), so auto dispatches to the JVM
-    ``session_window`` aggregate — no Python state, whole-stage
-    codegen, ~30× smaller state store (SCALE.md's probe); this gate
-    therefore measures what a user gets by default.  The Python
-    ``applyInPandasWithState`` topology is the explicit
-    simulation/compat mode, gated separately with the SAME oracle
-    (:func:`streaming_sessionize_stateful_events`).
+    (count + DECIMAL-exact value sum) and ``emit_on_gap`` is off, so
+    ``sessionize`` dispatches to the JVM ``session_window`` aggregate —
+    no Python state, whole-stage codegen, ~30× smaller state store
+    (SCALE.md's probe); this gate therefore measures what a user gets
+    by default.  The Python ``applyInPandasWithState`` topology, which
+    ``sessionize`` takes for ``emit_on_gap=True``, is gated separately
+    with the SAME oracle (:func:`streaming_sessionize_stateful_events`).
 
     The gate compares ALL session columns including total_value: both
     paths sum value under the double→DECIMAL(18,6) cast the DuckDB
@@ -1563,29 +1564,30 @@ def streaming_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_sessionize_stateful_events(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The explicit simulation/compat mode (streaming/sessionize.py:
-    ``sessionize(mode="stateful")`` — the ``applyInPandasWithState``
-    operator with event-time timeouts) through the SAME staged
+    """The Python stateful operator (streaming/sessionize.py:
+    ``sessionize_stream``, which ``sessionize`` dispatches to for
+    ``emit_on_gap=True`` — the ``applyInPandasWithState`` operator with
+    event-time timeouts), called directly, through the SAME staged
     micro-batch gate and the SAME batch-session oracle shape as the
     default path, scoped to the ``user_id % 4 = 1`` cohort: the
     stateful operator's semantics (per-batch (ts, event_id) ordering,
     integer micro-unit accumulation, EventTimeTimeout close) are
     cohort-independent, so a quarter of the users pins them cross-
     engine at a quarter of the Arrow/Python cost — the full-corpus
-    run belongs to the default JVM path, not the compat mode.  The
+    run belongs to the default JVM path, not this one.  The
     state function processes each batch in (ts, event_id) order and
     accumulates value in exact integer micro-units (replicating the
     double→DECIMAL(18,6) cast both Spark's batch twin and the DuckDB
     oracle apply), so every column is arrival-order and batch-slicing
     independent."""
-    from cdk_datalake_ingest_spark.streaming.sessionize import sessionize
+    from cdk_datalake_ingest_spark.streaming.sessionize import (
+        sessionize_stream,
+    )
 
     return _sessionize_gate(
         spark,
         sf_dir,
-        lambda src: sessionize(
-            src, gap_minutes=30, ts_col="ts", mode="stateful"
-        ),
+        lambda src: sessionize_stream(src, gap_minutes=30, ts_col="ts"),
         "cdk_stream_sesspy_",
         filter_expr=F.col("user_id") % 4 == 1,
     )
@@ -3512,10 +3514,14 @@ def salesforce_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     whenMatchedUpdateAll/whenNotMatchedInsertAll) → the watermark
     advances START←prev END, END←max(modified_ts).
 
-    Scale notes: the incremental batch is small by construction (only
-    rows modified since the last pull) so it is broadcast into the
-    anti-join — the 100 TB stage table never shuffles; the watermark is
-    a single max() aggregation over the batch, not the table.
+    Scale notes: the MERGE is one full outer join on ``sf_id``, which
+    reads the incremental batch once and shuffles both sides, so the
+    full-load snapshot is shuffled once per merge (a full outer join
+    cannot broadcast either side); on a partitioned stage table,
+    ManagedTable.merge_upsert bounds that side to the touched
+    partitions.
+    The watermark is a single max() aggregation over the batch, not
+    the table.
     """
     _prep(spark)
     import datetime as _dt
@@ -3587,7 +3593,6 @@ def salesforce_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
         batch,
         keys=["sf_id"],
         order_by=["modified_ts", "sf_id"],
-        broadcast_source=True,
     )
     return merged.select(
         "sf_id",
@@ -7594,7 +7599,7 @@ ORACLES: dict[str, str] = {
     "vocab_top_tokens": VOCAB_SQL,
     "streaming_dedup_ingest": STREAMING_DEDUP_SQL,
     "streaming_sessionize_events": STREAMING_SESSIONIZE_SQL,
-    # the stateful compat mode answers the same batch-session oracle,
+    # the Python stateful operator answers the same batch-session oracle,
     # cohort-scoped (user_id % 4 = 1) — semantics are per-user
     "streaming_sessionize_stateful_events": STREAMING_SESSIONIZE_STATEFUL_SQL,
     "table_change_feed_events": TABLE_CHANGE_FEED_SQL,

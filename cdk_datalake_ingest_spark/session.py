@@ -83,7 +83,7 @@ _STATIC_KEYS = ("spark.sql.codegen.cache.maxEntries",)
 _RUNTIME_KEYS = tuple(k for k in ENGINE_CONF if k not in _STATIC_KEYS)
 
 
-def ensure_parallelism(df, min_partitions: int | None = None):
+def ensure_parallelism(df):
     """Round-robin repartition when the input has fewer partitions than
     the cluster has slots.
 
@@ -93,8 +93,7 @@ def ensure_parallelism(df, min_partitions: int | None = None):
     document sets do. The shuffle this adds is proportional to the
     (small) input, the win is full-width execution of everything
     downstream."""
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -56,10 +56,3 @@ def ts_us_expr(df: DataFrame, col: str = "ts") -> Column:
     if dict(df.dtypes)[col] == "bigint":
         return F.expr(f"{col} div 1000")
     return F.unix_micros(F.col(col).cast("timestamp"))
-
-
-def events_with_micros(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events with ``ts_us`` (bigint microseconds) — the deterministic
-    cross-engine representation."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.withColumn("ts_us", ts_us_expr(ev))

@@ -2,10 +2,10 @@
 
 Entry point is :func:`sessionize` — it encodes the crossover rule:
 aggregate-shaped payloads run on the JVM ``session_window`` aggregate
-(the default and the scale path), and only semantics an aggregate
-cannot express (``emit_on_gap``, per-element state) route to the
-Python ``applyInPandasWithState`` operator, which remains available
-explicitly as ``mode="stateful"`` (simulation / compat mode).
+(the default and the scale path), and only the semantics an aggregate
+cannot express (``emit_on_gap``) route to the Python
+``applyInPandasWithState`` operator, :func:`sessionize_stream`, which
+a caller needing per-element session state calls directly.
 
 The stateful operator is the arbitrary-state counterpart of
 ``operators/sessionize.py`` (which
@@ -89,7 +89,6 @@ def sessionize(
     tiebreak_col: str = "event_id",
     gap_minutes: int = 30,
     emit_on_gap: bool = False,
-    mode: str = "auto",
 ) -> DataFrame:
     """THE streaming sessionizer — the crossover rule, in code.
 
@@ -99,35 +98,17 @@ def sessionize(
     (no Arrow batch transfer, no Python state, whole-stage codegen;
     the round-6 probe measured the Python topology at ~30x the
     state-store bytes and a fraction of the rows/sec — SCALE.md's
-    stateful-sessionizer table records it).  So ``mode="auto"`` dispatches to
+    stateful-sessionizer table records it).  So it dispatches to
     :func:`sessionize_stream_native` UNLESS the caller asks for the
     one semantics an aggregate cannot express — ``emit_on_gap=True``,
     closing a session the moment a later event reveals the gap instead
     of when the watermark passes (``session_window`` only emits on
-    watermark close) — which routes to the Python stateful operator.
-
-    ``mode="stateful"`` forces the :func:`sessionize_stream`
-    micro-batch topology explicitly (simulation / compat mode — also
-    the template to extend for per-element session state or in-batch
-    event-order payloads); ``mode="native"`` forces the JVM aggregate
-    and raises if combined with ``emit_on_gap`` rather than silently
-    changing emission semantics.  Both paths are row-identical on
-    closed sessions (same oracle, same gate:
+    watermark close) — which routes to the Python stateful operator,
+    :func:`sessionize_stream`.  Both paths are row-identical on closed
+    sessions (same oracle, same gate:
     queries.py:streaming_sessionize_events /
     streaming_sessionize_stateful_events)."""
-    if mode not in ("auto", "native", "stateful"):
-        raise ValueError(
-            f"sessionize: mode must be auto|native|stateful, got {mode!r}"
-        )
-    if mode == "auto":
-        mode = "stateful" if emit_on_gap else "native"
-    if mode == "native":
-        if emit_on_gap:
-            raise ValueError(
-                "sessionize: emit_on_gap needs the stateful operator "
-                "(session_window emits only on watermark close) — use "
-                "mode='auto' or mode='stateful'"
-            )
+    if not emit_on_gap:
         return sessionize_stream_native(
             events,
             user_col=user_col,

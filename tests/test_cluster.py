@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from cdk_datalake_ingest_spark.operators import cluster
 from cdk_datalake_ingest_spark.operators.cluster import (
     attach_components,
     connected_components,
@@ -40,51 +41,53 @@ def _union_find(edges):
     return out
 
 
-def _check(spark, edges, **kw):
+def _check(spark, monkeypatch, edges):
     # both execution paths must agree with ground truth: the driver
     # union-find (huge threshold) and the distributed alternating-star
     # loop (threshold 0)
     df = spark.createDataFrame([Row(a=a, b=b) for a, b in edges])
     truth = _union_find(edges)
     for thr in (10**9, 0):
+        monkeypatch.setattr(cluster, "DRIVER_THRESHOLD_EDGES", thr)
         got = {
             r["node"]: r["component"]
-            for r in connected_components(
-                df, "a", "b", driver_threshold_edges=thr, **kw
-            ).collect()
+            for r in connected_components(df, "a", "b").collect()
         }
-        assert got == truth, f"driver_threshold_edges={thr}"
+        assert got == truth, f"DRIVER_THRESHOLD_EDGES={thr}"
 
 
-def test_two_components_and_isolated_merge(spark):
-    _check(spark, [(1, 2), (2, 3), (10, 11), (3, 1)])
+def test_two_components_and_isolated_merge(spark, monkeypatch):
+    _check(spark, monkeypatch, [(1, 2), (2, 3), (10, 11), (3, 1)])
 
 
-def test_long_chain_converges_in_log_rounds(spark):
+def test_long_chain_converges_in_log_rounds(spark, monkeypatch):
     # diameter 300: naive min-label propagation would need ~300 rounds;
     # alternating star must finish well inside 25.
     chain = [(i, i + 1) for i in range(300)]
-    _check(spark, chain, max_rounds=25)
+    monkeypatch.setattr(cluster, "MAX_ROUNDS", 25)
+    _check(spark, monkeypatch, chain)
 
 
-def test_duplicate_self_and_reversed_edges(spark):
-    _check(spark, [(2, 1), (1, 2), (3, 3), (2, 3), (3, 2), (7, 8)])
+def test_duplicate_self_and_reversed_edges(spark, monkeypatch):
+    _check(
+        spark, monkeypatch, [(2, 1), (1, 2), (3, 3), (2, 3), (3, 2), (7, 8)]
+    )
 
 
-def test_bridged_stars(spark):
+def test_bridged_stars(spark, monkeypatch):
     # two hubs bridged by one edge — exercises large-star fan-in
     edges = [(0, i) for i in range(1, 20)]
     edges += [(100, 100 + i) for i in range(1, 20)]
     edges += [(19, 119)]
-    _check(spark, edges)
+    _check(spark, monkeypatch, edges)
 
 
-def test_nonconvergence_raises(spark):
+def test_nonconvergence_raises(spark, monkeypatch):
     df = spark.createDataFrame([Row(a=i, b=i + 1) for i in range(50)])
+    monkeypatch.setattr(cluster, "MAX_ROUNDS", 1)
+    monkeypatch.setattr(cluster, "DRIVER_THRESHOLD_EDGES", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(
-            df, "a", "b", max_rounds=1, driver_threshold_edges=0
-        )
+        connected_components(df, "a", "b")
 
 
 def test_attach_components_defaults_singletons(spark):
@@ -96,7 +99,9 @@ def test_attach_components_defaults_singletons(spark):
     assert got == {0: 0, 1: 1, 2: 1, 3: 3, 4: 1, 5: 5}
 
 
-def test_attach_components_custom_column_and_broadcast_guard(spark):
+def test_attach_components_custom_column_and_broadcast_guard(
+    spark, monkeypatch
+):
     """The custom component_col rename must work (it used to reference
     a nonexistent column), and the guarded broadcast must produce the
     same rows whether the threshold forces the broadcast on (huge
@@ -106,10 +111,9 @@ def test_attach_components_custom_column_and_broadcast_guard(spark):
     assign = connected_components(edges, "a", "b")
     expect = {0: 0, 1: 1, 2: 1, 3: 3, 4: 1, 5: 5, 6: 6, 7: 6}
     for threshold in (0, 10**9):
+        monkeypatch.setattr(cluster, "BROADCAST_THRESHOLD_ROWS", threshold)
         out = attach_components(
-            entities, assign, "doc_id",
-            component_col="cluster_rep",
-            broadcast_threshold_rows=threshold,
+            entities, assign, "doc_id", component_col="cluster_rep"
         )
         got = {r["doc_id"]: r["cluster_rep"] for r in out.collect()}
         assert got == expect, f"threshold={threshold}"
@@ -121,7 +125,7 @@ def test_attach_components_custom_column_and_broadcast_guard(spark):
         assert hinted == (threshold > 0), f"threshold={threshold}"
 
 
-def test_connected_components_property_random_graphs(spark):
+def test_connected_components_property_random_graphs(spark, monkeypatch):
     """Property test: on random graphs, the star-contraction result
     must equal plain-Python union-find. Hypothesis drives the edge
     lists; examples are kept few because each one runs real Spark
@@ -141,12 +145,12 @@ def test_connected_components_property_random_graphs(spark):
     )
     @given(edges=edge_lists)
     def run(edges):
-        _check(spark, edges)
+        _check(spark, monkeypatch, edges)
 
     run()
 
 
-def test_edge_input_evaluated_exactly_once(spark):
+def test_edge_input_evaluated_exactly_once(spark, monkeypatch):
     """Guard for the one-materialization contract: the caller's edge
     relation — in production a banded LSH self-join over the whole
     corpus — must be computed EXACTLY once per clustering+attach, not
@@ -170,27 +174,25 @@ def test_edge_input_evaluated_exactly_once(spark):
         tagged = spark.createDataFrame(
             base.rdd.mapPartitions(tag), base.schema
         )
-        assign = connected_components(
-            tagged, "id_a", "id_b", driver_threshold_edges=thr
-        )
+        monkeypatch.setattr(cluster, "DRIVER_THRESHOLD_EDGES", thr)
+        assign = connected_components(tagged, "id_a", "id_b")
         attach_components(ents, assign, "doc_id").collect()
         assert acc.value == 4, (
             f"edge input evaluated {acc.value / 4:g}x, want exactly once "
-            f"(driver_threshold_edges={thr})"
+            f"(DRIVER_THRESHOLD_EDGES={thr})"
         )
 
 
-def test_all_self_loops_are_singletons_both_paths(spark):
+def test_all_self_loops_are_singletons_both_paths(spark, monkeypatch):
     """An edge set that is entirely self-loops canonicalizes to EMPTY —
     both the driver union-find (empty createDataFrame) and the
     distributed loop (zero-round convergence) must still return each
     node as its own singleton component."""
     df = spark.createDataFrame([Row(a=5, b=5), Row(a=9, b=9)])
     for thr in (10**9, 0):
+        monkeypatch.setattr(cluster, "DRIVER_THRESHOLD_EDGES", thr)
         got = {
             r["node"]: r["component"]
-            for r in connected_components(
-                df, "a", "b", driver_threshold_edges=thr
-            ).collect()
+            for r in connected_components(df, "a", "b").collect()
         }
         assert got == {5: 5, 9: 9}, f"threshold={thr}"

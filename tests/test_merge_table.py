@@ -269,7 +269,7 @@ def test_partition_scoped_merge_concurrent_writer_detected(spark, tmp_path):
         partition_by=["period"],
     )
     with pytest.raises(ConcurrentWriteError):
-        t._merge_partition_scoped(m, target, src, ["k"], None, None, False)
+        t._merge_partition_scoped(m, target, src, ["k"], None, None)
 
 
 def test_partition_scoped_merge_string_partitions_special_chars(spark, tmp_path):
@@ -904,3 +904,20 @@ def test_upsert_unique_schema_evolution_matches_union_by_name(spark):
     rows = {r.k: r for r in got.collect()}
     assert rows[1].tier is None and rows[1].legacy == "x"
     assert rows[2].v == "new2" and rows[2].legacy is None
+
+
+def test_merge_has_no_caller_set_dataflow(spark, tmp_path):
+    """One MERGE dataflow: neither the pure-DataFrame merge nor the
+    table merge takes a switch to the union + broadcast anti-join
+    form, and the table is left as it was."""
+    from cdk_datalake_ingest_spark.operators.merge import upsert_unique
+
+    target = spark.createDataFrame([Row(k=1, v="a")])
+    source = spark.createDataFrame([Row(k=1, v="b")])
+    with pytest.raises(TypeError, match="broadcast_source"):
+        upsert_unique(target, source, ["k"], broadcast_source=True)
+    t = ManagedTable(spark, tmp_path / "t")
+    t.write(target)
+    with pytest.raises(TypeError, match="broadcast_source"):
+        t.merge_upsert(source, keys=["k"], broadcast_source=True)
+    assert [tuple(r) for r in t.read().collect()] == [(1, "a")]

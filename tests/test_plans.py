@@ -76,13 +76,16 @@ def test_pii_scrub_is_shuffle_free_map_stage(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_salesforce_incremental_broadcasts_the_batch(spark):
-    """The incremental batch (small by construction) must broadcast
-    into the merge anti-join — the full stage table never shuffles
-    for the merge."""
-    plan = _plan(spark, "salesforce_incremental_upsert")
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
+def test_merge_gates_take_one_full_outer_join(spark):
+    """Every merge is upsert_unique's one full outer join on the keys:
+    the gates that used to ask for the union + broadcast anti-join
+    form plan the same join as every other merge, and none of them
+    falls back to a cartesian product."""
+    for q in ("salesforce_incremental_upsert", "schema_evolution_merge"):
+        plan = _plan(spark, q)
+        assert re.search(r"Join FullOuter", plan), q
+        assert "LeftAnti" not in plan, q
+        assert "CartesianProduct" not in plan, q
 
 
 def test_no_nested_loop_anywhere_in_headline_joins(spark):

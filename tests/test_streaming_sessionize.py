@@ -190,12 +190,11 @@ def test_native_session_window_twin_matches_python_stateful(
     assert by_user[2].total_value == 7.75
 
 
-def test_sessionize_dispatcher_crossover():
-    """The crossover rule lives in code: auto → JVM session_window for
+def test_sessionize_dispatcher_crossover(monkeypatch):
+    """The crossover rule lives in code: the JVM session_window for
     the aggregate-shaped payload; emit_on_gap (the one semantics an
-    aggregate cannot express) routes auto to the stateful operator;
-    native + emit_on_gap is a contradiction and raises instead of
-    silently changing emission semantics."""
+    aggregate cannot express) routes to the stateful operator.  The
+    path follows from emit_on_gap alone: no caller can force one."""
     import importlib
 
     import pytest
@@ -217,28 +216,18 @@ def test_sessionize_dispatcher_crossover():
         calls.append(("stateful", kw))
         return "stateful_df"
 
-    orig = mod.sessionize_stream_native, mod.sessionize_stream
-    mod.sessionize_stream_native, mod.sessionize_stream = (
-        fake_native,
-        fake_stateful,
+    monkeypatch.setattr(mod, "sessionize_stream_native", fake_native)
+    monkeypatch.setattr(mod, "sessionize_stream", fake_stateful)
+    assert mod.sessionize(None, gap_minutes=30) == "native_df"
+    assert (
+        mod.sessionize(None, gap_minutes=30, emit_on_gap=False)
+        == "native_df"
     )
-    try:
-        assert mod.sessionize(None, gap_minutes=30) == "native_df"
-        assert (
-            mod.sessionize(None, gap_minutes=30, emit_on_gap=True)
-            == "stateful_df"
-        )
-        assert (
-            mod.sessionize(None, gap_minutes=30, mode="stateful")
-            == "stateful_df"
-        )
-        assert mod.sessionize(None, gap_minutes=30, mode="native") == "native_df"
-        with pytest.raises(ValueError, match="emit_on_gap"):
-            mod.sessionize(
-                None, gap_minutes=30, mode="native", emit_on_gap=True
-            )
-        with pytest.raises(ValueError, match="mode"):
-            mod.sessionize(None, gap_minutes=30, mode="batch")
-    finally:
-        mod.sessionize_stream_native, mod.sessionize_stream = orig
-    assert [c[0] for c in calls] == ["native", "stateful", "stateful", "native"]
+    assert (
+        mod.sessionize(None, gap_minutes=30, emit_on_gap=True)
+        == "stateful_df"
+    )
+    for mode in ("stateful", "native", "auto"):
+        with pytest.raises(TypeError, match="mode"):
+            mod.sessionize(None, gap_minutes=30, mode=mode)
+    assert [c[0] for c in calls] == ["native", "native", "stateful"]
